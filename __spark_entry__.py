@@ -4790,8 +4790,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the hypertable gap-fill primitive
         # r13 rotation (VERDICT r12 next #3): label_propagation + gap_fill
         # + k_core (driver-proven green r10-r12; LPA and k-core share the
-        # driver-checked weighted_sssp's frontier/peel lifecycle —
-        # _frontier_rounds/_peel_to_fixpoint verbatim — and gap_fill's
+        # driver-checked weighted_sssp's round driver —
+        # operators/_rounds.iterate verbatim — and gap_fill's
         # LOCF/interp windows ride the extras-pinned seasonal_decompose
         # chain) and dup_spans (driver-proven r6-r12; its rolling-hash
         # anchors stay exercised by the extras-pinned doc_fingerprints +
@@ -4825,9 +4825,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_sssp": q_weighted_sssp,             # frontier Bellman-Ford
         # r12 rotation (VERDICT r11 next #5): bfs_distances + band_recall
         # (driver-proven green r9-r11; BFS's frontier lifecycle is now
-        # LITERALLY the same _frontier_rounds driver as the driver-checked
-        # weighted_sssp, and the banding S-curve gate's candidate chain
-        # rides the driver-checked minhash_jaccard_neardup +
+        # LITERALLY the same round driver (operators/_rounds.iterate) as
+        # the driver-checked weighted_sssp, and the banding S-curve gate's
+        # candidate chain rides the driver-checked minhash_jaccard_neardup +
         # dedup_clusters_chained) -> extras, freeing slots for the r11
         # second wave's two headline capabilities: the recall-1 exact
         # set-similarity join (dedup certification) and per-group exact
@@ -5003,7 +5003,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "temporal_split": q_temporal_split,           # purged walk-forward
         # r12 rotation out of the driver 50 (for set_sim_join /
         # ks_drift_grouped): both driver-proven green r9-r11; BFS now
-        # shares weighted_sssp's _frontier_rounds driver verbatim, and
+        # shares weighted_sssp's round driver verbatim, and
         # band_recall's banded chain rides two driver-checked dedup
         # entries — both stay oracle-pinned here every CI run
         "bfs_distances": q_bfs_distances,             # multi-source BFS

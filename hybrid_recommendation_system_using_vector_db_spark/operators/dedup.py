@@ -24,6 +24,7 @@ from ..functions.portable import fround
 from .. import ROUND_SCORE
 from ..functions import texttools as TT
 from ..functions.hashing import hex_nibble_value, minhash
+from ._rounds import iterate, no_rows
 from .similarity import _spread
 
 # session-scoped memo of set_similarity_join's token-count estimates,
@@ -428,63 +429,38 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
     Iterative DataFrame algorithm (the one class the oracle expresses as a
     recursive CTE): each round every node takes the min of its own label
     and its neighbors' labels; stop when a round changes nothing. Rounds =
-    graph diameter (near-dup graphs are shallow); each round is one
-    shuffle keyed by node. ``localCheckpoint`` cuts the growing lineage so
-    round N doesn't re-plan rounds 1..N-1.
+    graph diameter + 1 (near-dup graphs are shallow); each round is one
+    shuffle keyed by node, checkpointed and counted in one job by the
+    shared round driver (``operators._rounds.iterate``).
+
+    ``max_iter`` counts propagation rounds, the last of which must change
+    no label: a path of d edges needs ``max_iter >= d + 1``. A graph
+    still changing after ``max_iter`` rounds raises ``RuntimeError``
+    instead of returning wrong cluster ids (ADVICE r1).
     """
     und = (
         pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
         .unionByName(pairs.select(F.col("id2").alias("a"), F.col("id1").alias("b")))
     )
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    labels = labels.localCheckpoint(eager=True)
 
-    def _propagate(lab: DataFrame) -> DataFrame:
-        """One min-label hop. ``lab`` carries (id, label, changed);
-        the output's ``changed`` ORs the input's, so hops chain without
-        a flag-reconciling join."""
+    def propagate(labels: DataFrame, _, r: int) -> DataFrame:
         neighbor_min = (
-            und.join(lab.select(F.col("id").alias("a"), "label"), "a")
+            und.join(labels.select(F.col("id").alias("a"), "label"), "a")
             .groupBy(F.col("b").alias("id"))
             .agg(F.min("label").alias("nmin"))
         )
         return (
-            lab.join(neighbor_min, "id", "left")
+            labels.join(neighbor_min, "id", "left")
             .select("id",
                     F.least(F.col("label"),
                             F.coalesce("nmin", F.col("label"))).alias("label"),
-                    (F.col("changed")
-                     | (F.col("nmin") < F.col("label"))).alias("changed"))
+                    (F.col("nmin") < F.col("label")).alias("changed"))
         )
 
-    # TWO propagations per materialized round (r15, VERDICT r14 next #5):
-    # after round t every label is exactly min(id) over the t-hop
-    # neighborhood — a closed form independent of how hops are grouped
-    # into jobs — so batching two hops per checkpoint+count halves the
-    # per-round job floor (the sf0.1 cost is scheduler floor, not bytes;
-    # 9 -> 5 materialized rounds on the dedup chain) while the converged
-    # labels stay bit-identical (integer min has one fixpoint: min
-    # reachable id; an extra no-op propagation after convergence is the
-    # identity). The ORed `changed` flag keeps the stop test exact: the
-    # loop stops only when NEITHER hop moved a label.
-    labels = labels.withColumn("changed", F.lit(False))
-    for _ in range(max_iter):
-        new_labels = _propagate(_propagate(labels)) \
-            .localCheckpoint(eager=False)
-        # NON-eager checkpoint: this count is the materializing action, so
-        # each double-round is one job (compute both hops, checkpoint,
-        # count in a single pass)
-        n_changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.withColumn("changed", F.lit(False))
-        if n_changed == 0:
-            break
-    else:
-        # a silent early stop would return wrong cluster_ids for any chain
-        # deeper than max_iter — fail loudly instead (ADVICE r1)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({n_changed} labels still changing); raise max_iter or use a "
-            f"shallower candidate graph")
+    labels = iterate(
+        nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label")),
+        propagate, max_iter, count=lambda t: t.filter(F.col("changed")),
+        done=no_rows, op="connected_components")
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
 
 
@@ -538,56 +514,24 @@ def connected_components_star(pairs: DataFrame, nodes: DataFrame,
     chains over boilerplate-heavy corpora at 100 TB routinely exceed
     min-label propagation's practical round budget.
 
-    Each round = two grouped aggregations (two shuffles) + a distinct;
-    convergence check is exact but pays for exactness only when it might
-    matter: both edge sets are ``distinct()`` outputs, so set equality ⟺
-    equal counts AND empty symmetric difference. The per-round action is
-    a single ``count()`` (which also materializes the round's NON-eager
-    ``localCheckpoint`` — one pass computes, checkpoints, and counts);
-    the one-job sum-signed symmetric diff runs only on rounds where the
-    count is unchanged (typically just the final round). This halves the
-    per-round job count vs the former eager-checkpoint + ``exceptAll``
-    form — iterative rounds are pure scheduler floor on a cluster, so
-    fewer jobs per round is the lever (VERDICT r5 plan-audit class).
+    Each round = two grouped aggregations (two shuffles) + a distinct,
+    checkpointed and counted in one job by the shared round driver
+    (``operators._rounds.iterate``). The convergence check is exact but
+    pays for exactness only when it might matter: both edge sets are
+    ``distinct()`` outputs, so set equality ⟺ equal counts AND empty
+    symmetric difference, and the one-job sum-signed symmetric diff runs
+    only on rounds where the count is unchanged (typically just the
+    final round). ``max_iter`` counts star rounds, including the one that
+    confirms the fixpoint by reproducing the round before (so at least
+    two run); a graph still changing after ``max_iter`` rounds raises
+    ``RuntimeError``.
     """
     edges = (pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
              .filter(F.col("u") != F.col("v"))
-             .distinct()
-             .localCheckpoint(eager=True))
-    n_prev = edges.count()
-    # NOT double-stepped (r15, VERDICT r14 next #5 — measured rejection):
-    # batching two large/small-star alternations per materialized round
-    # is result-identical (the alternation's potential strictly
-    # decreases, Kiveris et al. SoCC'14, so a double step is fixed iff
-    # the single step is) and halves the count/probe actions (5 -> 3
-    # materialized rounds on the reciprocal-kNN graph), but measured
-    # WORSE back-to-back: AQE submits a job per shuffle stage, so jobs
-    # track TOTAL star steps, not materialized rounds (38 -> 45 jobs on
-    # dedup_clusters_star, 62 -> 64 on rnn_clusters) and the doubled
-    # form runs one wasted post-fixpoint alternation (+45% wall on
-    # rnn_clusters, +2.4 s on dedup_clusters_star). min-label CC keeps
-    # its two-hop batching (there the flag rides the same join, no extra
-    # shuffles) — see connected_components.
-    for _ in range(max_iter):
-        stepped = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        n_new = stepped.count()
-        converged = False
-        if n_new == n_prev:
-            # exact set-equality check in ONE job: both sides are sets, so
-            # any key whose signed multiplicity doesn't cancel is a change.
-            # isEmpty() short-circuits at the first surviving row.
-            converged = (
-                stepped.withColumn("_s", F.lit(1))
-                .unionByName(edges.withColumn("_s", F.lit(-1)))
-                .groupBy("u", "v").agg(F.sum("_s").alias("_d"))
-                .filter(F.col("_d") != 0)
-                .isEmpty())
-        edges, n_prev = stepped, n_new
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds")
+             .distinct())
+    edges = iterate(edges, lambda e, _, r: _small_star(_large_star(e)),
+                    max_iter, done=_same_edge_set,
+                    op="connected_components_star")
     # converged edge set is a star forest: every non-root points at its
     # component minimum; roots and isolated nodes label themselves
     roots = edges.groupBy("u").agg(F.min("v").alias("label"))
@@ -595,6 +539,21 @@ def connected_components_star(pairs: DataFrame, nodes: DataFrame,
             .join(roots.withColumnRenamed("u", "id"), "id", "left")
             .select(F.col("id").alias(id_col),
                     F.coalesce("label", F.col("id")).alias("cluster_id")))
+
+
+def _same_edge_set(n: int, n_prev: int, stepped: DataFrame,
+                   edges: DataFrame) -> bool:
+    """Star CC's stop test: ``stepped`` equals ``edges`` as a set. Both
+    are sets, so equal counts plus no key whose signed multiplicity
+    fails to cancel is equality, probed in ONE job (``isEmpty``
+    short-circuits at the first surviving row) and only when the counts
+    already match."""
+    return n == n_prev and (
+        stepped.withColumn("_s", F.lit(1))
+        .unionByName(edges.withColumn("_s", F.lit(-1)))
+        .groupBy("u", "v").agg(F.sum("_s").alias("_d"))
+        .filter(F.col("_d") != 0)
+        .isEmpty())
 
 
 def simhash_neardup_pairs(documents: DataFrame, max_hamming: int = 2,

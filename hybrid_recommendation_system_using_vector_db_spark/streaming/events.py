@@ -61,6 +61,18 @@ def _pin_stream_io(spark: SparkSession) -> None:
         pass  # pre-4.1 sessions: the conf (and the leak) do not exist
 
 
+def _start_fold(stream: DataFrame, fold, checkpoint_dir: str):
+    """Start ``fold(batch, epoch_id)`` as the ``foreachBatch`` sink of
+    ``stream`` with an ``availableNow`` trigger (drain what is there,
+    then stop) — the one start of every incremental fold below, so each
+    start pins the checkpoint IO conf exactly once."""
+    _pin_stream_io(stream.sparkSession)
+    return (stream.writeStream.foreachBatch(fold)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table, normalized to a session-tz
     TIMESTAMP ``ts``.
@@ -687,13 +699,7 @@ def incremental_copurchase(order_lines: DataFrame, state_path: str,
         merge_edge_batch(pairs, state_path, epoch_id,
                          run_id=checkpoint_query_id(checkpoint_dir))
 
-    _pin_stream_io(order_lines.sparkSession)
-    return (
-        order_lines.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(order_lines, process, checkpoint_dir)
 
 
 def merge_manifest_batch(batch_docs: DataFrame, state_path: str,
@@ -735,13 +741,7 @@ def incremental_manifest(docs: DataFrame, state_path: str,
                              run_id=checkpoint_query_id(checkpoint_dir),
                              n_shards=n_shards, seed=seed)
 
-    _pin_stream_io(docs.sparkSession)
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(docs, process, checkpoint_dir)
 
 
 def merge_hll_batch(batch: DataFrame, state_path: str,
@@ -776,14 +776,7 @@ def incremental_hll(rows: DataFrame, state_path: str, checkpoint_dir: str,
         merge_hll_batch(b, state_path, group_col, value_col, p, epoch_id,
                         run_id=checkpoint_query_id(checkpoint_dir))
 
-    _pin_stream_io(rows.sparkSession)
-    _pin_stream_io(rows.sparkSession)
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(rows, process, checkpoint_dir)
 
 
 def merge_cms_batch(batch: DataFrame, state_path: str, value_col: str,
@@ -823,12 +816,7 @@ def incremental_cms(rows: DataFrame, state_path: str, checkpoint_dir: str,
         merge_cms_batch(b, state_path, value_col, depth, width, epoch_id,
                         run_id=checkpoint_query_id(checkpoint_dir))
 
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(rows, process, checkpoint_dir)
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -930,13 +918,7 @@ def streaming_lm_maintenance(docs_stream: DataFrame, out_dir: str,
         pipeline.append_kn_lm(batch.sparkSession, batch, out_dir,
                               id_col=id_col, text_col=text_col)
 
-    _pin_stream_io(docs_stream.sparkSession)
-    return (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(docs_stream, fold, checkpoint_dir)
 
 
 def merge_cdc_batch(batch: DataFrame, state_path: str,
@@ -1033,11 +1015,7 @@ def incremental_cdc(changes: DataFrame, state_path: str,
                         op_col=op_col, ts_col=ts_col,
                         tiebreak_col=tiebreak_col)
 
-    _pin_stream_io(changes.sparkSession)
-    return (changes.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_fold(changes, process, checkpoint_dir)
 
 
 def load_cdc_snapshot(spark: SparkSession, state_path: str,

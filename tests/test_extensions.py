@@ -119,31 +119,30 @@ def test_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}
 
 
-def test_connected_components_two_hop_batching(spark):
-    """r15: min-label CC batches TWO propagation hops per materialized
-    round (job-floor halving). Pin the cases the batching could get
-    wrong: an ODD-diameter chain (convergence lands mid-round — the
-    ORed changed flag must still stop exactly at the fixpoint) and a
-    max_iter that is sufficient in double-hops but not in the old
-    single-hop accounting."""
+def test_connected_components_max_iter_counts_rounds(spark):
+    """Min-label CC propagates one hop per round, and ``max_iter`` counts
+    those rounds, including the one that confirms nothing changed. Pin an
+    ODD-diameter chain (an off-by-one in the stop test would show there)
+    at exactly its round budget, and the loud failure below it."""
     from hybrid_recommendation_system_using_vector_db_spark.operators.dedup import (
         connected_components)
 
-    # 8-node path: diameter 7 (odd) — labels must all collapse to 0
+    # 8-node path: diameter 7 (odd) — labels must all collapse to 0 after
+    # 7 changing rounds plus the round that changes nothing
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "id1 long, id2 long")
     nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     got = {r.doc_id: r.cluster_id
-           for r in connected_components(pairs, nodes, max_iter=6).collect()}
+           for r in connected_components(pairs, nodes, max_iter=8).collect()}
     assert got == {i: 0 for i in range(8)}
-    # depth beyond the double-hop budget still fails loudly
-    import pytest as _pytest
-
+    with pytest.raises(RuntimeError, match="did not converge in max_iter=7"):
+        connected_components(pairs, nodes, max_iter=7)
+    # a deep chain beyond the budget fails loudly
     deep = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id1 long, id2 long")
     deep_nodes = spark.createDataFrame(
         [(i,) for i in range(31)], "doc_id long")
-    with _pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(deep, deep_nodes, max_iter=3)
 
 
@@ -4328,32 +4327,81 @@ def test_weighted_median_negative_weight_fails_loudly(spark):
     assert [(r.grp, r.wmedian, r.total_w) for r in rows] == [("g", 1.0, 4)]
 
 
-def test_frontier_rounds_driver_lifecycle(spark):
-    """The shared _frontier_rounds driver (VERDICT r11 next #4): (a) an
-    empty improvement set short-circuits — step is never called again;
-    (b) disjoint=False replaces an existing key's row instead of
-    duplicating it; (c) the result equals the same relaxation written
-    longhand (pinned here once instead of three times in the callers)."""
-    from pyspark.sql import functions as F
-
+def test_round_driver_frontier_lifecycle(spark):
+    """The shared round driver on a frontier relaxation (VERDICT r11 next
+    #4): (a) an empty improvement set short-circuits — step is never
+    called again; (b) the frontier merge replaces an existing key's row
+    instead of duplicating it; (c) the result equals the same relaxation
+    written longhand (pinned here once instead of three times in the
+    callers)."""
+    from hybrid_recommendation_system_using_vector_db_spark.operators._rounds import (
+        iterate,
+        no_rows,
+    )
     from hybrid_recommendation_system_using_vector_db_spark.operators.graph import (
-        _frontier_rounds,
+        _keep_improved,
     )
 
     state0 = spark.createDataFrame([(1, 0)], "node long, dist long")
     calls = []
 
-    def step(frontier, state, r):
+    def step(state, frontier, r):
         calls.append(r)
         if r == 1:      # improve node 1 (replace) and add node 2
             return spark.createDataFrame([(1, -1), (2, 5)],
                                          "node long, dist long")
         return state.limit(0)   # round 2: no improvements → short-circuit
 
-    out = _frontier_rounds(state0, step, n_rounds=5)
+    out = iterate(state0, step, 5, done=no_rows, merge=_keep_improved)
     rows = {(r.node, r.dist) for r in out.collect()}
     assert rows == {(1, -1), (2, 5)}        # replaced, not duplicated
     assert calls == [1, 2]                  # rounds 3-5 never ran
+
+
+def test_iterative_operators_leave_no_cached_table(spark):
+    """No iterative operator leaves a cached table behind, on the error
+    path included: the persistent RDDs after each call are a subset of
+    those before it. Locally checkpointed RDDs are not counted — they
+    hold the blocks of the result the call returns."""
+    from hybrid_recommendation_system_using_vector_db_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+    from hybrid_recommendation_system_using_vector_db_spark.operators.graph import (
+        label_propagation,
+        pagerank,
+        personalized_pagerank,
+    )
+
+    jsc = spark.sparkContext._jsc
+
+    def cached():
+        return {int(k) for k, rdd in jsc.getPersistentRDDs().items()
+                if not rdd.rdd().isLocallyCheckpointed()}
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 2), (3, 1, 1), (3, 4, 1), (5, 6, 3)],
+        "src long, dst long, weight long")
+    seeds = spark.createDataFrame([(1,)], "node long")
+    pairs = edges.select(F.col("src").alias("id1"), F.col("dst").alias("id2"))
+    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
+    calls = [
+        ("pagerank", lambda: pagerank(edges, n_iters=4)),
+        ("personalized_pagerank",
+         lambda: personalized_pagerank(edges, seeds, n_iters=4)),
+        ("label_propagation", lambda: label_propagation(edges, n_rounds=4)),
+        ("connected_components", lambda: connected_components(pairs, nodes)),
+        ("connected_components_star",
+         lambda: connected_components_star(pairs, nodes)),
+    ]
+    for name, call in calls:
+        before = cached()
+        assert call().collect(), name
+        assert cached() - before == set(), name
+    before = cached()
+    with pytest.raises(ValueError, match="no seed"):
+        personalized_pagerank(edges, seeds.selectExpr("node + 100 AS node"))
+    assert cached() - before == set(), "personalized_pagerank (no seed)"
 
 
 def test_kendall_theil_sen_sampled_tier_bounds(spark):

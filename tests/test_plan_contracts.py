@@ -815,10 +815,20 @@ def test_tpch_q9_broadcasts_dims_and_single_fact_agg(spark, sf_dir):
 
 def test_label_propagation_rounds_use_aggregate_not_window(spark, sf_dir):
     """The LPA argmax must compile to partial-combining aggregates (a
-    struct max), never a per-round row_number window sort."""
-    import __spark_entry__ as m
+    struct min), never a per-round row_number window sort. The round
+    body is explained on its own (label_propagation returns a
+    checkpoint scan, whose plan shows no round at all), over the
+    checkpointed edge and label tables a round reads."""
+    from hybrid_recommendation_system_using_vector_db_spark.operators import graph
 
-    plan = formatted_plan(m.q_label_propagation(spark, sf_dir))
+    edges = copurchase.copurchase_edges(load_table(spark, sf_dir, "lineitem"))
+    und = (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"),
+                        F.col("weight").cast("long").alias("w"))
+           .localCheckpoint(eager=True))
+    labels = (und.select(F.col("a").alias("node")).distinct()
+              .withColumn("label", F.col("node")).localCheckpoint(eager=True))
+    plan = formatted_plan(graph._lpa_round(und, labels))
+    assert "HashAggregate" in plan, plan
     assert "Window" not in plan, plan
     assert "RunningWindowFunction" not in plan, plan
 

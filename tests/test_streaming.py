@@ -769,6 +769,35 @@ def test_incremental_hll_fold_matches_one_shot(spark, tmp_path):
     assert got == want
 
 
+def test_incremental_cms_start_pins_checkpoint_checksums_off(spark, tmp_path):
+    """Every incremental fold starts through one helper that disables
+    checkpoint-file checksums (their IO thread pools outlive the query):
+    a session that had them on has them off once incremental_cms has
+    started, and the fold still drains."""
+    from hybrid_recommendation_system_using_vector_db_spark.streaming.events import (
+        incremental_cms,
+        read_edge_state,
+    )
+
+    conf = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    in_dir = tmp_path / "rows_in"
+    in_dir.mkdir()
+    spark.createDataFrame([(i % 7,) for i in range(50)], "v long") \
+        .write.parquet(str(in_dir / "b1.parquet"))
+    stream = (spark.readStream.schema("v long")
+              .option("recursiveFileLookup", "true").parquet(str(in_dir)))
+    state = str(tmp_path / "cms_state")
+    spark.conf.set(conf, "true")
+    try:
+        q = incremental_cms(stream, state, str(tmp_path / "ckpt"), "v",
+                            depth=2, width=16)
+        assert spark.conf.get(conf) == "false"
+        q.awaitTermination(60)
+    finally:
+        spark.conf.set(conf, "false")
+    assert read_edge_state(spark, state).count() > 0
+
+
 def test_versioned_fold_crash_between_write_and_flip_preserves_live(
         spark, tmp_path, monkeypatch):
     """r13 review (What's wrong #1): on a cross-run epoch collision, run
