@@ -59,6 +59,7 @@ from hybrid_recommendation_system_using_vector_db_spark.operators import (
     textops,
 )
 from hybrid_recommendation_system_using_vector_db_spark.operators.textops import LANG_MARKERS
+from hybrid_recommendation_system_using_vector_db_spark.session import memo
 
 # The harness may launch the driver from any cwd; Python workers then cannot
 # import this package by name. Registering every package module for
@@ -108,9 +109,6 @@ def _universe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.join(part.select(F.col("p_partkey").alias("vec_id")), "vec_id", "left_semi")
 
 
-_UNIVERSE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _served_universe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once persisted universe for the serving/eval chains.
 
@@ -120,10 +118,8 @@ def _served_universe(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of the inputs → memoization cannot change results; the
     un-memoized `_universe` remains the build-phase form.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, "universe")
-    if key not in _UNIVERSE_CACHE:
-        _UNIVERSE_CACHE[key] = _universe(spark, sf_dir).persist()
-    return _UNIVERSE_CACHE[key]
+    return memo(spark, ("universe", sf_dir),
+                lambda: _universe(spark, sf_dir).persist())
 
 
 def _eval_queries(universe: DataFrame) -> DataFrame:
@@ -143,39 +139,6 @@ def _names(spark: SparkSession, sf_dir: str) -> DataFrame:
     return part.select(F.col("p_partkey").alias("item_id"), F.col("p_name").alias("name"))
 
 
-def _reset_serving_caches() -> None:
-    """Drop every session-memoized serving index (testing hook).
-
-    A shared session that ran ``spark.catalog.clearCache()`` (some plan
-    tests do) unpersists the memoized DataFrames while these dicts still
-    hold them — later "warm" calls then silently recompute the full
-    lineage per call. Clearing the memos forces a clean rebuild+persist.
-    Cached DataFrames are unpersisted first: dropping the only reference
-    while still registered in the CacheManager would orphan their storage
-    for the rest of the session (the shingle-leak class, VERDICT r2 #3).
-    """
-    for d in (_EDGE_INDEX, _CF_INDEX, _QMAT_CACHE, _ANN_INDEXES,
-              _UNIVERSE_CACHE, _IVF_CODEBOOKS, _SQ_PARAMS, _PQ_BOOKS,
-              _DEDUP_ARTIFACTS, _LID_PROFILES, _QCLF_WEIGHTS,
-              _UNIGRAM_PIECES, _EVAL_TABLES):
-        for v in d.values():
-            # memo values may be tuples/lists of DataFrames (bm25's
-            # (postings, docs, stats), als_fold_in's (items, edges)) —
-            # flatten so every persisted element is released, not just
-            # scalar-valued entries (ADVICE r7).
-            parts = v if isinstance(v, (tuple, list)) else (v,)
-            for p in parts:
-                if hasattr(p, "unpersist"):
-                    try:
-                        p.unpersist()
-                    except Exception:
-                        pass  # session already stopped — nothing to release
-        d.clear()
-
-
-_EDGE_INDEX: dict[tuple, DataFrame] = {}
-
-
 def _served_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once co-purchase edge index for the serving/eval paths.
 
@@ -183,20 +146,14 @@ def _served_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`Hybrid_Recom_vecdb.py:120-140`) and every timed query reads the
     in-memory dict; the Spark analogue is a persisted aggregate reused
     across queries (at 100 TB: the parquet edge table `pipeline.build_index`
-    writes). Keyed by applicationId so a fresh driver session never sees a
-    stale cached plan. Deterministic: the memo only skips recomputation of
-    an identical lineage, so query results cannot change.
-    ``q_copurchase_edges`` itself stays un-memoized — it IS the build phase
-    and is measured as such.
+    writes), held in the session memo registry. Deterministic: the memo
+    only skips recomputation of an identical lineage, so query results
+    cannot change. ``q_copurchase_edges`` itself stays un-memoized — it IS
+    the build phase and is measured as such.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_INDEX:
-        _EDGE_INDEX[key] = copurchase.copurchase_edges(
-            load_table(spark, sf_dir, "lineitem")).persist()
-    return _EDGE_INDEX[key]
-
-
-_CF_INDEX: dict[tuple, DataFrame] = {}
+    return memo(spark, ("edges", sf_dir),
+                lambda: copurchase.copurchase_edges(
+                    load_table(spark, sf_dir, "lineitem")).persist())
 
 
 def _served_cf(spark: SparkSession, sf_dir: str, max_n: int = CF_TOP_N) -> DataFrame:
@@ -210,16 +167,10 @@ def _served_cf(spark: SparkSession, sf_dir: str, max_n: int = CF_TOP_N) -> DataF
     by ``cf_rank`` at use — deterministic, so memoization cannot change
     results. At 100 TB this is a bucketed-by-src parquet table.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, max_n)
-    if key not in _CF_INDEX:
-        universe = _served_universe(spark, sf_dir)
-        edges = _served_edges(spark, sf_dir)
-        _CF_INDEX[key] = copurchase.cf_topn(
-            copurchase.restrict_to_universe(edges, universe), max_n).persist()
-    return _CF_INDEX[key]
-
-
-_DEDUP_ARTIFACTS: dict[tuple, tuple] = {}
+    return memo(spark, ("cf", sf_dir, max_n),
+                lambda: copurchase.cf_topn(copurchase.restrict_to_universe(
+                    _served_edges(spark, sf_dir),
+                    _served_universe(spark, sf_dir)), max_n).persist())
 
 
 def _served_dedup(spark: SparkSession, sf_dir: str) -> tuple:
@@ -233,14 +184,13 @@ def _served_dedup(spark: SparkSession, sf_dir: str) -> tuple:
     inline per call (VERDICT r6 What's-wrong #1: ~80% of
     ``dedup_keep_best``'s 5.56 s duplicated ``dedup_clusters_chained``).
     Now ``pipeline.write_dedup_clusters`` persists it ONCE per
-    (session, dataset) into a session temp dir and every consumer serves
-    from the LOADED parquet — the exact artifact lifecycle the ANN
+    (session, dataset) into a temp dir the memo registry removes on
+    release, and every consumer serves from the LOADED parquet — the exact artifact lifecycle the ANN
     indexes got in r6 (write/load/append; incremental maintenance pinned
     by ``test_dedup_cluster_incremental_append_equals_bulk``).
     Deterministic: the artifact holds the same chain output the inline
     rebuilds produced, so memoization cannot change results."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DEDUP_ARTIFACTS:
+    def build():
         import tempfile
 
         from hybrid_recommendation_system_using_vector_db_spark import pipeline as _P
@@ -249,15 +199,11 @@ def _served_dedup(spark: SparkSession, sf_dir: str) -> tuple:
         docs = load_table(spark, sf_dir, "documents")
         _P.write_dedup_clusters(spark, docs, out, n_hashes=8, n_bands=4,
                                 threshold=JACCARD_THRESHOLD)
-        _DEDUP_ARTIFACTS[key] = (
-            spark.read.parquet(f"{out}/dedup_pairs"),
-            _P.load_dedup_clusters(spark, out),
-            spark.read.parquet(f"{out}/dedup_bands"),
-        )
-    return _DEDUP_ARTIFACTS[key]
+        return (spark.read.parquet(f"{out}/dedup_pairs"),
+                _P.load_dedup_clusters(spark, out),
+                spark.read.parquet(f"{out}/dedup_bands"), out)
 
-
-_QMAT_CACHE: dict[tuple, tuple] = {}
+    return memo(spark, ("dedup", sf_dir), build)[:3]
 
 
 def _query_matrix(spark: SparkSession, sf_dir: str, tag: str,
@@ -268,16 +214,14 @@ def _query_matrix(spark: SparkSession, sf_dir: str, tag: str,
     are fixed per dataset, so serving chains collect them once per
     session (the reference holds its query set in process, ref `:384` —
     its timed loop never re-fetches vectors)."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _QMAT_CACHE:
+    def build():
         import numpy as np
 
         rows = queries.select("vec_id", "embedding").collect()
-        _QMAT_CACHE[key] = (
-            np.array([r[0] for r in rows], dtype=np.int64),
-            np.array([r[1] for r in rows], dtype=np.float64),
-        )
-    return _QMAT_CACHE[key]
+        return (np.array([r[0] for r in rows], dtype=np.int64),
+                np.array([r[1] for r in rows], dtype=np.float64))
+
+    return memo(spark, ("qmat", sf_dir, tag), build)
 
 
 def _hybrid_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K,
@@ -431,8 +375,7 @@ def q_index_lifecycle(spark, sf_dir):
     from hybrid_recommendation_system_using_vector_db_spark import pipeline
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "lsh_lifecycle")
-    if key not in _ANN_INDEXES:
+    def build():
         out = tempfile.mkdtemp(prefix="spark_graft_lsh_lifecycle_")
         try:
             pipeline.write_lsh_index(
@@ -440,17 +383,15 @@ def q_index_lifecycle(spark, sf_dir):
                 n_bits=5, n_tables=8)
             pipeline.append_lsh_index(
                 spark, emb.filter(F.col("vec_id") % 2 == 1), out)
-            _ANN_INDEXES[key] = pipeline.load_lsh_index(spark, out) \
+            return pipeline.load_lsh_index(spark, out) \
                 .localCheckpoint(eager=True)
         finally:
             shutil.rmtree(out, ignore_errors=True)
+
     return similarity.lsh_topk(
         emb.filter(F.col("vec_id") % QUERY_MOD == 0), emb, TOP_K,
-        n_bits=5, n_tables=8, dim=VEC_DIM, index=_ANN_INDEXES[key])
-
-
-_IVF_CODEBOOKS: dict[tuple, list] = {}
-_ANN_INDEXES: dict[tuple, DataFrame] = {}
+        n_bits=5, n_tables=8, dim=VEC_DIM,
+        index=memo(spark, ("lsh_lifecycle", sf_dir), build))
 
 
 def _ivf_codebook(spark, sf_dir, n_centroids=16, n_iters=2):
@@ -462,27 +403,22 @@ def _ivf_codebook(spark, sf_dir, n_centroids=16, n_iters=2):
     corpus reuse the trained codebook. Deterministic: same data + params
     → same centroids, so memoization cannot change results.
     """
-    key = (sf_dir, n_centroids, n_iters)
-    if key not in _IVF_CODEBOOKS:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _IVF_CODEBOOKS[key] = similarity.kmeans_centroids_local(
-            emb, n_centroids, n_iters)
-    return _IVF_CODEBOOKS[key]
+    return memo(spark, ("ivf_codebook", sf_dir, n_centroids, n_iters),
+                lambda: similarity.kmeans_centroids_local(
+                    load_table(spark, sf_dir, "embeddings"),
+                    n_centroids, n_iters))
 
 
 def _ivf_lists(spark, sf_dir):
     """Build-once persisted IVF inverted lists (the vector index proper).
 
-    Same ingest/serve split as ``_served_edges``; keyed by applicationId
-    so a fresh driver session rebuilds. Pure function of the corpus +
-    codebook → memoization cannot change results.
+    Same ingest/serve split as ``_served_edges``. Pure function of the
+    corpus + codebook → memoization cannot change results.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf")
-    if key not in _ANN_INDEXES:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _ANN_INDEXES[key] = similarity.ivf_build_lists(
-            emb, _ivf_codebook(spark, sf_dir)).persist()
-    return _ANN_INDEXES[key]
+    return memo(spark, ("ivf", sf_dir),
+                lambda: similarity.ivf_build_lists(
+                    load_table(spark, sf_dir, "embeddings"),
+                    _ivf_codebook(spark, sf_dir)).persist())
 
 
 def _lsh_index(spark, sf_dir, universe_only: bool = False):
@@ -492,13 +428,13 @@ def _lsh_index(spark, sf_dir, universe_only: bool = False):
     hybrid serving path searches, ref `Hybrid_Recom_vecdb.py:150-165`
     indexes only catalog items); otherwise the full embeddings table.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, "lsh", universe_only)
-    if key not in _ANN_INDEXES:
+    def build():
         corpus = _served_universe(spark, sf_dir) if universe_only \
             else load_table(spark, sf_dir, "embeddings")
-        _ANN_INDEXES[key] = similarity.lsh_build_index(
+        return similarity.lsh_build_index(
             corpus, n_bits=5, n_tables=8).persist()
-    return _ANN_INDEXES[key]
+
+    return memo(spark, ("lsh", sf_dir, universe_only), build)
 
 
 def q_ivf_topk(spark, sf_dir):
@@ -677,9 +613,6 @@ def q_hybrid_topk_ann(spark, sf_dir):
                                    cf_candidates=_served_cf(spark, sf_dir))
 
 
-_EVAL_TABLES: dict[tuple, tuple] = {}
-
-
 def _eval_rank_tables(spark, sf_dir):
     """Shared EP3 eval chain: (ranked model tables, ground truth,
     eligible query set) — consumed by both the Precision@K grid
@@ -695,58 +628,57 @@ def _eval_rank_tables(spark, sf_dir):
     deterministic (same data + params → same tables), so results
     cannot change. Pinned by the warm-call job/scan contract in
     tests/test_plan_contracts.py::test_eval_tables_build_once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _EVAL_TABLES:
-        return _EVAL_TABLES[key]
-    universe = _served_universe(spark, sf_dir)
-    edges_all = _served_edges(spark, sf_dir)
-    redges = copurchase.restrict_to_universe(edges_all, universe)
-    queries = _eval_queries(universe)
-    # eligible is the tiny eval-query table feeding FOUR consumers (the
-    # GEMM ranking, the hybrid chain, the ground-truth restriction, and
-    # the output query list) — materialize it once or every metric branch
-    # re-derives the sample+semi-join chain (the whole-surface scan sweep
-    # measured 164 parquet scans in ranking_eval's single plan)
-    eligible = (queries.join(redges.select(F.col("src").alias("vec_id")),
-                             "vec_id", "left_semi")
-                .localCheckpoint(eager=False))
-    max_k = 50
-    # reference-faithful pools (Hybrid_Recom_vecdb.py:254-256): the eval
-    # builds BOTH candidate pools with top_n = maxK, not the serving-path
-    # 60-pool — rank once to max_k and share it across both models.
-    # GEMM scorer ≡ cosine_topk is empirically pinned by
-    # content_topk_gemm's green oracle (pairwise vs left-fold summation
-    # differ pre-rounding), so the eval oracle is unchanged.
-    # localCheckpoint (NOT persist): `ranked` feeds both models, so it
-    # must materialize once — but a per-call persist() accumulates
-    # CacheManager entries across calls (the shingle-leak pattern,
-    # VERDICT r2 #3); checkpoint blocks are GC-owned. The eval rides the
-    # session-memoized query matrix and CF index, so its per-call work is
-    # one GEMM pass + the fusion/metric plan (VERDICT r2 next #3).
-    ranked = similarity.cosine_topk_gemm(
-        eligible, universe, max_k,
-        q_local=_query_matrix(spark, sf_dir, "eligible_qs", eligible),
-    ).localCheckpoint(eager=True)
-    content = ranked.select("qid", "cand", "rank")
-    # cf pool depth must cover cf_top_n=max_k: ask for max(CF_TOP_N, max_k)
-    # explicitly instead of relying on CF_TOP_N >= max_k (ADVICE r3 — a
-    # raised max_k would otherwise silently truncate the CF pool)
-    # hyb and gt are each |Q|·k / bounded-neighbor tables consumed by
-    # multiple metric-grid branches (hits + per-query grid per model, ×2
-    # metric families) — checkpoint both so the fusion chain and the
-    # edge restriction run once per eval call, not once per branch
-    hyb = hybrid.hybrid_recommend(eligible, universe, edges_all, None, k=max_k,
-                                  content_top_n=max_k, cf_top_n=max_k,
-                                  content_candidates=ranked,
-                                  cf_candidates=_served_cf(
-                                      spark, sf_dir, max(CF_TOP_N, max_k))) \
-        .select("qid", "cand", "rank").localCheckpoint(eager=False)
-    gt = (redges.join(eligible.select(F.col("vec_id").alias("src")),
-                      "src", "left_semi")
-          .localCheckpoint(eager=False))
-    _EVAL_TABLES[key] = ({"content": content, "hybrid": hyb}, gt,
-                         eligible.select(F.col("vec_id").alias("qid")))
-    return _EVAL_TABLES[key]
+    def build():
+        universe = _served_universe(spark, sf_dir)
+        edges_all = _served_edges(spark, sf_dir)
+        redges = copurchase.restrict_to_universe(edges_all, universe)
+        queries = _eval_queries(universe)
+        # eligible is the tiny eval-query table feeding FOUR consumers (the
+        # GEMM ranking, the hybrid chain, the ground-truth restriction, and
+        # the output query list) — materialize it once or every metric branch
+        # re-derives the sample+semi-join chain (the whole-surface scan sweep
+        # measured 164 parquet scans in ranking_eval's single plan)
+        eligible = (queries.join(redges.select(F.col("src").alias("vec_id")),
+                                 "vec_id", "left_semi")
+                    .localCheckpoint(eager=False))
+        max_k = 50
+        # reference-faithful pools (Hybrid_Recom_vecdb.py:254-256): the eval
+        # builds BOTH candidate pools with top_n = maxK, not the serving-path
+        # 60-pool — rank once to max_k and share it across both models.
+        # GEMM scorer ≡ cosine_topk is empirically pinned by
+        # content_topk_gemm's green oracle (pairwise vs left-fold summation
+        # differ pre-rounding), so the eval oracle is unchanged.
+        # localCheckpoint (NOT persist): `ranked` feeds both models, so it
+        # must materialize once — but a per-call persist() accumulates
+        # CacheManager entries across calls (the shingle-leak pattern,
+        # VERDICT r2 #3); checkpoint blocks are GC-owned. The eval rides the
+        # session-memoized query matrix and CF index, so its per-call work is
+        # one GEMM pass + the fusion/metric plan (VERDICT r2 next #3).
+        ranked = similarity.cosine_topk_gemm(
+            eligible, universe, max_k,
+            q_local=_query_matrix(spark, sf_dir, "eligible_qs", eligible),
+        ).localCheckpoint(eager=True)
+        content = ranked.select("qid", "cand", "rank")
+        # cf pool depth must cover cf_top_n=max_k: ask for max(CF_TOP_N, max_k)
+        # explicitly instead of relying on CF_TOP_N >= max_k (ADVICE r3 — a
+        # raised max_k would otherwise silently truncate the CF pool)
+        # hyb and gt are each |Q|·k / bounded-neighbor tables consumed by
+        # multiple metric-grid branches (hits + per-query grid per model, ×2
+        # metric families) — checkpoint both so the fusion chain and the
+        # edge restriction run once per eval call, not once per branch
+        hyb = hybrid.hybrid_recommend(eligible, universe, edges_all, None, k=max_k,
+                                      content_top_n=max_k, cf_top_n=max_k,
+                                      content_candidates=ranked,
+                                      cf_candidates=_served_cf(
+                                          spark, sf_dir, max(CF_TOP_N, max_k))) \
+            .select("qid", "cand", "rank").localCheckpoint(eager=False)
+        gt = (redges.join(eligible.select(F.col("vec_id").alias("src")),
+                          "src", "left_semi")
+              .localCheckpoint(eager=False))
+        return ({"content": content, "hybrid": hyb}, gt,
+                eligible.select(F.col("vec_id").alias("qid")))
+
+    return memo(spark, ("eval", sf_dir), build)
 
 
 def q_precision_eval(spark, sf_dir):
@@ -984,19 +916,15 @@ def q_dedup_clusters_chained(spark, sf_dir):
     return clusters
 
 
-_LID_PROFILES: dict[tuple, "DataFrame"] = {}
-
-
 def _lid_profiles(spark, sf_dir):
     """Memoized train-once LID profile table (pure function of the
     labeled corpus; ≤ langs × 8192 rows, checkpointed) — the IVF-codebook
     lifecycle, shared by lang_id_trained and lang_confusion so the
     training pass is paid once per session, not per call."""
-    key = (spark.sparkContext.applicationId, sf_dir, "lid")
-    if key not in _LID_PROFILES:
-        _LID_PROFILES[key] = textops.train_language_profiles(
-            load_table(spark, sf_dir, "documents")).localCheckpoint(eager=True)
-    return _LID_PROFILES[key]
+    return memo(spark, ("lid", sf_dir),
+                lambda: textops.train_language_profiles(
+                    load_table(spark, sf_dir, "documents"))
+                .localCheckpoint(eager=True))
 
 
 def _lid_guesses(spark, sf_dir):
@@ -1004,12 +932,10 @@ def _lid_guesses(spark, sf_dir):
     — a pure function of the corpus + memoized profiles, shared by the
     lang_id_trained entry and the confusion-matrix eval so the corpus
     scoring pass runs once per session, not once per consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir, "lid_guesses")
-    if key not in _LID_PROFILES:
-        docs = load_table(spark, sf_dir, "documents")
-        _LID_PROFILES[key] = textops.language_id_trained(
-            docs, _lid_profiles(spark, sf_dir)).persist()
-    return _LID_PROFILES[key]
+    return memo(spark, ("lid_guesses", sf_dir),
+                lambda: textops.language_id_trained(
+                    load_table(spark, sf_dir, "documents"),
+                    _lid_profiles(spark, sf_dir)).persist())
 
 
 def q_lang_id_trained(spark, sf_dir):
@@ -2069,11 +1995,10 @@ def q_band_recall(spark, sf_dir):
     pays the banding candidates + the metric grid, not the quadratic
     truth pass; results identical by construction."""
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, "band_truth_0.2")
-    if key not in _ANN_INDEXES:
-        _ANN_INDEXES[key] = dedup.band_recall_truth(docs, min_t=0.2)
+    truth = memo(spark, ("band_truth_0.2", sf_dir),
+                 lambda: dedup.band_recall_truth(docs, min_t=0.2))
     return dedup.band_recall_metrics(docs, thresholds=(0.2, 0.5, 0.8),
-                                     truth=_ANN_INDEXES[key])
+                                     truth=truth)
 
 
 def q_idf_jaccard_neardup(spark, sf_dir):
@@ -2862,8 +2787,7 @@ def q_streaming_psi_drift(spark, sf_dir):
     # pure function of the dataset — memoize the 20 bounded driver ints
     # per session instead of paying two corpus aggregations per call
     # (r14; the _lm_model/_lid_profiles train-once lifecycle)
-    key = (spark.sparkContext.applicationId, sf_dir, "psi_ref")
-    if key not in _ANN_INDEXES:
+    def build():
         ev = load_table(spark, sf_dir, "events")
         es = epoch_seconds(F.col("ts"))
         st = ev.agg(F.min(es).alias("lo"), F.max(es).alias("hi")).collect()[0]
@@ -2875,8 +2799,9 @@ def q_streaming_psi_drift(spark, sf_dir):
                 (ev.filter(es < mid).filter(F.col("value").isNotNull())
                  .select(b.alias("bin"))
                  .groupBy("bin").agg(F.count(F.lit(1)).alias("n")).collect())}
-        _ANN_INDEXES[key] = [int(refc.get(i, 0)) for i in range(20)]
-    ref_counts = _ANN_INDEXES[key]
+        return [int(refc.get(i, 0)) for i in range(20)]
+
+    ref_counts = memo(spark, ("psi_ref", sf_dir), build)
     out = streaming_psi_drift(read_events_stream(spark, sf_dir), ref_counts,
                               lo=0.0, hi=100.0, window="6 hours",
                               watermark="2 hours")
@@ -2945,11 +2870,9 @@ def _doc_embeddings(spark, sf_dir):
     cannot change results. The un-memoized build cost is measured by the
     ``hash_embeddings`` driver entry.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, "doc_emb")
-    if key not in _ANN_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        _ANN_INDEXES[key] = hashing_embedder(docs).persist()
-    return _ANN_INDEXES[key]
+    return memo(spark, ("doc_emb", sf_dir),
+                lambda: hashing_embedder(
+                    load_table(spark, sf_dir, "documents")).persist())
 
 
 def _chunk_index(spark, sf_dir):
@@ -2960,14 +2883,13 @@ def _chunk_index(spark, sf_dir):
     the corpus (same argument as ``_doc_embeddings``); the un-memoized
     build cost is measured by ``chunk_pooled_embeddings``, which runs the
     identical chunk→embed chain inline."""
-    key = (spark.sparkContext.applicationId, sf_dir, "chunk_idx")
-    if key not in _ANN_INDEXES:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         chunks = textops.chunk_documents(docs, chunk_tokens=64, overlap=16)
-        _ANN_INDEXES[key] = hashing_embedder(
-            chunks, id_col=["doc_id", "chunk_id"],
-            text_col="chunk_text").persist()
-    return _ANN_INDEXES[key]
+        return hashing_embedder(chunks, id_col=["doc_id", "chunk_id"],
+                                text_col="chunk_text").persist()
+
+    return memo(spark, ("chunk_idx", sf_dir), build)
 
 
 def _maxsim_components(spark, sf_dir):
@@ -2979,11 +2901,9 @@ def _maxsim_components(spark, sf_dir):
     ``pos`` so the bucket probe prunes partitions."""
     from hybrid_recommendation_system_using_vector_db_spark.operators import retrieval
 
-    key = (spark.sparkContext.applicationId, sf_dir, "maxsim_comp")
-    if key not in _ANN_INDEXES:
-        _ANN_INDEXES[key] = retrieval.maxsim_component_index(
-            _chunk_index(spark, sf_dir)).persist()
-    return _ANN_INDEXES[key]
+    return memo(spark, ("maxsim_comp", sf_dir),
+                lambda: retrieval.maxsim_component_index(
+                    _chunk_index(spark, sf_dir)).persist())
 
 
 def _bm25_index(spark, sf_dir):
@@ -2993,19 +2913,18 @@ def _bm25_index(spark, sf_dir):
     build is the index-construction phase every lexical engine separates
     from query time, so repeated serve calls reuse it (same ingest/serve
     split; pure function of the corpus → memoization cannot change
-    results; keyed by applicationId so a fresh driver session rebuilds).
+    results).
     The durable form of the same artifact is ``pipeline.write_bm25_index``
     (round-trip pinned hash-identical by ``test_bm25_index_roundtrip``).
     """
     from hybrid_recommendation_system_using_vector_db_spark.operators import retrieval
 
-    key = (spark.sparkContext.applicationId, sf_dir, "bm25")
-    if key not in _ANN_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        postings, df_, stats = retrieval.bm25_build_index(docs)
-        _ANN_INDEXES[key] = (postings.persist(), df_.persist(),
-                             stats.persist())
-    return _ANN_INDEXES[key]
+    def build():
+        postings, df_, stats = retrieval.bm25_build_index(
+            load_table(spark, sf_dir, "documents"))
+        return postings.persist(), df_.persist(), stats.persist()
+
+    return memo(spark, ("bm25", sf_dir), build)
 
 
 def q_bm25_topk(spark, sf_dir):
@@ -3069,22 +2988,18 @@ def _lm_model(spark, sf_dir):
     trains its filter LM once on trusted text and scores every shard
     with it; the train/score split is the whole point of the recipe, so
     the serve entry memoizes the trained table like every other index
-    artifact (pure function of the corpus; keyed by applicationId)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "char_lm")
-    if key not in _ANN_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        _ANN_INDEXES[key] = textops.char_bigram_lm(docs).persist()
-    return _ANN_INDEXES[key]
+    artifact (pure function of the corpus)."""
+    return memo(spark, ("char_lm", sf_dir),
+                lambda: textops.char_bigram_lm(
+                    load_table(spark, sf_dir, "documents")).persist())
 
 
 def _kn_lm(spark, sf_dir):
     """Build-once persisted KN word-bigram LM (vocab²-bounded; same
     train-once-score-everything lifecycle as ``_lm_model``)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "kn_lm")
-    if key not in _ANN_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        _ANN_INDEXES[key] = textops.kn_word_lm(docs).persist()
-    return _ANN_INDEXES[key]
+    return memo(spark, ("kn_lm", sf_dir),
+                lambda: textops.kn_word_lm(
+                    load_table(spark, sf_dir, "documents")).persist())
 
 
 def q_kn_perplexity(spark, sf_dir):
@@ -3190,15 +3105,10 @@ def q_pack_sequences(spark, sf_dir):
     return textops.pack_sequences(load_table(spark, sf_dir, "documents"), 2048)
 
 
-_SQ_PARAMS: dict[tuple, list] = {}
-
-
 def _sq_params(spark, sf_dir, emb):
     """Memoized train-once SQ codebook (bounded dim-row collect)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "sq")
-    if key not in _SQ_PARAMS:
-        _SQ_PARAMS[key] = similarity.quantization_params(emb, dim=VEC_DIM)
-    return _SQ_PARAMS[key]
+    return memo(spark, ("sq", sf_dir),
+                lambda: similarity.quantization_params(emb, dim=VEC_DIM))
 
 
 def q_quantized_topk(spark, sf_dir):
@@ -3207,8 +3117,7 @@ def q_quantized_topk(spark, sf_dir):
     serve-tier index. Codebook (per-dim min/max) trained once per dataset
     (bounded dim-row collect, memoized like the IVF codebook)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "sq_recon")
-    if key not in _ANN_INDEXES:
+    def build():
         # build-phase artifact like the PQ recon memo: quantize+dequantize
         # once (at 100 TB this is the persisted int8 code table's decoded
         # view); per-query cost is the scoring pass only
@@ -3219,11 +3128,12 @@ def q_quantized_topk(spark, sf_dir):
         # scoring pass (the old per-call _spread repartition hid this by
         # paying a shuffle on every serve call; stored-layout widening
         # pays it once at build — r9)
-        _ANN_INDEXES[key] = similarity._spread(similarity.dequantize(
+        return similarity._spread(similarity.dequantize(
             codes, params)).localCheckpoint(eager=True)
+
     return similarity.cosine_topk(
         emb.filter(F.col("vec_id") % QUERY_MOD == 0),
-        _ANN_INDEXES[key], TOP_K, dim=VEC_DIM)
+        memo(spark, ("sq_recon", sf_dir), build), TOP_K, dim=VEC_DIM)
 
 
 def q_paragraph_dedup(spark, sf_dir):
@@ -3301,12 +3211,10 @@ def q_bpe_encode(spark, sf_dir):
     from hybrid_recommendation_system_using_vector_db_spark.operators import bpe
 
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, "bpe_merges")
-    if key not in _ANN_INDEXES:
-        _ANN_INDEXES[key] = [
-            (r["left"], r["right"])
-            for r in bpe.bpe_train(docs, n_merges=8).orderBy("merge_rank").collect()]
-    return (bpe.bpe_encode(docs, _ANN_INDEXES[key])
+    merges = memo(spark, ("bpe_merges", sf_dir), lambda: [
+        (r["left"], r["right"])
+        for r in bpe.bpe_train(docs, n_merges=8).orderBy("merge_rank").collect()])
+    return (bpe.bpe_encode(docs, merges)
             .select("doc_id", "n_words", "n_tokens"))
 
 
@@ -3455,12 +3363,12 @@ def _knn_rank10(spark, sf_dir):
     """Build-once persisted all-corpus exact top-10 rank table (GEMM
     scorer) — shared by the mutual-kNN pair entry (k=10) and the RNN
     clustering entry (k=2 = a rank ≤ 2 filter of the same table)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "knn10")
-    if key not in _ANN_INDEXES:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        _ANN_INDEXES[key] = similarity.cosine_topk_gemm(emb, emb, 10)\
+        return similarity.cosine_topk_gemm(emb, emb, 10) \
             .select("qid", "cand", "score", "rank").persist()
-    return _ANN_INDEXES[key]
+
+    return memo(spark, ("knn10", sf_dir), build)
 
 
 def q_rnn_clusters(spark, sf_dir):
@@ -3497,22 +3405,13 @@ def q_rp_topk(spark, sf_dir):
     return similarity.cosine_topk(q, proj, TOP_K, vec_col="rp", dim=16)
 
 
-_PCA_COMPS: dict = {}
-
-
-_UNIGRAM_PIECES: dict[tuple, list] = {}
-
-
 def _unigram_pieces(spark, sf_dir):
     """Memoized train-once unigram-LM inventory (EM over the vocab table;
     bounded driver state — the BPE-merge-table lifecycle)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "unigram")
-    if key not in _UNIGRAM_PIECES:
-        docs = load_table(spark, sf_dir, "documents")
-        _UNIGRAM_PIECES[key] = [
-            (r["piece"], r["logp"], r["n_used"])
-            for r in unigram_lm.unigram_lm_train(docs).collect()]
-    return _UNIGRAM_PIECES[key]
+    return memo(spark, ("unigram", sf_dir), lambda: [
+        (r["piece"], r["logp"], r["n_used"])
+        for r in unigram_lm.unigram_lm_train(
+            load_table(spark, sf_dir, "documents")).collect()])
 
 
 def q_unigram_pieces(spark, sf_dir):
@@ -3533,23 +3432,17 @@ def q_unigram_encode(spark, sf_dir):
     return unigram_lm.unigram_lm_encode(docs, pieces)
 
 
-_QCLF_WEIGHTS: dict[tuple, tuple] = {}
-
-
 def _qclf_weights(spark, sf_dir):
     """Memoized train-once quality-classifier coefficients (the
     dim-sized serving artifact — IVF-codebook lifecycle). Weak label on
     the driver corpus: lang == 'en' (the only supervision the synthetic
     tables carry); a production pipeline trains the same shape on
     "sampled-from-trusted-corpus" labels."""
-    key = (spark.sparkContext.applicationId, sf_dir, "qclf")
-    if key not in _QCLF_WEIGHTS:
-        docs = load_table(spark, sf_dir, "documents")
-        labeled = docs.select(
-            "doc_id", "text",
-            (F.col("lang") == "en").cast("double").alias("label"))
-        _QCLF_WEIGHTS[key] = classifier.train_quality_classifier(labeled)
-    return _QCLF_WEIGHTS[key]
+    return memo(spark, ("qclf", sf_dir),
+                lambda: classifier.train_quality_classifier(
+                    load_table(spark, sf_dir, "documents").select(
+                        "doc_id", "text",
+                        (F.col("lang") == "en").cast("double").alias("label"))))
 
 
 def q_quality_classifier(spark, sf_dir):
@@ -3570,12 +3463,12 @@ def _pca_comps(spark, sf_dir, emb, out_dim=16):
     would optimize reconstruction of *centered* data instead). One
     Arrow partial-GEMM corpus pass (shuffle volume O(partitions·dim²)) +
     a driver eigh of the 64×64 matrix — the IVF-codebook lifecycle."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pca", out_dim)
-    if key not in _PCA_COMPS:
-        g = linalg.gram_matrix(emb, dim=VEC_DIM)
-        rows = [(r.i, r.j, r.g) for r in g.collect()]
-        _PCA_COMPS[key] = linalg.pca_components(rows, n_components=out_dim)
-    return _PCA_COMPS[key]
+    def build():
+        rows = [(r.i, r.j, r.g)
+                for r in linalg.gram_matrix(emb, dim=VEC_DIM).collect()]
+        return linalg.pca_components(rows, n_components=out_dim)
+
+    return memo(spark, ("pca", sf_dir, out_dim), build)
 
 
 def q_pca_topk(spark, sf_dir):
@@ -3599,15 +3492,14 @@ def q_pca_topk(spark, sf_dir):
 def _whitening(spark, sf_dir):
     """Memoized whitening transform (gram + mean corpus passes + driver
     eigh — the ``_pca_comps`` lifecycle)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "whiten")
-    if key not in _PCA_COMPS:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         g = [(r.i, r.j, r.g)
              for r in linalg.gram_matrix(emb, dim=VEC_DIM).collect()]
         mu = linalg.mean_vector(emb, dim=VEC_DIM)
-        n = emb.count()
-        _PCA_COMPS[key] = linalg.whitening_components(g, n, mu)
-    return _PCA_COMPS[key]
+        return linalg.whitening_components(g, emb.count(), mu)
+
+    return memo(spark, ("whiten", sf_dir), build)
 
 
 def q_whitened_topk(spark, sf_dir):
@@ -3620,17 +3512,17 @@ def q_whitened_topk(spark, sf_dir):
     static-oracle layer (eigh isn't SQL) — pinned by the dynamic DuckDB
     oracle in test_whitening_identity_covariance_and_dynamic_oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "whitened_proj")
-    if key not in _ANN_INDEXES:
+    def build():
         # the whitened corpus is a build-phase artifact (at 100 TB: the
         # persisted projected table) — memoize it like the PQ/SQ recons;
         # per-query cost is the scoring pass, not re-projecting the corpus
         comps, offs = _whitening(spark, sf_dir)
         # widened before the checkpoint so serving scores 32-way with no
         # per-call shuffle (see the sq_recon memo note)
-        _ANN_INDEXES[key] = similarity._spread(linalg.pca_project(
+        return similarity._spread(linalg.pca_project(
             emb, comps, offsets=offs, out_col="w")).localCheckpoint(eager=True)
-    proj = _ANN_INDEXES[key]
+
+    proj = memo(spark, ("whitened_proj", sf_dir), build)
     q = proj.filter(F.col("vec_id") % QUERY_MOD == 0)
     return similarity.cosine_topk(q, proj, TOP_K, vec_col="w", dim=VEC_DIM)
 
@@ -3645,15 +3537,13 @@ def q_als_fold_in(spark, sf_dir):
     ranking by the block-structure invariant in pytest."""
     from hybrid_recommendation_system_using_vector_db_spark.operators import mf
 
-    key = (spark.sparkContext.applicationId, sf_dir, "als_items")
-    if key not in _ANN_INDEXES:
-        li = load_table(spark, sf_dir, "lineitem")
-        edges = copurchase.copurchase_edges(li)
-        _ANN_INDEXES[key] = (
-            mf.als_item_factors(edges, rank=8, iters=3)
-            .localCheckpoint(eager=True),
-            edges.localCheckpoint(eager=True))
-    items, edges = _ANN_INDEXES[key]
+    def build():
+        edges = copurchase.copurchase_edges(load_table(spark, sf_dir, "lineitem"))
+        return (mf.als_item_factors(edges, rank=8, iters=3)
+                .localCheckpoint(eager=True),
+                edges.localCheckpoint(eager=True))
+
+    items, edges = memo(spark, ("als_items", sf_dir), build)
     fold_edges = edges.filter(F.col("src") % 20 == 0)
     return mf.als_fold_in_recommend(fold_edges, items, k=10)
 
@@ -3666,15 +3556,13 @@ def q_als_recommend(spark, sf_dir):
     block-structure ranking invariant pins quality in pytest."""
     from hybrid_recommendation_system_using_vector_db_spark.operators import mf
 
-    key = (spark.sparkContext.applicationId, sf_dir, "als")
-    if key not in _ANN_INDEXES:
-        li = load_table(spark, sf_dir, "lineitem")
-        edges = copurchase.copurchase_edges(li)
-        # train-once artifact (the IVF-codebook lifecycle): the flat rec
-        # table is small (|served users|·k) — localCheckpoint, serve warm
-        _ANN_INDEXES[key] = mf.als_recommend(
-            edges, k=TOP_K, user_mod=20, seed=SEED).localCheckpoint(eager=True)
-    return _ANN_INDEXES[key]
+    # train-once artifact (the IVF-codebook lifecycle): the flat rec
+    # table is small (|served users|·k) — localCheckpoint, serve warm
+    return memo(spark, ("als", sf_dir),
+                lambda: mf.als_recommend(
+                    copurchase.copurchase_edges(
+                        load_table(spark, sf_dir, "lineitem")),
+                    k=TOP_K, user_mod=20, seed=SEED).localCheckpoint(eager=True))
 
 
 def q_negative_samples(spark, sf_dir):
@@ -3952,31 +3840,23 @@ def q_k_truss(spark, sf_dir):
     return graph.k_truss(edges, k=3, max_rounds=5)
 
 
-_IVFPQ_BOOKS: dict[tuple, tuple] = {}
-
-
 def _ivfpq_books(spark, sf_dir, emb):
     """Memoized train-once IVF-PQ codebooks (coarse 16-centroid k-means +
     8×16 residual PQ — oracle-tractable sizes, same rationale as
     ``_pq_books``)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "ivfpq")
-    if key not in _IVFPQ_BOOKS:
-        _IVFPQ_BOOKS[key] = similarity.ivfpq_train(
-            emb, n_centroids=16, m=8, pq_centroids=16, kmeans_iters=2,
-            dim=VEC_DIM)
-    return _IVFPQ_BOOKS[key]
+    return memo(spark, ("ivfpq", sf_dir),
+                lambda: similarity.ivfpq_train(
+                    emb, n_centroids=16, m=8, pq_centroids=16,
+                    kmeans_iters=2, dim=VEC_DIM))
 
 
 def _ivfpq_lists(spark, sf_dir, emb):
     """Build-once persisted IVF-PQ reconstruction lists (the two-level
     index proper — the ``_ivf_lists`` ingest/serve split applied to the
     compressed tier; pure function of corpus + codebooks)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "ivfpq_lists")
-    if key not in _ANN_INDEXES:
-        cents, books = _ivfpq_books(spark, sf_dir, emb)
-        _ANN_INDEXES[key] = similarity.ivfpq_build_lists(
-            emb, cents, books).persist()
-    return _ANN_INDEXES[key]
+    return memo(spark, ("ivfpq_lists", sf_dir),
+                lambda: similarity.ivfpq_build_lists(
+                    emb, *_ivfpq_books(spark, sf_dir, emb)).persist())
 
 
 def q_ivfpq_topk(spark, sf_dir):
@@ -4016,20 +3896,15 @@ def q_domain_mix(spark, sf_dir):
         domain_col="source", key_col="doc_id", seed=SEED)
 
 
-_PQ_BOOKS: dict[tuple, list] = {}
-
-
 def _pq_books(spark, sf_dir, emb):
     """Memoized train-once PQ codebooks. k=16/subspace here (not the
     operator's k=64 default) to keep the DuckDB oracle's unrolled k-means
     CTE chain tractable — the driver entry pins engine agreement; the
     shipped-default recall floor is pinned on a clustered fixture by
     ``test_pq_recall_floor_clustered``."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pq")
-    if key not in _PQ_BOOKS:
-        _PQ_BOOKS[key] = similarity.pq_train(emb, m=8, n_centroids=16,
-                                             dim=VEC_DIM)
-    return _PQ_BOOKS[key]
+    return memo(spark, ("pq", sf_dir),
+                lambda: similarity.pq_train(emb, m=8, n_centroids=16,
+                                            dim=VEC_DIM))
 
 
 def q_pq_topk(spark, sf_dir):
@@ -4043,15 +3918,15 @@ def q_pq_topk(spark, sf_dir):
     per-query cost is the scoring pass, not re-decoding the corpus
     through the literal-map expression tree every call."""
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "pq_recon")
-    if key not in _ANN_INDEXES:
-        # widened before the checkpoint so serving scores 32-way with no
-        # per-call shuffle (see the sq_recon memo note)
-        _ANN_INDEXES[key] = similarity._spread(similarity.pq_reconstruct(
-            emb, _pq_books(spark, sf_dir, emb))).localCheckpoint(eager=True)
+    # widened before the checkpoint so serving scores 32-way with no
+    # per-call shuffle (see the sq_recon memo note)
+    recon = memo(spark, ("pq_recon", sf_dir),
+                 lambda: similarity._spread(similarity.pq_reconstruct(
+                     emb, _pq_books(spark, sf_dir, emb)))
+                 .localCheckpoint(eager=True))
     return similarity.cosine_topk(
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0),
-        _ANN_INDEXES[key], TOP_K, dim=VEC_DIM)
+        emb.filter(F.col("vec_id") % QUERY_MOD == 0), recon, TOP_K,
+        dim=VEC_DIM)
 
 
 def q_repetition_stats(spark, sf_dir):
@@ -4146,12 +4021,9 @@ def _served_minhash_sigs(spark, sf_dir, n_hashes=8):
     it instead of re-running tokenize+minhash per call. At 100 TB this is
     the stored signature column of the persisted dedup-cluster artifact
     (`pipeline.write_dedup_clusters`)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "mh_sigs", n_hashes)
-    if key not in _ANN_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        _ANN_INDEXES[key] = dedup.minhash_signatures(
-            docs, n_hashes).persist()
-    return _ANN_INDEXES[key]
+    return memo(spark, ("mh_sigs", sf_dir, n_hashes),
+                lambda: dedup.minhash_signatures(
+                    load_table(spark, sf_dir, "documents"), n_hashes).persist())
 
 
 def q_cross_dedup(spark, sf_dir):
@@ -4414,9 +4286,6 @@ def q_containment_neardup(spark, sf_dir):
                                            shingle_n=3, df_cap=200)
 
 
-_META_FILE_CACHE: dict[tuple, str] = {}
-
-
 def _render_meta_blob(spark: SparkSession, sf_dir: str) -> str:
     """Render a deterministic amazon-meta-format archive from the part
     table (memoized per session+dataset; bounded — one short record per
@@ -4432,8 +4301,7 @@ def _render_meta_blob(spark: SparkSession, sf_dir: str) -> str:
     (% 13), and an empty similar list (% 5) — each mirrored as plain
     CASE arithmetic in the DuckDB oracle, so parse(render(part)) is
     hash-checked against the relational projection."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _META_FILE_CACHE:
+    def build():
         import gzip
         import tempfile
 
@@ -4465,11 +4333,9 @@ def _render_meta_blob(spark: SparkSession, sf_dir: str) -> str:
         path = os.path.join(d, "amazon-meta.txt.gz")
         with gzip.open(path, "wt", encoding="utf-8") as fh:
             fh.write("\n".join(lines) + "\n")
-        _META_FILE_CACHE[key] = path
-    return _META_FILE_CACHE[key]
+        return path
 
-
-_JSONL_FILE_CACHE: dict[tuple, str] = {}
+    return memo(spark, ("meta_file", sf_dir), build)
 
 
 def _render_jsonl_blob(spark: SparkSession, sf_dir: str) -> str:
@@ -4479,8 +4345,7 @@ def _render_jsonl_blob(spark: SparkSession, sf_dir: str) -> str:
     → parses but misses the required doc_id/text fields. Round-tripping
     it through ``read_jsonl_documents`` pins the PERMISSIVE corrupt-
     record gate against the plain relational projection."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _JSONL_FILE_CACHE:
+    def build():
         import gzip
         import json
         import tempfile
@@ -4505,8 +4370,9 @@ def _render_jsonl_blob(spark: SparkSession, sf_dir: str) -> str:
         path = os.path.join(d, "documents.jsonl.gz")
         with gzip.open(path, "wt", encoding="utf-8") as fh:
             fh.write("\n".join(lines) + "\n")
-        _JSONL_FILE_CACHE[key] = path
-    return _JSONL_FILE_CACHE[key]
+        return path
+
+    return memo(spark, ("jsonl_file", sf_dir), build)
 
 
 def q_jsonl_ingest(spark, sf_dir):
@@ -4519,8 +4385,6 @@ def q_jsonl_ingest(spark, sf_dir):
         spark, _render_jsonl_blob(spark, sf_dir)) \
         .select("doc_id", "lang", "source", "text")
 
-
-_CSV_FILE_CACHE: dict[tuple, str] = {}
 
 _CSV_ORDERS_DDL = ("o_orderkey bigint, o_custkey bigint, "
                    "o_orderstatus string, o_totalprice double, "
@@ -4535,8 +4399,7 @@ def _render_csv_blob(spark: SparkSession, sf_dir: str) -> str:
     Python's shortest round-trip form, which Java's parseDouble maps
     back to the identical IEEE bits, so parse(render(orders)) compares
     exactly against the parquet originals."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CSV_FILE_CACHE:
+    def build():
         import gzip
         import tempfile
 
@@ -4559,26 +4422,24 @@ def _render_csv_blob(spark: SparkSession, sf_dir: str) -> str:
         path = os.path.join(d, "orders.csv.gz")
         with gzip.open(path, "wt", encoding="utf-8") as fh:
             fh.write("\n".join(lines) + "\n")
-        _CSV_FILE_CACHE[key] = path
-    return _CSV_FILE_CACHE[key]
+        return path
 
-
-_ORC_DIR_CACHE: dict = {}
+    return memo(spark, ("csv_file", sf_dir), build)
 
 
 def _render_orc_dataset(spark: SparkSession, sf_dir: str) -> str:
     """Write the orders table as ORC once per session+dataset (UTC
     pinned BEFORE the write: ORC timestamps store wall time, so writer
     and reader must agree on the session zone)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORC_DIR_CACHE:
+    def build():
         import tempfile
 
         _pin_utc(spark)
         d = tempfile.mkdtemp(prefix="spark_graft_orc_") + "/orders"
         load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(d)
-        _ORC_DIR_CACHE[key] = d
-    return _ORC_DIR_CACHE[key]
+        return d
+
+    return memo(spark, ("orc_dir", sf_dir), build)
 
 
 def q_orc_roundtrip(spark, sf_dir):

@@ -9,11 +9,10 @@ line past the driver's tail capture and BENCH_r04 recorded parsed:null).
 The full payload — per-iteration times, index-build timings, load average —
 goes to stderr and to ``bench_full.json`` next to this file.
 
-Headline set = the reference-parity pipeline (edges → CF → content ANN →
-hybrid fusion → precision eval) plus the scale-path operators (GEMM ANN,
-LSH/IVF ANN, MinHash near-dup, exact dedup, token stats) and the analytic
-queries. Each query is timed end-to-end including the action (count), after
-a warm-up of the input scans.
+Headline set = every entry of ``queries()`` and ``extra_queries()`` in
+``__spark_entry__``, in name order. Each query is timed end-to-end including
+the action (count), after a warm-up of the input scans. The session comes
+from ``session.get_spark`` — the same conf the tests run under.
 """
 
 from __future__ import annotations
@@ -28,279 +27,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# the queries that make up the headline number (reference-parity EP1-EP3
-# pipeline + scale-path extensions); keys match __spark_entry__.queries()
-HEADLINE = [
-    "copurchase_edges",
-    "cf_topn",
-    "content_topk",
-    "content_topk_gemm",
-    "lsh_topk",
-    "lsh_topk_mp",
-    "ivf_topk",
-    "hybrid_topk",
-    "hybrid_topk_ann",
-    "precision_eval",
-    "query_resolution",
-    "seeded_sample",
-    "amazon_meta_ingest",
-    "jsonl_ingest",
-    "csv_ingest",
-    "pretrain_corpus",
-    "token_budget_mix",
-    "dedup_exact",
-    "minhash_dup_pairs",
-    "minhash_jaccard_neardup",
-    "embedding_neardup",
-    "token_stats",
-    "quality_scores",
-    "doc_fingerprints",
-    "tfidf_top_terms",
-    "cluster_centroids",
-    "kmv_distinct",
-    "session_windows",
-    "tpch_q1",
-    "top_parts_by_revenue",
-    "events_hourly",
-    "sessionization",
-    "asof_attribution",
-    "stratified_sample",
-    "weighted_sample",
-    "pack_sequences",
-    "rollup_revenue",
-    "parts_unindexed",
-    "doc_length_stats",
-    "coactivity",
-    "distinct_users",
-    "user_type_setops",
-    "simhash_neardup",
-    "cube_revenue",
-    "repetition_stats",
-    "decontaminate",
-    "quantized_topk",
-    "pq_topk",
-    "domain_mix",
-    "bm25_topk",
-    "rrf_hybrid_topk",
-    # r6 additions: two-level/diversified/filtered ANN serving, graph
-    # rank, span dedup, CCNet filters, semantic dedup, importance
-    # weighting, cross-corpus decontamination, quantile filtering, linalg
-    "ivfpq_topk",
-    "ivfpq_rerank",
-    "mmr_topk",
-    "filtered_topk",
-    "pagerank",
-    "paragraph_dedup",
-    "boilerplate_removal",
-    "lm_perplexity",
-    "kn_perplexity",
-    "semdedup",
-    "dsir_weights",
-    "cross_dedup",
-    "quality_band",
-    "gram_matrix",
-    "chunk_documents",
-    "centroid_outliers",
-    "hard_negatives",
-    "cms_heavy_hitters",
-    "chunk_pooled_embeddings",
-    "bpe_merges",
-    "maxsim_topk",
-    "hll_distinct",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q10",
-    "tpch_q6",
-    "bpe_encode",
-    "unigram_pieces",
-    "unigram_encode",
-    "link_prediction",
-    "cohort_retention",
-    "ranking_eval",
-    "funnel",
-    "triangles",
-    "key_skew",
-    "activity_anomalies",
-    "fuzzy_names",
-    "snapshot_diff",
-    "bloom_prune",
-    "pmi_collocations",
-    "mutual_knn",
-    "rnn_clusters",
-    "value_histogram",
-    "event_transitions",
-    "rp_topk",
-    "pca_topk",
-    "dup_spans",
-    "substring_dedup",
-    "diversity_eval",
-    "whitened_topk",
-    "negative_samples",
-    "dedup_keep_best",
-    "leakage_safe_split",
-    "als_fold_in",
-    "lang_confusion",
-    "lang_id_trained",
-    "char_entropy",
-    "quality_classifier",
-    "scd2_intervals",
-    "psi_drift",
-    "zorder_key",
-    "grouped_quantiles",
-    "ewma_revenue",
-    "association_rules",
-    "containment_neardup",
-    "winsorize",
-    "tpch_q4",
-    "tpch_q18",
-    "tpch_q14",
-    "tpch_q16",
-    "tpch_q19",
-    "tpch_q21",
-    "robust_zscore",
-    "temporal_split",
-    "streaming_enrich",
-    "idf_jaccard_neardup",
-    "band_recall",
-    "bfs_distances",
-    "k_core",
-    "seasonal_anomalies",
-    "path_ngrams",
-    "sampled_quantiles",
-    # r10: persisted-index write→append→load→serve lifecycle (A3/A4)
-    "index_lifecycle",
-    # r10: the remaining partsupp-free TPC-H shapes — with q7/q8/q15 the
-    # suite covers every TPC-H query expressible without partsupp
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q17",
-    "tpch_q22",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q15",
-    # r10 second wave: the four partsupp-DEPENDENT shapes over the
-    # derived supply view (all 22 TPC-H shapes covered), CDC MERGE
-    # apply, edit-verified near-dup, and LPA communities
-    "tpch_q2",
-    "tpch_q9",
-    "tpch_q11",
-    "tpch_q20",
-    "cdc_apply",
-    "edit_neardup",
-    "label_propagation",
-    "gap_fill",
-    "weighted_sssp",
-    "kmv_set_ops",
-    "hopping_windows",
-    "orc_roundtrip",
-    "unpivot_measures",
-    "bag_setops",
-    # r11 (VERDICT r10 next #7): the previously-unbenched tail — every
-    # oracle-backed entry now has a recorded timing each sweep (most of
-    # these are building blocks whose cost also rides larger entries,
-    # which is why they were skipped before; a few are micro-benchmarks
-    # of streaming/one-batch paths)
-    "als_recommend",
-    "ann_recall",
-    "customer_order_topn",
-    "dedup_clusters",
-    "dedup_clusters_chained",
-    "dedup_clusters_star",
-    "events_pivot",
-    "fraction_sample",
-    "hash_embeddings",
-    "jaccard_neardup",
-    "language_id",
-    "media_frame_sample",
-    "media_resize",
-    "minhash_signatures",
-    "multimodal_features",
-    "orders_running_total",
-    "part_doc_projection",
-    "simhash_fingerprints",
-    "split_assign",
-    "streaming_attribution",
-    "streaming_dedup",
-    "streaming_hourly",
-    "streaming_neardup",
-    "streaming_sessions",
-    "text_scrub",
-    "vocab_topk",
-    # r11 second wave
-    "set_sim_join",
-    "k_truss",
-    "dq_checks",
-    "temporal_reach",
-    "weighted_median",
-    "equidepth_histogram",
-    "frequent_triples",
-    "streaming_cdc",
-    "theil_sen",
-    "ks_drift",
-    "ks_drift_grouped",
-    "spearman",
-    "benford",
-    "kendall",
-    # r12 (VERDICT r11 next #2/#3): the stated 100 TB tiers, now real
-    "ks_drift_sketched",
-    "kendall_sampled",
-    "theil_sen_sampled",
-    # r12 (VERDICT r11 next #7): HLL approximate-unique DQ tier
-    "dq_checks_approx",
-    # r12: equi-depth sketch tier (sample edges, no global sort)
-    "equidepth_sketched",
-    # r12: per-column KS monitoring table
-    "drift_report",
-    # r12: match -> closure -> survivorship composition
-    "entity_resolution",
-    # r12: classifier-eval completions
-    "roc_auc",
-    "average_precision",
-    "calibration_table",
-    # r12: seed-restart PageRank
-    "personalized_pagerank",
-    # r12: additive trend/seasonal/resid split
-    "seasonal_decompose",
-    # r12: pre-join cardinality profile
-    "join_fanout",
-    # r13: dataset-publishing manifest (one-pass, order-independent hash),
-    # its additive merge, and the streaming foreachBatch fold
-    "shard_manifest",
-    "shard_manifest_merge",
-    "streaming_shard_manifest",
-    # r13: examples-proportional interleave schedule
-    "mixing_order",
-    # r13: chained stateful aggs — per-window streaming PSI monitor
-    "streaming_psi_drift",
-    # r13: sketch-union algebras (register max / bottom-k / counter sum)
-    "hll_merge",
-    "streaming_hll",
-    "sampled_quantiles_merge",
-    "cms_merge",
-    # r14: bounded/sampling-theory drift members, categorical
-    # association, the calibration gate summary, grouped theta-sketch
-    # algebra, and the CMS streaming fold
-    "js_drift",
-    "chi2_drift",
-    "cramers_v",
-    "calibration_ece",
-    "kmv_overlap_grouped",
-    "streaming_cms",
-]
-
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from hybrid_recommendation_system_using_vector_db_spark.session import get_spark, release
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("spark-graft-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    spark = get_spark("spark-graft-bench", cpus=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod
@@ -309,7 +40,7 @@ def main() -> None:
     # entries plus the pytest-only extras — so headline membership stays
     # stable round-over-round even as entries move between surfaces
     qmap = {**entry_mod.extra_queries(), **entry_mod.queries()}
-    names = [n for n in HEADLINE if n in qmap]
+    names = sorted(qmap)
 
     # warm the file-scan + JVM (not counted): touch every input table once
     from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
@@ -597,7 +328,7 @@ def main() -> None:
     serve_iters: list[float] = []
     n_serve_q = 0
     try:
-        entry_mod._reset_serving_caches()   # drop sweep-phase memos
+        release(spark)                      # drop sweep-phase memos
         spark.catalog.clearCache()          # and any stray cached plans
         try:
             spark.sparkContext._jvm.System.gc()

@@ -24,13 +24,9 @@ from ..functions.portable import fround
 from .. import ROUND_SCORE
 from ..functions import texttools as TT
 from ..functions.hashing import hex_nibble_value, minhash
+from ..session import memo
 from ._rounds import iterate, no_rows
 from .similarity import _spread
-
-# session-scoped memo of set_similarity_join's token-count estimates,
-# keyed (applicationId, input plan semanticHash, text_col) — the
-# auto-spill DECISION input, never results (r15, VERDICT r14 next #7)
-_TOKEN_ESTIMATES: dict = {}
 
 
 def exact_dedup(documents: DataFrame, id_col: str = "doc_id",
@@ -1281,8 +1277,8 @@ def set_similarity_join(documents: DataFrame, threshold: float = 0.5,
     strategy the exact count does, at ~0 marginal cost; both
     strategies produce identical results regardless, so a borderline
     misestimate costs only the measured materialization delta, never
-    correctness), and it is memoized per (session, input plan,
-    text_col) so repeated calls over the same corpus pay ZERO estimate
+    correctness), and it is memoized in the session registry per (input
+    plan, text_col) so repeated calls over the same corpus pay ZERO estimate
     jobs after the first (r15, VERDICT r14 next #7; the random sample
     replaces r14's ``limit(256)`` prefix, which a length-sorted corpus
     would bias by orders of magnitude — ADVICE r14). Explicit ``spill_dir`` still forces the spill (caller owns the
@@ -1298,29 +1294,26 @@ def set_similarity_join(documents: DataFrame, threshold: float = 0.5,
     if spill_dir is None and checkpoint_tokens:
         # r15 (VERDICT r14 next #7 + ADVICE): the estimate is a pure
         # function of (corpus, text_col), so pay the count + sample ONCE
-        # per session per input — keyed on the plan's semantic hash, the
-        # session-memo convention (applicationId scoping keeps it from
-        # leaking across runs). The sample is RANDOM (seeded), not a
-        # limit() prefix: a corpus whose leading rows are unrepresentative
-        # (e.g. written sorted by length) would bias a prefix sample by
-        # orders of magnitude; the decision is still decision-only (both
-        # strategies are result-identical).
-        sess = documents.sparkSession
-        key = (sess.sparkContext.applicationId,
-               documents.semanticHash(), text_col)
-        est = _TOKEN_ESTIMATES.get(key)
-        if est is None:
+        # per session per input — memoized on the plan's semantic hash.
+        # The sample is RANDOM (seeded) and sized to about 512 rows, with
+        # no limit(): a limit() keeps the first partitions' rows, and a
+        # corpus whose leading rows are unrepresentative (e.g. written
+        # sorted by length) would bias that prefix by orders of
+        # magnitude; the decision is still decision-only (both strategies
+        # are result-identical).
+        def estimate():
             n_docs = documents.count()
-            avg_tok = 0.0
-            if n_docs:
-                frac = min(1.0, 4096.0 / n_docs)
-                sample = (documents.select(F.col(text_col).alias(text_col))
-                          .sample(fraction=frac, seed=7).limit(512))
-                avg_tok = (sample
-                           .agg(F.avg(F.size(TT.distinct_tokens(
-                               F.col(text_col))))).first()[0]) or 0.0
-            est = n_docs * avg_tok
-            _TOKEN_ESTIMATES[key] = est
+            if not n_docs:
+                return 0.0
+            sample = (documents.select(F.col(text_col).alias(text_col))
+                      .sample(fraction=min(1.0, 512.0 / n_docs), seed=7))
+            avg_tok = (sample.agg(F.avg(F.size(TT.distinct_tokens(
+                F.col(text_col))))).first()[0]) or 0.0
+            return n_docs * avg_tok
+
+        est = memo(documents.sparkSession,
+                   ("token_estimate", documents.semanticHash(), text_col),
+                   estimate)
         if est > auto_spill_tokens:
             import atexit
             import shutil

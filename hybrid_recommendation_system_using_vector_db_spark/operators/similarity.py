@@ -37,9 +37,7 @@ from ..functions.portable import fround
 from .. import ROUND_SCORE
 from ..functions import vector as V
 from ..functions.hashing import as_double_sql, hyperplane_bits
-
-
-_DIM_CACHE: dict[tuple, int | None] = {}
+from ..session import memo
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
@@ -47,34 +45,29 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
 
     Knowing dim lets every dot product unroll into a codegen-able flat
     expression instead of an interpreted HOF fold (see functions.vector.dot).
-    The probe is a real Spark job (~0.5 s of fixed latency), so it caches
-    on (semantic plan hash, analyzed schema): the semantic hash — the
-    PUBLIC ``DataFrame.semanticHash()`` (3.1+, Connect-supported; VERDICT
-    r5 wrong #3 retired the ``_jdf`` py4j form) — is a 32-bit digest of
-    the analyzed plan. A collision between two lineages is astronomically
-    unlikely but not impossible (ADVICE r2), so the schema string rides in
-    the key as a cheap cross-check, and serve paths should pass ``dim``
-    explicitly from index metadata instead of probing at all.
+    The probe is a real Spark job (~0.5 s of fixed latency), so it is
+    memoized in the session registry on (semantic plan hash, analyzed
+    schema): the semantic hash — the PUBLIC ``DataFrame.semanticHash()``
+    (3.1+, Connect-supported; VERDICT r5 wrong #3 retired the ``_jdf``
+    py4j form) — is a 32-bit digest of the analyzed plan. A collision
+    between two lineages is astronomically unlikely but not impossible
+    (ADVICE r2), so the schema string rides in the key as a cheap
+    cross-check, and serve paths should pass ``dim`` explicitly from
+    index metadata instead of probing at all.
     """
+    def probe():
+        row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+        return int(row.d) if row and row.d and row.d > 0 else None
+
     try:
         proj = df.select(F.col(vec_col))
-        key = (df.sparkSession.sparkContext.applicationId,
-               proj.semanticHash(), proj.schema.json(), vec_col)
+        key = ("vec_dim", proj.semanticHash(), proj.schema.json(), vec_col)
     except Exception:
         key = None
-    if key is None or key not in _DIM_CACHE:
-        try:
-            row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-            dim = int(row.d) if row and row.d and row.d > 0 else None
-        except Exception:
-            return None
-        if key is None:
-            return dim
-        _DIM_CACHE[key] = dim
-    return _DIM_CACHE[key]
-
-
-_SPREAD_CACHE: dict[tuple, bool] = {}
+    try:
+        return probe() if key is None else memo(df.sparkSession, key, probe)
+    except Exception:
+        return None
 
 
 def _spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -137,8 +130,8 @@ def _spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if files is not None:
         if not files or len(files) >= min(target, 128):
             return df
-        key = (spark.sparkContext.applicationId, tuple(files), target)
-        if key not in _SPREAD_CACHE:
+
+        def too_few():
             try:
                 jvm = spark._jvm
                 conf = spark._jsc.hadoopConfiguration()
@@ -159,10 +152,12 @@ def _spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
                 max_split = min(max_part, max(open_cost, bytes_per_core))
                 est = sum(max(1, -(-sz // max(1, max_split)))   # ceil div
                           for sz in sizes)
-                _SPREAD_CACHE[key] = est < target
+                return est < target
             except Exception:
-                _SPREAD_CACHE[key] = False
-        return df.repartition(target) if _SPREAD_CACHE[key] else df
+                return False
+
+        widen = memo(spark, ("spread", tuple(files), target), too_few)
+        return df.repartition(target) if widen else df
     try:
         n = df._jdf.queryExecution().toRdd().getNumPartitions()
     except Exception:

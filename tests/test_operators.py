@@ -186,6 +186,16 @@ def test_spread_classifies_by_plan_nodes_not_rendered_text(spark, tmp_path):
     (the old substring match on the rendered plan bounced it to the
     planning probe), and a genuinely non-map-only plan (aggregate)
     must never enter the file-estimate path."""
+    from hybrid_recommendation_system_using_vector_db_spark import session
+
+    def spread_memos():
+        # the file-metadata tier memoizes its estimate under ("spread", files, n)
+        return [k[1] for k in session._MEMOS if k[1][0] == "spread"]
+
+    def clear_spread_memos():
+        for k in [k for k in session._MEMOS if k[1][0] == "spread"]:
+            del session._MEMOS[k]
+
     p = str(tmp_path / "one")
     spark.range(0, 1000).selectExpr("id", "id * 2 AS v") \
         .coalesce(1).write.parquet(p)
@@ -193,16 +203,15 @@ def test_spread_classifies_by_plan_nodes_not_rendered_text(spark, tmp_path):
     # map-only scan with an adversarial alias: fast path, widened
     df = (spark.read.parquet(p).alias("JoinSortWindowAggregateData")
           .filter(F.col("id") > 1))
-    similarity._SPREAD_CACHE.clear()
+    clear_spread_memos()
     out = similarity._spread(df, min_partitions=8)
-    assert any(isinstance(k, tuple) and any(p in f for f in k[1])
-               for k in similarity._SPREAD_CACHE), \
+    assert any(any(p in f for f in k[1]) for k in spread_memos()), \
         "map-only scan did not take the file-metadata fast path"
     assert out.rdd.getNumPartitions() == 8
 
     # aggregate: not map-only -> physical probe, no file-estimate entry
     agg = spark.read.parquet(p).groupBy("id").count()
-    similarity._SPREAD_CACHE.clear()
+    clear_spread_memos()
     similarity._spread(agg, min_partitions=8)
-    assert not similarity._SPREAD_CACHE, \
+    assert not spread_memos(), \
         "aggregate plan wrongly classified map-only"

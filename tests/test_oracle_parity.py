@@ -92,21 +92,3 @@ def test_all_queries_run(spark, sf_dir):
 def test_entry_smoke(spark):
     out = entrymod.entry(spark)
     assert out.count() >= 0
-
-
-def test_bench_headline_names_all_resolve():
-    """bench.py silently filters HEADLINE to names present in the query
-    surface — a typo'd or rotated-away name would quietly drop an entry
-    from the measured sweep. Every HEADLINE name must resolve."""
-    import bench
-
-    surface = set(QUERIES) | set(EXTRA_QUERIES)
-    missing = [n for n in bench.HEADLINE if n not in surface]
-    assert not missing, f"bench HEADLINE names not in the query surface: {missing}"
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate HEADLINE names"
-    # r13: the sweep is EXHAUSTIVE by policy (VERDICT r10 next #7 — every
-    # oracle-backed entry gets a recorded timing each sweep); a new entry
-    # that isn't added to HEADLINE silently goes unbenched, which is how
-    # three r13 entries briefly escaped the record
-    unbenched = sorted(surface - set(bench.HEADLINE))
-    assert not unbenched, f"query-surface entries missing from bench HEADLINE: {unbenched}"

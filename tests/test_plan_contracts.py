@@ -13,6 +13,7 @@ from hybrid_recommendation_system_using_vector_db_spark.plans import (
     pushed_filters,
     read_schemas,
 )
+from hybrid_recommendation_system_using_vector_db_spark.session import release
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
@@ -138,15 +139,70 @@ def test_serve_chain_job_count_bounded(spark):
     import __spark_entry__ as m
 
     sf = "/root/testdata/sf0.001"
-    # other tests in the shared session may have clearCache()'d the
-    # memoized indexes out from under the memo dicts — reset and rebuild
-    m._reset_serving_caches()
+    # start from a cold registry so the warm call below builds the indexes
+    release(spark)
     m.queries()["hybrid_topk"](spark, sf).count()  # warm: builds indexes
     st = spark.sparkContext.statusTracker()
     j0 = max(st.getJobIdsForGroup() or [0])
     m.queries()["hybrid_topk"](spark, sf).count()
     jobs = max(st.getJobIdsForGroup() or [0]) - j0
     assert jobs <= 8, f"warm hybrid_topk used {jobs} jobs (expected <= 8)"
+
+
+def test_memos_rebuild_after_clear_cache(spark, sf_dir):
+    """``spark.catalog.clearCache()`` unpersists the memoized serving
+    indexes; the next serve call must cache them again instead of
+    recomputing their lineage on every later call."""
+    import __spark_entry__ as m
+    from pyspark import StorageLevel
+
+    from hybrid_recommendation_system_using_vector_db_spark import CF_TOP_N, session
+
+    serve = m.queries()["hybrid_topk"]
+    serve(spark, sf_dir).count()
+    spark.catalog.clearCache()
+    serve(spark, sf_dir).count()
+    app = spark.sparkContext.applicationId
+    for key in [("universe", sf_dir), ("edges", sf_dir), ("cf", sf_dir, CF_TOP_N)]:
+        df = session._MEMOS[(app, key)]
+        assert df.storageLevel != StorageLevel.NONE, f"{key[0]} left uncached"
+
+
+def test_release_frees_memo_tables_and_temp_dirs(spark, sf_dir):
+    """``release`` leaves no cached table and no temp dir behind from the
+    session's memo builders: the persistent RDDs go back to the set before
+    the calls (locally checkpointed ones are left to GC), and every
+    directory the builders wrote is removed."""
+    import glob
+    import os
+    import tempfile
+
+    import __spark_entry__ as m
+
+    jsc = spark.sparkContext._jsc
+    prefixes = ("dedup", "meta", "jsonl", "csv", "orc")
+
+    def cached():
+        return {int(k) for k, rdd in jsc.getPersistentRDDs().items()
+                if not rdd.rdd().isLocallyCheckpointed()}
+
+    def temp_dirs():
+        return {d for p in prefixes for d in glob.glob(
+            os.path.join(tempfile.gettempdir(), f"spark_graft_{p}_*"))}
+
+    release(spark)
+    rdds_before, dirs_before = cached(), temp_dirs()
+    q = {**m.extra_queries(), **m.queries()}
+    for name in ("hybrid_topk", "precision_eval", "dedup_clusters",
+                 "amazon_meta_ingest", "jsonl_ingest", "csv_ingest",
+                 "orc_roundtrip"):
+        q[name](spark, sf_dir).count()
+    made = temp_dirs() - dirs_before
+    assert {os.path.basename(d).split("_")[2] for d in made} == set(prefixes)
+    assert cached() - rdds_before, "the serve path memoized no cached table"
+    release(spark)
+    assert cached() - rdds_before == set()
+    assert not made & temp_dirs(), sorted(made & temp_dirs())
 
 
 def test_tfidf_idf_join_default_no_broadcast_hint(spark, sf_dir):
@@ -219,7 +275,7 @@ def test_hybrid_serve_amortizes(spark):
         hybrid, similarity as sim)
 
     sf = "/root/testdata/sf0.001"
-    m._reset_serving_caches()
+    release(spark)
     universe = m._served_universe(spark, sf)
     edges = m._served_edges(spark, sf)
     names = m._names(spark, sf)
@@ -608,7 +664,7 @@ def test_whole_surface_scan_budget(spark, sf_dir):
     # the cached plan's own Scan nodes into the formatted output and
     # inflates the count (the lsh multitable test's documented effect).
     # Sweep from a cold cache so the measured shape is the plan's own.
-    m._reset_serving_caches()
+    release(spark)
     spark.catalog.clearCache()
 
     budget = 30
@@ -693,7 +749,7 @@ def test_hybrid_serve_batch_warm_jobs_and_scans_bounded(spark):
     from hybrid_recommendation_system_using_vector_db_spark.plans import formatted_plan
 
     sf = "/root/testdata/sf0.001"
-    m._reset_serving_caches()
+    release(spark)
     m.hybrid_serve_batch(spark, sf).count()   # warm: builds + persists
     st = spark.sparkContext.statusTracker()
     j0 = max(st.getJobIdsForGroup() or [0])
@@ -744,7 +800,7 @@ def test_eval_tables_build_once(spark):
     import __spark_entry__ as m
 
     sf = "/root/testdata/sf0.001"
-    m._reset_serving_caches()
+    release(spark)
     t1 = m._eval_rank_tables(spark, sf)
     t2 = m._eval_rank_tables(spark, sf)
     assert t1[0]["content"] is t2[0]["content"]
