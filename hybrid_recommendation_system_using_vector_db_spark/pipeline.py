@@ -76,7 +76,7 @@ def build_index(spark: SparkSession, meta_path: str, out_dir: str,
     index = with_lsh_bucket(index, "embedding", lsh_bits)
     # A3 sink: partitioned by LSH bucket → ANN probes prune partitions;
     # clustered by the partition column first so each bucket dir gets
-    # one file per bucket, not one per write task (see write_lsh_index)
+    # one file per bucket, not one per write task (see _write_lsh_buckets)
     index.repartition(F.col("bucket")) \
         .write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/index")
 
@@ -112,24 +112,54 @@ def write_ivf_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
     cents = kmeans_centroids_local(embeddings, n_centroids, n_iters)
     lists = ivf_build_lists(embeddings, cents)
     # clustered by the partition column: one file per centroid dir, not
-    # one per write task (see write_lsh_index)
+    # one per write task (see _write_lsh_buckets)
     lists.repartition(F.col("centroid_id")) \
         .write.mode("overwrite").partitionBy("centroid_id") \
         .parquet(f"{out_dir}/ivf_lists")
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in cents],
-        "centroid_id int, cent_vec array<double>")
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/ivf_codebook")
+    _write_centroids(spark, cents, f"{out_dir}/ivf_codebook")
     return cents
+
+
+def _write_centroids(spark: SparkSession, cents: list, path: str) -> None:
+    """The ``(centroid_id, cent_vec)`` sidecar of the IVF and IVF-PQ
+    indexes: one KB-sized file."""
+    spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in cents],
+        "centroid_id int, cent_vec array<double>") \
+        .coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _read_centroids(spark: SparkSession, path: str) -> list:
+    """[(centroid_id, vector)] written by :func:`_write_centroids`, in id
+    order."""
+    return sorted(((r.centroid_id, list(r.cent_vec))
+                   for r in spark.read.parquet(path).collect()),
+                  key=lambda t: t[0])
+
+
+def _write_codebooks(spark: SparkSession, books: list, path: str) -> None:
+    """The ``(subspace, cid, codeword)`` sidecar of the PQ and IVF-PQ
+    indexes: one KB-sized file."""
+    rows = [(s, int(cid), [float(x) for x in cv])
+            for s, book in enumerate(books) for cid, cv in book]
+    spark.createDataFrame(
+        rows, "subspace int, cid int, codeword array<double>") \
+        .coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _read_codebooks(spark: SparkSession, path: str) -> list:
+    """Per-subspace [(cid, codeword)] books written by
+    :func:`_write_codebooks`, subspaces and cids in order."""
+    by_s: dict[int, list] = {}
+    for r in spark.read.parquet(path).collect():
+        by_s.setdefault(r.subspace, []).append((r.cid, list(r.codeword)))
+    return [sorted(by_s[s]) for s in sorted(by_s)]
 
 
 def load_ivf_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, list]:
     """(inverted lists, codebook) written by :func:`write_ivf_index`."""
-    lists = spark.read.parquet(f"{out_dir}/ivf_lists")
-    cents = [(r.centroid_id, list(r.cent_vec))
-             for r in spark.read.parquet(f"{out_dir}/ivf_codebook").collect()]
-    cents.sort(key=lambda t: t[0])
-    return lists, cents
+    return (spark.read.parquet(f"{out_dir}/ivf_lists"),
+            _read_centroids(spark, f"{out_dir}/ivf_codebook"))
 
 
 def append_ivf_index(spark: SparkSession, new_embeddings: DataFrame,
@@ -176,17 +206,9 @@ def write_lsh_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
     """
     from .operators.similarity import lsh_build_index
 
-    # cluster by the partition columns before the dynamic-partition
-    # write: without it every write task opens a file in every (t,
-    # bucket) dir it sees — tasks × dirs tiny files (measured 45 s of
-    # filesystem ops for a 16k-row index at sf0.1). Hash-clustered,
-    # each (t, bucket) group lands in exactly one task → one file per
-    # dir. At very large scale add a salt column to the repartition
-    # for intra-bucket parallelism; the layout is unchanged.
-    lsh_build_index(embeddings, n_bits=n_bits, n_tables=n_tables) \
-        .repartition(F.col("t"), F.col("bucket")) \
-        .write.mode("overwrite").partitionBy("t", "bucket") \
-        .parquet(f"{out_dir}/lsh_buckets")
+    _write_lsh_buckets(lsh_build_index(embeddings, n_bits=n_bits,
+                                       n_tables=n_tables),
+                       f"{out_dir}/lsh_buckets")
     # compact appended-ids ledger: the append replay guard probes THIS
     # (one narrow row per vector) instead of distinct-scanning the whole
     # bucket table (n_tables rows × vector payload each) — ADVICE r9
@@ -195,6 +217,21 @@ def write_lsh_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
     spark.createDataFrame([(n_bits, n_tables)],
                           "n_bits int, n_tables int") \
         .coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/lsh_params")
+
+
+def _write_lsh_buckets(df: DataFrame, path: str) -> None:
+    """Write bucket rows in the live ``t=/bucket=`` layout — the one
+    writer of the index, its compaction rewrite and an append's stage.
+
+    Clustered by the partition columns before the dynamic-partition
+    write: without it every write task opens a file in every (t,
+    bucket) dir it sees — tasks × dirs tiny files (measured 45 s of
+    filesystem ops for a 16k-row index at sf0.1). Hash-clustered, each
+    (t, bucket) group lands in exactly one task → one file per dir. At
+    very large scale add a salt column to the repartition for
+    intra-bucket parallelism; the layout is unchanged."""
+    df.repartition(F.col("t"), F.col("bucket")) \
+        .write.mode("overwrite").partitionBy("t", "bucket").parquet(path)
 
 
 def load_lsh_index(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -207,8 +244,8 @@ def load_lsh_index(spark: SparkSession, out_dir: str) -> DataFrame:
     type inference would silently parse it as the integer 1010 — losing
     the leading zeros that distinguish buckets. File-column types come
     from the footer of a first (metadata-only) inferred read."""
-    _finish_lsh_commit(spark, out_dir, as_reader=True)
-    _finish_lsh_compact(spark, out_dir, as_reader=True)
+    _LSH_FAMILY.finish(spark, out_dir, as_reader=True)
+    _LSH_COMPACT_FAMILY.finish(spark, out_dir, as_reader=True)
     p = spark.read.parquet(f"{out_dir}/lsh_params").collect()[0]
     return (_read_lsh_buckets(spark, out_dir)
             .withMetadata("bucket", {"lsh.n_bits": int(p.n_bits),
@@ -227,28 +264,6 @@ def _read_lsh_buckets(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.schema(schema).parquet(f"{out_dir}/lsh_buckets")
 
 
-def _finish_lsh_commit(spark: SparkSession, out_dir: str,
-                       as_reader: bool = False) -> bool:
-    """LSH-artifact staged-commit publish: bucket rows + ledger rows
-    appended together through :func:`_finish_staging`. The bucket
-    append's replay guard is partition-PRUNED to the (t, bucket)
-    rectangle the staged rows touch, so a crash-retry publish re-scans
-    only the live files the batch could have landed in — O(batch), not
-    O(corpus) (ADVICE r9)."""
-    return _LSH_FAMILY.finish(spark, out_dir, as_reader=as_reader)
-
-
-def _finish_lsh_compact(spark: SparkSession, out_dir: str,
-                        as_reader: bool = False) -> bool:
-    """Compaction publish: the rewritten bucket layout SWAPS the live
-    dir wholesale (atomic rename, no append/replay semantics). A
-    separate stage family from ``lsh__staging``: the recovery routine
-    is chosen by stage NAME, and publishing a crashed compaction
-    through the append protocol would anti-join-append the entire
-    rewritten corpus onto itself."""
-    return _LSH_COMPACT_FAMILY.finish(spark, out_dir, as_reader=as_reader)
-
-
 def compact_lsh_index(spark: SparkSession, out_dir: str,
                       target_rows_per_file: int = 4_000_000) -> dict:
     """OPTIMIZE the persisted LSH artifact in place: rewrite the bucket
@@ -263,30 +278,26 @@ def compact_lsh_index(spark: SparkSession, out_dir: str,
 
     Crash safety: the rewritten tables stage under
     ``lsh_compact__staging`` with the ``_COMMIT`` marker protocol; the
-    publish is a pure directory swap (no replay read of the staged
-    partitioned data, so the bit-string bucket values never round-trip
-    through partition type inference — they become the live dirs by
-    rename). A crash before the marker discards; after, any
-    maintenance path (append/compact/vacuum) or reader claim rolls the
-    swap forward. Maintenance-actor contract as everywhere: ONE
-    append/compact/vacuum actor per artifact root at a time.
+    publish renames the staged dirs over the live ones (a swap, where
+    an append moves files in). Its own stage family: recovery is
+    chosen by stage NAME, and moving a crashed compaction's files into
+    the live table would double every row. A crash before the marker
+    discards; after, any maintenance path (append/compact/vacuum) or
+    reader claim rolls the swap forward. Maintenance-actor contract as
+    everywhere: ONE append/compact/vacuum actor per artifact root at a
+    time.
 
     Returns {files_in, files_out, rows} for the bucket table.
     """
     import math
 
-    _finish_lsh_commit(spark, out_dir)    # fold pending appends first
-    _finish_lsh_compact(spark, out_dir)   # recover a crashed compaction
-    fs, P = _hadoop_fs(spark, out_dir)
-    staging = f"{out_dir}/lsh_compact__staging"
-    if fs.exists(P(staging)):             # uncommitted debris
-        fs.delete(P(staging), True)
+    _LSH_FAMILY.finish(spark, out_dir)          # fold pending appends first
+    _LSH_COMPACT_FAMILY.finish(spark, out_dir)  # recover a crashed compaction
+    staging = _LSH_COMPACT_FAMILY.staging(out_dir)
     df = _read_lsh_buckets(spark, out_dir)
     files_in = len(df.inputFiles())
     rows = df.count()
-    (df.repartition(F.col("t"), F.col("bucket"))
-       .write.mode("overwrite").partitionBy("t", "bucket")
-       .parquet(f"{staging}/buckets"))
+    _write_lsh_buckets(df, f"{staging}/buckets")
     docs = spark.read.parquet(f"{out_dir}/lsh_docs")
     n_files = max(1, math.ceil(docs.count() / max(1, target_rows_per_file)))
     docs.repartition(n_files).write.mode("overwrite") \
@@ -299,9 +310,9 @@ def compact_lsh_index(spark: SparkSession, out_dir: str,
 def append_lsh_index(spark: SparkSession, new_embeddings: DataFrame,
                      out_dir: str, id_col: str = "vec_id") -> None:
     """Incremental LSH maintenance: bucket ONLY the new batch with the
-    STORED hyperplane params and dynamic-partition-append its rows —
-    file writes land only under the ``t=/bucket=`` directories the
-    batch touches, so growth costs O(batch), never O(corpus).
+    STORED hyperplane params and add its rows to the ``t=/bucket=``
+    directories the batch touches, so growth costs O(batch), never
+    O(corpus).
 
     Replay guard (ADVICE r9): the batch anti-joins the compact
     ``lsh_docs`` ledger (one narrow row per stored vector), never a
@@ -309,47 +320,37 @@ def append_lsh_index(spark: SparkSession, new_embeddings: DataFrame,
     no-op at O(|ledger ids|) probe cost, with no vector payloads read.
 
     Crash safety (VERDICT r9 #7): bucket rows and ledger rows move
-    through the SAME staged commit as the dedup/KN/LID families —
-    stage both, mark ``_COMMIT``, publish via :func:`_finish_staging`.
-    A crash before the marker discards the stage on the next append; a
-    crash after replays idempotently (full-row anti-join append with
-    the live side pruned to the touched (t, bucket) partitions), so a
-    partial bucket-file exposure can never double-count or lose rows.
+    through the SAME staged commit as the dedup/KN/LID/BM25 families.
+    Both are staged in the live layout, ``_COMMIT`` is marked, and the
+    publish moves each staged file to the same relative path in the
+    live table by rename — no Spark job. A crash before the marker
+    discards the stage on the next append; a crash after leaves the
+    unmoved files in the stage, and the next finish moves them. Every
+    row sits in exactly one uniquely named file, so a torn publish can
+    neither double-count nor lose rows.
 
     Because bucketing is a pure function of the params, an index grown
     incrementally is ROW-IDENTICAL to a bulk rebuild over the union
     (pinned by ``test_lsh_index_incremental_append_equals_bulk``)."""
     from .operators.similarity import lsh_build_index
 
-    _finish_lsh_commit(spark, out_dir)   # recover any interrupted append
-    _finish_lsh_compact(spark, out_dir)  # …or interrupted compaction
+    _LSH_FAMILY.finish(spark, out_dir)          # recover any interrupted append
+    _LSH_COMPACT_FAMILY.finish(spark, out_dir)  # …or interrupted compaction
     p = spark.read.parquet(f"{out_dir}/lsh_params").collect()[0]
-    fs, P = _hadoop_fs(spark, out_dir)
-    if fs.exists(P(f"{out_dir}/lsh_docs")):
-        stored_ids = (spark.read.parquet(f"{out_dir}/lsh_docs")
-                      .select(F.col("doc_id").alias(id_col)))
-    else:
-        # pre-ledger layout (index written before the ledger existed):
-        # one-time fallback probe of the bucket table, then the staged
-        # commit below starts the ledger from this batch onward
-        stored_ids = (spark.read.parquet(f"{out_dir}/lsh_buckets")
-                      .select(F.col("cand").alias(id_col)).distinct())
-        stored_ids.write.mode("overwrite").parquet(f"{out_dir}/lsh_docs")
-        stored_ids = (spark.read.parquet(f"{out_dir}/lsh_docs")
-                      .select(F.col("doc_id").alias(id_col)))
+    stored_ids = (spark.read.parquet(f"{out_dir}/lsh_docs")
+                  .select(F.col("doc_id").alias(id_col)))
     batch = new_embeddings.join(stored_ids, id_col, "left_anti") \
         .localCheckpoint(eager=True)
     if batch.isEmpty():
         return
-    # staged UNpartitioned (commit_tables' contract): bucket must stay a
-    # real string column here — staging it as a partition value would
-    # round-trip through partition type inference on the publish read
-    # and lose its leading zeros
-    _LSH_FAMILY.commit_tables(spark, out_dir, {
-        "buckets": lsh_build_index(batch, id_col=id_col,
-                                   n_bits=int(p.n_bits),
-                                   n_tables=int(p.n_tables)),
-        "docs": batch.select(F.col(id_col).alias("doc_id")).distinct()})
+    staging = _LSH_FAMILY.staging(out_dir)
+    _write_lsh_buckets(lsh_build_index(batch, id_col=id_col,
+                                       n_bits=int(p.n_bits),
+                                       n_tables=int(p.n_tables)),
+                       f"{staging}/buckets")
+    batch.select(F.col(id_col).alias("doc_id")).distinct() \
+        .write.mode("overwrite").parquet(f"{staging}/docs")
+    _LSH_FAMILY.mark(spark, out_dir)
 
 
 def write_pq_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
@@ -371,11 +372,7 @@ def write_pq_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
     books = pq_train(embeddings, m, n_centroids, n_iters)
     codes = pq_encode(embeddings, books)
     codes.write.mode("overwrite").parquet(f"{out_dir}/pq_codes")
-    rows = [(s, int(cid), [float(x) for x in cv])
-            for s, book in enumerate(books) for cid, cv in book]
-    spark.createDataFrame(
-        rows, "subspace int, cid int, codeword array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/pq_codebook")
+    _write_codebooks(spark, books, f"{out_dir}/pq_codebook")
     return books
 
 
@@ -402,12 +399,8 @@ def append_pq_index(spark: SparkSession, new_embeddings: DataFrame,
 
 def load_pq_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, list]:
     """(codes table, codebooks) written by :func:`write_pq_index`."""
-    codes = spark.read.parquet(f"{out_dir}/pq_codes")
-    by_s: dict[int, list] = {}
-    for r in spark.read.parquet(f"{out_dir}/pq_codebook").collect():
-        by_s.setdefault(r.subspace, []).append((r.cid, list(r.codeword)))
-    books = [sorted(by_s[s]) for s in sorted(by_s)]
-    return codes, books
+    return (spark.read.parquet(f"{out_dir}/pq_codes"),
+            _read_codebooks(spark, f"{out_dir}/pq_codebook"))
 
 
 def write_ivfpq_index(spark: SparkSession, embeddings: DataFrame,
@@ -429,19 +422,12 @@ def write_ivfpq_index(spark: SparkSession, embeddings: DataFrame,
                                n_iters)
     codes = ivfpq_encode(embeddings, cents, books)
     # clustered by the partition column: one file per centroid dir, not
-    # one per write task (see write_lsh_index)
+    # one per write task (see _write_lsh_buckets)
     codes.repartition(F.col("centroid_id")) \
         .write.mode("overwrite").partitionBy("centroid_id") \
         .parquet(f"{out_dir}/ivfpq_codes")
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in cents],
-        "centroid_id int, cent_vec array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/ivfpq_coarse")
-    rows = [(s, int(cid), [float(x) for x in cv])
-            for s, book in enumerate(books) for cid, cv in book]
-    spark.createDataFrame(
-        rows, "subspace int, cid int, codeword array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/ivfpq_books")
+    _write_centroids(spark, cents, f"{out_dir}/ivfpq_coarse")
+    _write_codebooks(spark, books, f"{out_dir}/ivfpq_books")
     return cents, books
 
 
@@ -467,15 +453,9 @@ def load_ivfpq_index(spark: SparkSession,
                      out_dir: str) -> tuple[DataFrame, list, list]:
     """(codes table, coarse centroids, residual codebooks) written by
     :func:`write_ivfpq_index`."""
-    codes = spark.read.parquet(f"{out_dir}/ivfpq_codes")
-    cents = [(r.centroid_id, list(r.cent_vec))
-             for r in spark.read.parquet(f"{out_dir}/ivfpq_coarse").collect()]
-    cents.sort(key=lambda t: t[0])
-    by_s: dict[int, list] = {}
-    for r in spark.read.parquet(f"{out_dir}/ivfpq_books").collect():
-        by_s.setdefault(r.subspace, []).append((r.cid, list(r.codeword)))
-    books = [sorted(by_s[s]) for s in sorted(by_s)]
-    return codes, cents, books
+    return (spark.read.parquet(f"{out_dir}/ivfpq_codes"),
+            _read_centroids(spark, f"{out_dir}/ivfpq_coarse"),
+            _read_codebooks(spark, f"{out_dir}/ivfpq_books"))
 
 
 def write_bm25_index(spark: SparkSession, documents: DataFrame,
@@ -510,18 +490,15 @@ def write_bm25_index(spark: SparkSession, documents: DataFrame,
 def append_bm25_index(spark: SparkSession, new_documents: DataFrame,
                       out_dir: str, id_col: str = "doc_id",
                       text_col: str = "text",
-                      n_term_partitions: int = 8,
-                      assume_disjoint: bool = False) -> None:
+                      n_term_partitions: int = 8) -> None:
     """Incremental BM25 maintenance: tokenize ONLY the new batch, append
     its postings, and MERGE the sidecar tables exactly.
 
-    The merge math is only exact over doc-DISJOINT batches, so by
-    default the batch is anti-joined against the stored index's doc ids
-    (one column-pruned scan of the postings' ``cand`` column) — an
+    The merge math is only exact over doc-DISJOINT batches, so the batch
+    is anti-joined against the stored index's doc ids (one
+    column-pruned scan of the postings' ``cand`` column) — an
     accidental replay of already-indexed docs is silently skipped
-    instead of double-counting df and inflating n_docs/avgdl. Callers
-    with an upstream exactly-once guarantee can pass
-    ``assume_disjoint=True`` to skip the scan.
+    instead of double-counting df and inflating n_docs/avgdl.
 
     Unlike IVF/PQ appends (pure per-row functions of a stored artifact),
     BM25's df and (n_docs, avgdl) are corpus-global — but over disjoint
@@ -533,42 +510,42 @@ def append_bm25_index(spark: SparkSession, new_documents: DataFrame,
     ``test_bm25_index_incremental_append_equals_bulk``). Cost: one
     O(batch) tokenize pass + a |vocabulary|-row sidecar rewrite; the
     corpus-sized postings are append-only, never rewritten.
-    """
-    from pyspark.sql import functions as SF
 
+    Postings, df and stats move through one staged commit: a crash
+    before ``_COMMIT`` leaves the index untouched and the retry redoes
+    the batch; after it, the next touch finishes the publish. The
+    batch's term-sorted postings files are moved into the live table as
+    they are, and the merged df and stats replace theirs.
+    """
     from .operators.retrieval import bm25_build_index
 
-    if not assume_disjoint:
-        stored_ids = (spark.read.parquet(f"{out_dir}/bm25_postings")
-                      .select(SF.col("cand").alias(id_col)).distinct())
-        new_documents = new_documents.join(stored_ids, id_col, "left_anti")
-    postings_b, df_b, stats_b = bm25_build_index(new_documents, id_col,
-                                                 text_col)
+    _BM25_FAMILY.finish(spark, out_dir)   # recover any interrupted append
+    stored_ids = (spark.read.parquet(f"{out_dir}/bm25_postings")
+                  .select(F.col("cand").alias(id_col)).distinct())
+    postings_b, df_b, stats_b = bm25_build_index(
+        new_documents.join(stored_ids, id_col, "left_anti"), id_col, text_col)
     sn = stats_b.collect()[0]
     if not sn.n_docs:           # whole batch was a replay (or empty): no-op
         return
-    (postings_b.repartition(n_term_partitions, "term")
-     .sortWithinPartitions("term")
-     .write.mode("append").parquet(f"{out_dir}/bm25_postings"))
-    # sidecars are read-merge-rewritten: materialize the merge first
-    # (localCheckpoint) so overwriting the directory being read is safe
-    old_df = spark.read.parquet(f"{out_dir}/bm25_df")
-    merged_df = (old_df.unionByName(df_b)
-                 .groupBy("term").agg(SF.sum("df").alias("df"))
-                 .localCheckpoint(eager=True))
-    merged_df.write.mode("overwrite").parquet(f"{out_dir}/bm25_df")
     so = spark.read.parquet(f"{out_dir}/bm25_stats").collect()[0]
     n = so.n_docs + sn.n_docs
     sumdl = round(so.avgdl * so.n_docs) + round(sn.avgdl * sn.n_docs)
-    spark.createDataFrame([(float(n), float(sumdl) / n)],
-                          "n_docs double, avgdl double") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/bm25_stats")
+    _BM25_FAMILY.commit_tables(spark, out_dir, {
+        "postings": (postings_b.repartition(n_term_partitions, "term")
+                     .sortWithinPartitions("term")),
+        "df": (spark.read.parquet(f"{out_dir}/bm25_df").unionByName(df_b)
+               .groupBy("term").agg(F.sum("df").alias("df"))),
+        "stats": spark.createDataFrame([(float(n), float(sumdl) / n)],
+                                       "n_docs double, avgdl double")
+                      .coalesce(1)})
 
 
 def load_bm25_index(spark: SparkSession, out_dir: str
                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(postings, df, stats) written by :func:`write_bm25_index` — pass
-    as ``bm25_topk(..., index=...)``."""
+    as ``bm25_topk(..., index=...)``. A committed append stage is rolled
+    forward first, as every loader does."""
+    _BM25_FAMILY.finish(spark, out_dir, as_reader=True)
     return (spark.read.parquet(f"{out_dir}/bm25_postings"),
             spark.read.parquet(f"{out_dir}/bm25_df"),
             spark.read.parquet(f"{out_dir}/bm25_stats"))
@@ -709,15 +686,6 @@ def write_dedup_clusters(spark: SparkSession, documents: DataFrame,
         .coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/dedup_params")
 
 
-def _finish_dedup_commit(spark: SparkSession, out_dir: str,
-                         as_reader: bool = False) -> bool:
-    """Dedup-artifact staged-commit publish: clusters + pairs swap,
-    bands keyed append, through :func:`_finish_staging` (the cluster/
-    band/pair triple previously committed non-atomically — the same
-    crash-window class ADVICE r7 flagged for the count artifacts)."""
-    return _DEDUP_FAMILY.finish(spark, out_dir, as_reader=as_reader)
-
-
 def load_dedup_clusters(spark: SparkSession, out_dir: str) -> DataFrame:
     """(doc_id, cluster_id) written by :func:`write_dedup_clusters` —
     the table keep-best canonicalization / decontamination serve from.
@@ -733,7 +701,7 @@ def load_dedup_clusters(spark: SparkSession, out_dir: str) -> DataFrame:
     left untouched (it may belong to an in-flight append; only append
     paths discard those), and the live dir is the committed truth by
     the staging invariant."""
-    _finish_dedup_commit(spark, out_dir, as_reader=True)
+    _DEDUP_FAMILY.finish(spark, out_dir, as_reader=True)
     return spark.read.parquet(f"{out_dir}/dedup_clusters")
 
 
@@ -779,7 +747,7 @@ def append_dedup_clusters(spark: SparkSession, new_documents: DataFrame,
                                   jaccard_neardup_pairs, minhash_band_keys,
                                   minhash_signatures)
 
-    _finish_dedup_commit(spark, out_dir)   # recover any interrupted append
+    _DEDUP_FAMILY.finish(spark, out_dir)   # recover any interrupted append
     p = spark.read.parquet(f"{out_dir}/dedup_params").collect()[0]
     stored_clusters = spark.read.parquet(f"{out_dir}/dedup_clusters")
     stored_bands = spark.read.parquet(f"{out_dir}/dedup_bands")
@@ -859,7 +827,7 @@ def append_dedup_clusters(spark: SparkSession, new_documents: DataFrame,
 
     clusters = clusters.localCheckpoint(eager=True)
     # all three tables move through ONE staged commit: stage, mark,
-    # publish (swap clusters/pairs, keyed-append bands) — a crash at any
+    # publish (swap clusters/pairs, move the band files in) — a crash at any
     # point leaves the artifact untouched or fully updated, never the
     # stale-bands/new-clusters mix the old in-place writes risked
     _DEDUP_FAMILY.commit_tables(spark, out_dir, {
@@ -867,13 +835,8 @@ def append_dedup_clusters(spark: SparkSession, new_documents: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# count-statistic model artifacts (KN LM, LID profiles)
+# staged multi-table commits
 # ---------------------------------------------------------------------------
-# Both models are pure functions of an ADDITIVE sufficient statistic (bigram
-# counts / per-language gram counts), so the artifact stores the counts plus
-# a doc-id ledger for replay protection; append = count batch → union →
-# re-sum — O(batch) compute, and the merged counts derive a model
-# bit-identical to a bulk retrain (shared derivation in operators/textops).
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -886,202 +849,63 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jvm.org.apache.hadoop.fs.Path
 
 
-def _publish_stage(spark: SparkSession, stage: str,
-                   swaps: dict, appends: dict,
-                   prune: dict | None = None,
-                   partition_by: dict | None = None) -> None:
-    """Idempotently publish a COMMITTED stage dir (``_COMMIT`` present).
-
-    - ``swaps``: {stage-subdir → live dir} — atomic-rename
-      replacement (skipped if the subdir is already renamed away).
-    - ``appends``: {stage-subdir → (live dir, key col)} — append
-      staged rows not already present in the live table. The replay
-      guard is FULL-ROW (null-safe) identity, not the key column alone:
-      the v1 FileOutputCommitter's job commit renames task files
-      sequentially, so a crash mid-publish can expose SOME of a key's
-      rows — a keyed anti-join would then drop the key's remaining
-      staged rows for good (ADVICE r8). Staged tables are row-distinct
-      (bands: one row per (doc_id, band); ledgers: one row per doc_id),
-      so exact-row anti-join appends exactly the missing rows and a
-      replay of a fully-landed batch is a no-op. ``key`` documents the
-      table's nominal append key for callers/tests.
-    - ``prune``: {stage-subdir → [partition cols]} — the anti-join's
-      LIVE side is filtered to the partition values the staged rows
-      actually touch (literal ``isin`` per column, so the parquet scan
-      prunes at the FILE level). Without this the replay guard of a
-      partitioned table (LSH buckets) re-scans the whole live table on
-      every publish — O(corpus) where the append itself is O(batch)
-      (ADVICE r9). Sound because a staged row outside the touched
-      rectangle cannot exist in the live partitions that were excluded.
-    - ``partition_by``: {stage-subdir → [partition cols]} — the live
-      table is partitioned on these columns; the replay append writes
-      with the same ``partitionBy`` so retried rows land under the
-      correct directories. Staged tables are ALWAYS written
-      UNpartitioned (plain columns) — staging a bit-string bucket as a
-      partition value would round-trip through partition-type
-      inference and lose its leading zeros — so the staged schema
-      carries the true column types, and the live side is read with
-      that exact schema pinned (partition values parse as the staged
-      type, never re-inferred).
-
-    Every step is idempotent, so a crash mid-publish re-runs cleanly.
-    The marker is deleted LAST: its absence means the live dirs are
-    consistent.
-    """
-    fs, P = _hadoop_fs(spark, stage)
-    for sub, live in swaps.items():
-        staged = P(f"{stage}/{sub}")
-        if fs.exists(staged):          # swap not yet done (or mid-way)
-            if fs.exists(P(live)):
-                fs.delete(P(live), True)
-            fs.rename(staged, P(live))
-    for sub, (live, key) in appends.items():
-        spath = f"{stage}/{sub}"
-        if fs.exists(P(spath)):
-            staged = spark.read.parquet(spath).alias("s")
-            livedf = spark.read.schema(staged.schema).parquet(live) \
-                .alias("l")
-            for c in (prune or {}).get(sub, []):
-                # bounded driver collect: distinct partition values the
-                # batch touches (≤ n_tables × batch buckets for LSH)
-                vals = [r[0] for r in
-                        spark.read.parquet(spath).select(c).distinct()
-                        .collect()]
-                livedf = livedf.filter(F.col(c).isin(vals)).alias("l")
-            cond = None
-            for c in staged.columns:   # full-row, null-safe identity
-                eq = F.col(f"s.{c}").eqNullSafe(F.col(f"l.{c}"))
-                cond = eq if cond is None else (cond & eq)
-            fresh = (staged.join(livedf, cond, "left_anti")
-                     .localCheckpoint(eager=True))
-            if not fresh.isEmpty():    # idempotent: replay-safe append
-                pcols = (partition_by or {}).get(sub)
-                if pcols:
-                    # cluster by the partition cols first: one file per
-                    # touched dir instead of tasks × dirs tiny files
-                    fresh = fresh.repartition(*[F.col(c) for c in pcols])
-                    fresh.write.mode("append").partitionBy(*pcols) \
-                        .parquet(live)
-                else:
-                    fresh.write.mode("append").parquet(live)
-    fs.delete(P(f"{stage}/_COMMIT"), False)  # marker last: its absence
-    fs.delete(P(stage), True)                # means live is consistent
-
-
-def _finish_staging(spark: SparkSession, staging: str,
-                    swaps: dict, appends: dict,
-                    prune: dict | None = None,
-                    partition_by: dict | None = None,
-                    as_reader: bool = False) -> bool:
-    """Roll forward (or discard) a staged multi-table artifact commit.
-
-    Multi-file artifacts (count tables + replay ledgers, the dedup
-    cluster/band/pair triple, the LSH bucket/ledger pair) must move
-    together; updating them non-atomically risks double-applying a
-    batch on crash-retry (one half landed, the other didn't) or
-    destroying a live table mid-overwrite (ADVICE r7). Append paths
-    stage EVERY updated table under ``staging/`` and drop a ``_COMMIT``
-    marker file as the single commit point; this helper publishes a
-    committed stage and discards an uncommitted one (see
-    :func:`_publish_stage` for the publish semantics).
-
-    Invariant readers rely on: ``_COMMIT`` present under ``__staging``
-    or its ``__publishing`` sibling → that staged table is the
-    committed truth; otherwise the live dir is.
-
-    Concurrency contract (ADVICE r9): publish steps are idempotent
-    under crash-RETRY but not under concurrent INTERLEAVING, so every
-    publish first CLAIMS the stage by atomically renaming
-    ``…__staging`` → ``…__publishing``. Exactly one claimer wins the
-    rename; the publish then runs on the claimed dir.
-
-    - ``as_reader=True`` (load paths, which roll committed stages
-      forward per ADVICE r8): a lost claim, or a pre-existing
-      committed ``__publishing`` dir (another actor's in-flight or
-      crashed publish), returns **False** — the caller must fall back
-      to reading the live dir read-only and MUST NOT publish. A
-      crashed claimed publish is recovered by the next maintenance
-      call (append/vacuum), never by readers racing each other. One
-      fail-LOUD window remains: a publisher that crashed between a
-      swap's delete-live and rename leaves the live dir missing until
-      maintenance rolls the claimed stage forward — readers then error
-      on the read (never serve stale/partial data silently).
-    - ``as_reader=False`` (append paths + vacuum — ONE maintenance
-      actor per artifact root at a time): a committed ``__publishing``
-      leftover is rolled forward first; a lost claim means a
-      concurrent reader won it, so this path waits (bounded) for that
-      publish to complete.
-
-    Returns True when, on return, the live dirs are the committed
-    truth; False only in the reader-fallback case.
-    """
-    import time as _time
-
-    fs, P = _hadoop_fs(spark, staging)
-    publishing = (staging[: -len("__staging")] + "__publishing"
-                  if staging.endswith("__staging")
-                  else staging + "__publishing")
-    if fs.exists(P(f"{publishing}/_COMMIT")):
-        if as_reader:
-            return False   # claimed publish in flight (or crashed —
-            #                maintenance recovers it); live is readable
-        _publish_stage(spark, publishing, swaps, appends, prune,
-                       partition_by)
-    elif fs.exists(P(publishing)) and not as_reader:
-        # marker gone → that publish completed; the dir is debris from a
-        # crash between the marker delete and the dir delete
-        fs.delete(P(publishing), True)
-    if not fs.exists(P(f"{staging}/_COMMIT")):
-        if fs.exists(P(staging)) and not as_reader:
-            fs.delete(P(staging), True)  # uncommitted debris from a
-            #                              crashed append — never truth
-        return True
-    if not fs.rename(P(staging), P(publishing)):
-        # lost the claim: a concurrent actor renamed it first
-        if as_reader:
-            return False
-        for _ in range(120):             # maintenance path: wait for the
-            if not fs.exists(P(f"{publishing}/_COMMIT")) \
-                    and not fs.exists(P(f"{staging}/_COMMIT")):
-                return True              # winner's publish to finish
-            _time.sleep(0.5)
-        raise RuntimeError(
-            f"timed out waiting for a concurrent publish of {staging}")
-    _publish_stage(spark, publishing, swaps, appends, prune,
-                   partition_by)
-    return True
+def _move_files(fs, P, src: str, dst: str) -> None:
+    """Move every data file under ``src`` to the same relative path under
+    ``dst``, one rename each, creating parent dirs. ``_``/``.``-prefixed
+    names (``_SUCCESS``, checksum files) are skipped. A file already
+    moved is gone from ``src``, so a re-run moves only what is left."""
+    if not fs.exists(P(src)):
+        return
+    for st in fs.listStatus(P(src)):
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        s, d = f"{src}/{name}", f"{dst}/{name}"
+        if st.isDirectory():
+            _move_files(fs, P, s, d)
+        elif not fs.exists(P(d)):
+            fs.mkdirs(P(dst))
+            if not fs.rename(st.getPath(), P(d)):
+                raise RuntimeError(f"publish could not move {s} to {d}")
 
 
 class _StagedFamily:
-    """ONE staged-commit family: a staging-dir base name plus the
-    declarative swap/append table spec :func:`_finish_staging` consumes.
+    """One staged-commit family: the tables of a persisted artifact that
+    must change together (LSH buckets + ledger, its compaction, the
+    dedup cluster/band/pair triple, the KN/LID counts + ledger pairs,
+    BM25 postings + df + stats). Updating them one by one risks
+    double-applying a batch on crash-retry (one half landed, the other
+    didn't) or destroying a live table mid-overwrite (ADVICE r7).
 
-    Every persisted-artifact family (LSH buckets+ledger, the dedup
-    cluster/band/pair triple, the KN/LID counts+ledger pairs, LSH
-    compaction) shares the SAME stage → presence-check → ``_COMMIT``
-    mark → rename-claim → publish mechanics — so the crash matrix
-    (claim race, stale marker, partial rename, vanished stage) lives
-    HERE once and is tested once, not re-implemented per family
-    (VERDICT r10 next #4). What differs per family is pure declaration:
+    An append writes every updated table under ``<base>__staging/<sub>``
+    in the live table's layout, then :meth:`mark` drops a ``_COMMIT``
+    marker — the single commit point — and :meth:`finish` publishes:
 
-    - ``swaps``: {stage-subdir: live-subdir} — wholesale atomic-rename
-      replacement on publish.
-    - ``appends``: {stage-subdir: (live-subdir, nominal append key)} —
-      full-row anti-join replay-guarded append.
-    - ``prune`` / ``partition_by``: per-subdir partition-column lists
-      (see :func:`_publish_stage`).
+    - ``swaps``: {stage-subdir: live dir} — the staged dir is renamed
+      over the live one.
+    - ``appends``: {stage-subdir: live dir} — each staged data file is
+      renamed to the same relative path under the live dir
+      (:func:`_move_files`). Spark names every part file uniquely, so
+      each row sits in exactly one file: a torn publish leaves the
+      unmoved files in the stage and a re-run moves just those — no row
+      is lost and none is doubled.
 
-    Live names are RELATIVE to the artifact root passed at call time.
+    Both are renames only: the publish runs no Spark job, and the
+    bit-string LSH bucket values never round-trip through partition
+    type inference. Every step is idempotent, and the marker is deleted
+    LAST: its absence means the live dirs are consistent. Readers rely
+    on: ``_COMMIT`` under ``__staging`` or its ``__publishing`` sibling
+    → the staged tables are the committed truth; otherwise the live
+    dirs are. Live names are RELATIVE to the artifact root passed at
+    call time, and the crash matrix (claim race, stale marker, partial
+    rename, vanished stage) lives here once for every family.
     """
 
     def __init__(self, base: str, swaps: dict | None = None,
-                 appends: dict | None = None, prune: dict | None = None,
-                 partition_by: dict | None = None):
+                 appends: dict | None = None):
         self.base = base
         self.swaps = swaps or {}
         self.appends = appends or {}
-        self.prune = prune
-        self.partition_by = partition_by
 
     def staging(self, out_dir: str) -> str:
         return f"{out_dir}/{self.base}__staging"
@@ -1089,14 +913,82 @@ class _StagedFamily:
     def finish(self, spark: SparkSession, out_dir: str,
                as_reader: bool = False) -> bool:
         """Roll forward a committed stage (or discard an uncommitted
-        one) — the family-specialized :func:`_finish_staging`."""
-        return _finish_staging(
-            spark, self.staging(out_dir),
-            swaps={s: f"{out_dir}/{l}" for s, l in self.swaps.items()},
-            appends={s: (f"{out_dir}/{l}", k)
-                     for s, (l, k) in self.appends.items()},
-            prune=self.prune, partition_by=self.partition_by,
-            as_reader=as_reader)
+        one).
+
+        Concurrency contract (ADVICE r9): publish steps are idempotent
+        under crash-RETRY but not under concurrent INTERLEAVING, so every
+        publish first CLAIMS the stage by atomically renaming
+        ``…__staging`` → ``…__publishing``. Exactly one claimer wins the
+        rename; the publish then runs on the claimed dir.
+
+        - ``as_reader=True`` (load paths, which roll committed stages
+          forward and then read the stable live dir, never the stage a
+          later append renames away — ADVICE r8): a lost claim, or a
+          pre-existing committed ``__publishing`` dir (another actor's
+          in-flight or crashed publish), returns **False** — the caller
+          must fall back to reading the live dir read-only and MUST NOT
+          publish. An uncommitted stage is left alone (it may belong to
+          an in-flight append). A crashed claimed publish is recovered
+          by the next maintenance call (append/vacuum), never by readers
+          racing each other. One fail-LOUD window remains: a publisher
+          that crashed between a swap's delete-live and rename leaves
+          the live dir missing until maintenance rolls the claimed
+          stage forward — readers then error on the read (never serve
+          stale/partial data silently).
+        - ``as_reader=False`` (append paths + vacuum — ONE maintenance
+          actor per artifact root at a time): a committed
+          ``__publishing`` leftover is rolled forward first, uncommitted
+          debris is deleted; a lost claim means a concurrent reader won
+          it, so this path waits (bounded) for that publish to complete.
+
+        Returns True when, on return, the live dirs are the committed
+        truth; False only in the reader-fallback case.
+        """
+        import time as _time
+
+        fs, P = _hadoop_fs(spark, out_dir)
+        staging = self.staging(out_dir)
+        publishing = f"{out_dir}/{self.base}__publishing"
+        if fs.exists(P(f"{publishing}/_COMMIT")):
+            if as_reader:
+                return False   # claimed publish in flight (or crashed —
+                #                maintenance recovers it); live is readable
+            self._publish(fs, P, publishing, out_dir)
+        elif fs.exists(P(publishing)) and not as_reader:
+            # marker gone → that publish completed; the dir is debris from a
+            # crash between the marker delete and the dir delete
+            fs.delete(P(publishing), True)
+        if not fs.exists(P(f"{staging}/_COMMIT")):
+            if fs.exists(P(staging)) and not as_reader:
+                fs.delete(P(staging), True)  # uncommitted debris from a
+                #                              crashed append — never truth
+            return True
+        if not fs.rename(P(staging), P(publishing)):
+            # lost the claim: a concurrent actor renamed it first
+            if as_reader:
+                return False
+            for _ in range(120):             # maintenance path: wait for the
+                if not fs.exists(P(f"{publishing}/_COMMIT")) \
+                        and not fs.exists(P(f"{staging}/_COMMIT")):
+                    return True              # winner's publish to finish
+                _time.sleep(0.5)
+            raise RuntimeError(
+                f"timed out waiting for a concurrent publish of {staging}")
+        self._publish(fs, P, publishing, out_dir)
+        return True
+
+    def _publish(self, fs, P, stage: str, out_dir: str) -> None:
+        """Publish a COMMITTED stage dir by renames alone."""
+        for sub, live in self.swaps.items():
+            staged, target = P(f"{stage}/{sub}"), P(f"{out_dir}/{live}")
+            if fs.exists(staged):          # swap not yet done (or mid-way)
+                if fs.exists(target):
+                    fs.delete(target, True)
+                fs.rename(staged, target)
+        for sub, live in self.appends.items():
+            _move_files(fs, P, f"{stage}/{sub}", f"{out_dir}/{live}")
+        fs.delete(P(f"{stage}/_COMMIT"), False)  # marker last: its absence
+        fs.delete(P(stage), True)                # means live is consistent
 
     def mark(self, spark: SparkSession, out_dir: str) -> None:
         """Drop ``_COMMIT`` over an already-written stage — THE commit
@@ -1105,8 +997,7 @@ class _StagedFamily:
         stage mid-write would otherwise be papered over by ``create()``
         recreating parent dirs, leaving a marker over an empty stage —
         the finish would then "publish" nothing and silently drop the
-        batch. Fail loudly instead (previously only the counts family
-        carried this guard; now every family does)."""
+        batch. Fail loudly instead."""
         staging = self.staging(out_dir)
         fs, P = _hadoop_fs(spark, out_dir)
         for sub in list(self.swaps) + list(self.appends):
@@ -1120,12 +1011,11 @@ class _StagedFamily:
 
     def commit_tables(self, spark: SparkSession, out_dir: str,
                       tables: dict[str, DataFrame]) -> None:
-        """Stage every table (plain unpartitioned overwrite — staged
-        tables carry true column types; partition values never
-        round-trip through partition-type inference), then
-        :meth:`mark`. Callers needing custom staged layouts (e.g.
-        compaction's pre-partitioned buckets) write the stage
-        themselves and call :meth:`mark` directly."""
+        """Stage every table as a plain parquet write of the DataFrame
+        as given (its partitioning and sort order become the file
+        layout), then :meth:`mark`. A table whose live layout is
+        partitioned by directory (LSH buckets) is written by its caller,
+        which then calls :meth:`mark` directly."""
         staging = self.staging(out_dir)
         for sub, df in tables.items():
             df.write.mode("overwrite").parquet(f"{staging}/{sub}")
@@ -1133,70 +1023,43 @@ class _StagedFamily:
 
 
 _LSH_FAMILY = _StagedFamily(
-    "lsh",
-    appends={"buckets": ("lsh_buckets", "cand"),
-             "docs": ("lsh_docs", "doc_id")},
-    prune={"buckets": ["t", "bucket"]},
-    partition_by={"buckets": ["t", "bucket"]})
+    "lsh", appends={"buckets": "lsh_buckets", "docs": "lsh_docs"})
 
 _LSH_COMPACT_FAMILY = _StagedFamily(
-    "lsh_compact",
-    swaps={"buckets": "lsh_buckets", "docs": "lsh_docs"})
+    "lsh_compact", swaps={"buckets": "lsh_buckets", "docs": "lsh_docs"})
 
 _DEDUP_FAMILY = _StagedFamily(
     "dedup",
     swaps={"clusters": "dedup_clusters", "pairs": "dedup_pairs"},
-    appends={"bands": ("dedup_bands", "doc_id")})
+    appends={"bands": "dedup_bands"})
 
-# recognized fixed-name families, used by vacuum_staging's recovery
-_FAMILIES = {f.base: f for f in
-             (_LSH_FAMILY, _LSH_COMPACT_FAMILY, _DEDUP_FAMILY)}
+_KN_FAMILY = _StagedFamily(
+    "kn_counts", swaps={"counts": "kn_counts"}, appends={"docs": "kn_docs"})
 
+_LID_FAMILY = _StagedFamily(
+    "lid_counts", swaps={"counts": "lid_counts"}, appends={"docs": "lid_docs"})
 
-def _counts_family(counts_name: str, docs_name: str) -> _StagedFamily:
-    """Count-statistic artifact family (KN LM / LID profiles): counts
-    swap + doc-ledger append, parameterized by table name."""
-    return _StagedFamily(
-        counts_name,
-        swaps={"counts": counts_name},
-        appends={"docs": (docs_name, "doc_id")})
+_BM25_FAMILY = _StagedFamily(
+    "bm25", swaps={"df": "bm25_df", "stats": "bm25_stats"},
+    appends={"postings": "bm25_postings"})
 
-
-def _staged_commit_finish(spark: SparkSession, out_dir: str,
-                          counts_name: str, docs_name: str,
-                          as_reader: bool = False) -> bool:
-    """Count-artifact (KN LM / LID profile) staged-commit publish:
-    counts swap + ledger append through :func:`_finish_staging`."""
-    return _counts_family(counts_name, docs_name).finish(
-        spark, out_dir, as_reader=as_reader)
+# every family by stage name, used by vacuum_staging's recovery
+_FAMILIES = {f.base: f for f in (_LSH_FAMILY, _LSH_COMPACT_FAMILY,
+                                 _DEDUP_FAMILY, _KN_FAMILY, _LID_FAMILY,
+                                 _BM25_FAMILY)}
 
 
-def _committed_counts(spark: SparkSession, out_dir: str,
-                      counts_name: str, docs_name: str) -> DataFrame:
-    """Read the committed counts table per the staging invariant.
-
-    Rolls a committed-but-unpublished stage forward FIRST and reads the
-    stable live dir — previously this returned the ``__staging/counts``
-    path, leaving the caller's lazy DataFrame bound to a directory the
-    next append deletes (ADVICE r8). The roll-forward runs under the
-    atomic rename claim (``as_reader=True``, ADVICE r9) — a lost claim
-    falls back to the live dir read-only. An uncommitted stage is left
-    untouched (may belong to an in-flight append)."""
-    _staged_commit_finish(spark, out_dir, counts_name, docs_name,
-                          as_reader=True)
-    return spark.read.parquet(f"{out_dir}/{counts_name}")
-
-
-def _staged_commit_write(spark: SparkSession, out_dir: str,
-                         counts_name: str, docs_name: str,
-                         merged_counts: DataFrame,
-                         batch_ids: DataFrame) -> None:
-    """Stage both halves, mark ``_COMMIT``, roll forward. Crash before
-    the marker → retry discards the stage and recomputes against
-    untouched live state; crash after → the next append (or this call's
-    own finish step) completes the publish exactly once."""
-    _counts_family(counts_name, docs_name).commit_tables(
-        spark, out_dir, {"docs": batch_ids, "counts": merged_counts})
+# ---------------------------------------------------------------------------
+# count-statistic model artifacts (KN LM, LID profiles)
+# ---------------------------------------------------------------------------
+# Both models are pure functions of an ADDITIVE sufficient statistic (bigram
+# counts / per-language gram counts), so the artifact stores the counts plus
+# a doc-id ledger for replay protection; append = count batch → union →
+# re-sum — O(batch) compute, and the merged counts derive a model
+# bit-identical to a bulk retrain (shared derivation in operators/textops).
+# Counts + ledger move together through one staged commit (counts swap,
+# ledger files moved in): a crash at ANY point either leaves the artifact
+# untouched or the batch fully applied.
 
 
 def write_kn_lm(spark: SparkSession, documents: DataFrame, out_dir: str,
@@ -1216,8 +1079,8 @@ def load_kn_lm(spark: SparkSession, out_dir: str) -> DataFrame:
     vocab²-bounded pass, no corpus re-read."""
     from .operators.textops import kn_model_from_counts
 
-    return kn_model_from_counts(
-        _committed_counts(spark, out_dir, "kn_counts", "kn_docs"))
+    _KN_FAMILY.finish(spark, out_dir, as_reader=True)
+    return kn_model_from_counts(spark.read.parquet(f"{out_dir}/kn_counts"))
 
 
 def append_kn_lm(spark: SparkSession, new_documents: DataFrame,
@@ -1227,14 +1090,14 @@ def append_kn_lm(spark: SparkSession, new_documents: DataFrame,
     against the doc ledger (a re-appended doc is a no-op, mirroring
     ``append_bm25_index``), count ONLY the batch, merge by re-summing
     the union — counts are additive, so merged == bulk exactly.
-    Counts + ledger move together through the staged-commit protocol
-    (``_staged_commit_write``): a crash at ANY point either leaves the
-    artifact untouched or the batch fully applied — never the
-    double-count / destroyed-counts windows of a naive two-file write.
+    Counts + ledger move together through the staged commit
+    (``_KN_FAMILY``): a crash at ANY point either leaves the artifact
+    untouched or the batch fully applied — never the double-count /
+    destroyed-counts windows of a naive two-file write.
     """
     from .operators.textops import kn_bigram_counts
 
-    _staged_commit_finish(spark, out_dir, "kn_counts", "kn_docs")
+    _KN_FAMILY.finish(spark, out_dir)
     ledger = spark.read.parquet(f"{out_dir}/kn_docs")
     batch = new_documents.join(
         ledger.select(F.col("doc_id").alias(id_col)), id_col, "left_anti")
@@ -1246,8 +1109,8 @@ def append_kn_lm(spark: SparkSession, new_documents: DataFrame,
               .localCheckpoint(eager=True))
     batch_ids = batch.select(F.col(id_col).alias("doc_id")) \
         .localCheckpoint(eager=True)
-    _staged_commit_write(spark, out_dir, "kn_counts", "kn_docs",
-                         merged, batch_ids)
+    _KN_FAMILY.commit_tables(spark, out_dir,
+                             {"docs": batch_ids, "counts": merged})
 
 
 def write_lid_profiles(spark: SparkSession, documents: DataFrame,
@@ -1271,8 +1134,9 @@ def load_lid_profiles(spark: SparkSession, out_dir: str,
     counts — bounded by |langs| × charset^n, no corpus re-read."""
     from .operators.textops import lid_profiles_from_counts
 
+    _LID_FAMILY.finish(spark, out_dir, as_reader=True)
     return lid_profiles_from_counts(
-        _committed_counts(spark, out_dir, "lid_counts", "lid_docs"),
+        spark.read.parquet(f"{out_dir}/lid_counts"),
         alpha, max_grams_per_lang)
 
 
@@ -1284,7 +1148,7 @@ def append_lid_profiles(spark: SparkSession, new_documents: DataFrame,
     merge and staged-commit crash safety as :func:`append_kn_lm`."""
     from .operators.textops import lid_gram_counts
 
-    _staged_commit_finish(spark, out_dir, "lid_counts", "lid_docs")
+    _LID_FAMILY.finish(spark, out_dir)
     ledger = spark.read.parquet(f"{out_dir}/lid_docs")
     batch = new_documents.join(
         ledger.select(F.col("doc_id").alias(id_col)), id_col, "left_anti")
@@ -1296,8 +1160,8 @@ def append_lid_profiles(spark: SparkSession, new_documents: DataFrame,
               .localCheckpoint(eager=True))
     batch_ids = batch.select(F.col(id_col).alias("doc_id")) \
         .localCheckpoint(eager=True)
-    _staged_commit_write(spark, out_dir, "lid_counts", "lid_docs",
-                         merged, batch_ids)
+    _LID_FAMILY.commit_tables(spark, out_dir,
+                              {"docs": batch_ids, "counts": merged})
 
 
 # ---------------------------------------------------------------------------
@@ -1361,9 +1225,10 @@ def vacuum_staging(spark: SparkSession, out_dir: str,
     """Garbage-collect orphaned ``*__staging`` directories under an
     artifact root.
 
-    COMMITTED stages of a RECOGNIZED family name (the dedup triple, the
-    LSH bucket/ledger pair, a counts/docs pair) are rolled forward
-    (published) through that family's finish routine, never deleted —
+    COMMITTED stages of a RECOGNIZED family name (any ``_FAMILIES``
+    entry: the LSH append and compaction, the dedup triple, the KN/LID
+    counts, BM25) are rolled forward (published by renames) through
+    that family's :meth:`_StagedFamily.finish`, never deleted —
     they are the committed truth of an interrupted append. The finish
     runs whenever ``_COMMIT`` exists REGARDLESS of which staged subdirs
     remain (ADVICE r9): a crash between the publish renames and the
@@ -1384,10 +1249,10 @@ def vacuum_staging(spark: SparkSession, out_dir: str,
     own mtime, so a top-level-mtime TTL would delete a stage mid-write
     under a slow live writer. Returns {published, deleted, kept}.
 
-    Driver-side metadata only — no Spark job beyond the publish reads a
-    committed stage itself needs. Like the staged-commit protocol it
-    cleans up after, vacuum assumes ONE maintenance actor per artifact
-    root at a time (see ``_finish_staging``)."""
+    Driver-side metadata only — no Spark job: a publish is renames
+    alone. Like the staged-commit protocol it cleans up after, vacuum
+    assumes ONE maintenance actor per artifact root at a time (see
+    ``_StagedFamily.finish``)."""
     import time as _time
 
     fs, P = _hadoop_fs(spark, out_dir)
@@ -1408,19 +1273,6 @@ def vacuum_staging(spark: SparkSession, out_dir: str,
                     stack.append(child.getPath())
         return newest
 
-    def _family_finish(base: str) -> bool:
-        """Run the staged-commit finish of a recognized family name;
-        True if the name was recognized (finish is idempotent and
-        handles empty/renamed-away stages + __publishing leftovers)."""
-        if base in _FAMILIES:
-            _FAMILIES[base].finish(spark, out_dir)
-            return True
-        if base.endswith("_counts"):
-            _counts_family(base, base.replace("_counts", "_docs")) \
-                .finish(spark, out_dir)
-            return True
-        return False
-
     finished: set = set()
     for st in fs.listStatus(root):
         name = st.getPath().getName()
@@ -1436,7 +1288,9 @@ def vacuum_staging(spark: SparkSession, out_dir: str,
         if fs.exists(P(f"{stage}/_COMMIT")):
             if base in finished:     # sibling already rolled this family
                 continue             # forward in this very sweep
-            if _family_finish(base):
+            if base in _FAMILIES:
+                # idempotent, stale markers over emptied stages included
+                _FAMILIES[base].finish(spark, out_dir)
                 finished.add(base)
                 published += 1
             else:

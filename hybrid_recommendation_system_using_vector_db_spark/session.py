@@ -14,6 +14,7 @@ per (session, key) and ``release`` frees everything a session built.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -84,13 +85,17 @@ def _temp_root(path) -> str | None:
     return os.path.join(tmp, rel.split(os.sep)[0])
 
 
+def _remove_temp_dirs(value) -> None:
+    for p in _leaves(value):
+        if (d := _temp_root(p)) is not None:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def _free(value) -> None:
     for p in _leaves(value):
-        if isinstance(p, DataFrame):
-            if p.is_cached:
-                p.unpersist()
-        elif (d := _temp_root(p)) is not None:
-            shutil.rmtree(d, ignore_errors=True)
+        if isinstance(p, DataFrame) and p.is_cached:
+            p.unpersist()
+    _remove_temp_dirs(value)
 
 
 def memo(spark: SparkSession, key: Hashable, build: Callable[[], object]):
@@ -117,3 +122,12 @@ def release(spark: SparkSession) -> None:
     app = spark.sparkContext.applicationId
     for k in [k for k in _MEMOS if k[0] == app]:
         _free(_MEMOS.pop(k))
+
+
+@atexit.register
+def _release_at_exit() -> None:
+    """At interpreter exit, remove the temp dirs of every memo no
+    ``release`` dropped (the driver contract never calls it). Nothing is
+    unpersisted: the JVM may already be gone."""
+    for value in _MEMOS.values():
+        _remove_temp_dirs(value)

@@ -589,6 +589,45 @@ def test_bm25_append_replay_is_noop(spark, tmp_path):
     assert s2.collect() == bulk_s.collect() and p2.count() == bulk_p.count()
 
 
+def test_bm25_append_crash_before_commit_retries_whole_batch(spark, tmp_path,
+                                                           monkeypatch):
+    """A crash between the append's table writes leaves the live index
+    untouched: the retry indexes the whole batch, so postings, df and
+    (n_docs, avgdl) equal a one-shot build over the union — not an
+    index whose postings already hold the batch while df and stats do
+    not."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hybrid_recommendation_system_using_vector_db_spark import pipeline
+    from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
+    from hybrid_recommendation_system_using_vector_db_spark.operators import retrieval
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    a = docs.filter(F.col("doc_id") % 2 == 0)
+    b = docs.filter(F.col("doc_id") % 2 == 1)
+    out = str(tmp_path / "bm25")
+    pipeline.write_bm25_index(spark, a, out)
+    parquet, calls = DataFrameWriter.parquet, []
+
+    def crash_on_second(self, *args, **kwargs):
+        calls.append(args)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash")
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_second)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipeline.append_bm25_index(spark, b, out)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    pipeline.append_bm25_index(spark, b, out)
+    postings, df_, stats = pipeline.load_bm25_index(spark, out)
+    bulk_p, bulk_df, bulk_s = retrieval.bm25_build_index(docs)
+    assert postings.count() == bulk_p.count()
+    assert sorted(map(tuple, df_.collect())) == \
+        sorted(map(tuple, bulk_df.collect()))
+    assert stats.collect() == bulk_s.collect()
+
+
 def _load_dedup_tables(spark, out):
     from hybrid_recommendation_system_using_vector_db_spark import pipeline
     clusters = pipeline.load_dedup_clusters(spark, out)
@@ -976,26 +1015,32 @@ def test_load_rolls_committed_stage_forward_and_serves_live_dir(spark, tmp_path)
 
 def test_staged_append_replay_guard_is_row_level(spark, tmp_path):
     """ADVICE r8: a crashed publish can expose SOME of a key's appended
-    rows (the v1 committer renames task files sequentially). The replay
-    guard anti-joins on full-row identity, so re-running the publish
-    appends exactly the missing rows — a keyed guard dropped ALL of the
-    key's remaining staged rows permanently."""
+    rows. The publish moves each staged part file into the live table by
+    rename, so re-running it moves exactly the files still staged — a
+    keyed replay guard once dropped ALL of the key's remaining staged
+    rows permanently."""
     import os
 
     from hybrid_recommendation_system_using_vector_db_spark import pipeline
 
-    live = str(tmp_path / "live")
-    staging = str(tmp_path / "staging")
+    out = str(tmp_path / "art")
+    fam = pipeline._StagedFamily("fam", appends={"bands": "live"})
+    live = f"{out}/live"
+    staging = fam.staging(out)
     rows = [(1, 0, "a"), (1, 1, "b"), (2, 0, "c"), (2, 1, "d")]
     base = [(9, 0, "z")]
     schema = "doc_id int, band int, key string"
     spark.createDataFrame(base, schema).write.parquet(live)
-    spark.createDataFrame(rows, schema).write.parquet(f"{staging}/bands")
-    # simulate the torn prior publish: one of doc 1's two band rows landed
-    spark.createDataFrame(rows[:1], schema).write.mode("append").parquet(live)
+    # staged in the live layout, one row per part file
+    spark.createDataFrame(rows, schema).write \
+        .option("maxRecordsPerFile", 1).parquet(f"{staging}/bands")
     open(os.path.join(staging, "_COMMIT"), "w").close()
-    pipeline._finish_staging(spark, staging, swaps={},
-                             appends={"bands": (live, "doc_id")})
+    # simulate the torn prior publish: one staged part file already moved
+    parts = sorted(f for f in os.listdir(f"{staging}/bands")
+                   if f.startswith("part-"))
+    assert len(parts) >= 2
+    os.rename(f"{staging}/bands/{parts[0]}", f"{live}/{parts[0]}")
+    fam.finish(spark, out)
     got = sorted(map(tuple, spark.read.parquet(live).collect()))
     assert got == sorted(base + rows)  # nothing lost, nothing doubled
     assert not os.path.exists(staging)
@@ -1166,19 +1211,24 @@ def test_lsh_append_staged_commit_crash_windows(spark, tmp_path):
                       .collect())) == want
 
     # -- window 2: committed stage with a TORN partial publish (one of
-    # the batch's bucket rows already landed in the live layout) -------
+    # the batch's staged bucket files already moved into the live
+    # layout) ---------------------------------------------------------
     out2 = str(tmp_path / "lsh2")
     pipeline.write_lsh_index(spark, a, out2, n_bits=5, n_tables=4)
     staging2 = os.path.join(out2, "lsh__staging")
     rows_b = sim.lsh_build_index(b, n_bits=5, n_tables=4) \
         .localCheckpoint(eager=True)
-    rows_b.write.parquet(f"{staging2}/buckets")
+    pipeline._write_lsh_buckets(rows_b, f"{staging2}/buckets")
     b.select(F.col("vec_id").alias("doc_id")).distinct() \
         .write.parquet(f"{staging2}/docs")
-    torn = rows_b.orderBy("cand", "t").limit(1)
-    torn.write.mode("append").partitionBy("t", "bucket") \
-        .parquet(f"{out2}/lsh_buckets")
     open(os.path.join(staging2, "_COMMIT"), "w").close()
+    staged = sorted(os.path.relpath(os.path.join(d, f), f"{staging2}/buckets")
+                    for d, _, fs in os.walk(f"{staging2}/buckets")
+                    for f in fs if f.startswith("part-"))
+    assert len(staged) >= 2
+    torn = os.path.join(out2, "lsh_buckets", staged[0])
+    os.makedirs(os.path.dirname(torn), exist_ok=True)
+    os.rename(os.path.join(staging2, "buckets", staged[0]), torn)
     # loader rolls the committed stage forward (reader claim) and serves
     # exactly the bulk rows — the torn row is not doubled, nothing lost
     assert sorted(map(key, pipeline.load_lsh_index(spark, out2)
@@ -1193,6 +1243,39 @@ def test_lsh_append_staged_commit_crash_windows(spark, tmp_path):
     led = sorted(r.doc_id for r in
                  spark.read.parquet(f"{out2}/lsh_docs").collect())
     assert led == sorted(r.vec_id for r in emb.select("vec_id").collect())
+
+
+def test_lsh_append_publish_runs_no_spark_job(spark, tmp_path):
+    """Publishing a committed LSH append stage is renames only: under one
+    job group the finish runs zero Spark jobs, and the batch lands."""
+    import os
+
+    from hybrid_recommendation_system_using_vector_db_spark import pipeline
+    from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
+    from hybrid_recommendation_system_using_vector_db_spark.operators import similarity as sim
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    a = emb.filter(F.col("vec_id") % 2 == 0)
+    b = emb.filter(F.col("vec_id") % 2 == 1)
+    out = str(tmp_path / "lsh")
+    pipeline.write_lsh_index(spark, a, out, n_bits=5, n_tables=4)
+    staging = os.path.join(out, "lsh__staging")
+    sim.lsh_build_index(b, n_bits=5, n_tables=4) \
+        .repartition("t", "bucket").write.partitionBy("t", "bucket") \
+        .parquet(f"{staging}/buckets")
+    b.select(F.col("vec_id").alias("doc_id")).write.parquet(f"{staging}/docs")
+    open(os.path.join(staging, "_COMMIT"), "w").close()
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-publish", "finish of a committed append stage")
+    try:
+        pipeline._LSH_FAMILY.finish(spark, out)
+        jobs = sc.statusTracker().getJobIdsForGroup("lsh-publish")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 0, f"publish ran {len(jobs)} Spark jobs"
+    assert not os.path.exists(staging)
+    assert pipeline.load_lsh_index(spark, out).count() == \
+        sim.lsh_build_index(emb, n_bits=5, n_tables=4).count()
 
 
 def test_reader_claim_falls_back_readonly_on_inflight_publish(spark, tmp_path):
@@ -1411,8 +1494,7 @@ def test_staged_family_mark_rejects_vanished_stage(spark, tmp_path):
 
     out = str(tmp_path / "art")
     fam = pipeline._StagedFamily(
-        "fam", swaps={"counts": "fam_counts"},
-        appends={"docs": ("fam_docs", "doc_id")})
+        "fam", swaps={"counts": "fam_counts"}, appends={"docs": "fam_docs"})
     staging = fam.staging(out)
     # only ONE of the two declared tables staged
     spark.range(3).write.mode("overwrite").parquet(f"{staging}/counts")
@@ -1421,8 +1503,7 @@ def test_staged_family_mark_rejects_vanished_stage(spark, tmp_path):
     assert not os.path.exists(f"{staging}/_COMMIT")
     # commit_tables with both tables present publishes cleanly
     fam2 = pipeline._StagedFamily(
-        "fam2", swaps={"counts": "fam2_counts"},
-        appends={"docs": ("fam2_docs", "doc_id")})
+        "fam2", swaps={"counts": "fam2_counts"}, appends={"docs": "fam2_docs"})
     spark.range(2).selectExpr("id AS doc_id").write.parquet(f"{out}/fam2_docs")
     fam2.commit_tables(spark, out, {
         "counts": spark.range(5).selectExpr("id AS c"),
