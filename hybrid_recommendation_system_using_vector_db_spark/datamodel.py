@@ -20,11 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-TABLE_NAMES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 # Catalog schema for amazon-meta ingest (SURVEY §1.2; ref :44-53)
 PRODUCTS_SCHEMA = T.StructType([
     T.StructField("asin", T.StringType(), False),
@@ -70,7 +65,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}

@@ -147,47 +147,6 @@ def model_embedder(documents: DataFrame, model_name: str = "sentence-transformer
     )
 
 
-def model_embedder_pbu(documents: DataFrame,
-                       model_name: str = "sentence-transformers/all-MiniLM-L12-v2",
-                       id_col: str = "doc_id", text_col: str = "text",
-                       model_factory=None, batch_size: int = 64) -> DataFrame:
-    """``predict_batch_udf`` variant of the model embedder (SURVEY §2.9,
-    Spark ≥ 3.4 — the API purpose-built for DL batch inference).
-
-    Same semantics and caching contract as ``model_embedder``; the
-    difference is mechanical: ``predict_batch_udf`` is a scalar column
-    expression rather than a whole-DataFrame transform, so it composes
-    with other projections in one pass and Spark handles the Arrow
-    batching + numpy conversion (``batch_size`` maps to the reference's
-    encode batch, ``Hybrid_Recom_vecdb.py:21``). The model loads once per
-    Python worker via the same ``_MODEL_CACHE`` singleton.
-    """
-    from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    model_factory = _gated_model_factory(model_name, model_factory)
-
-    def make_predict_fn():
-        import numpy as np
-
-        if model_name not in _MODEL_CACHE:  # per-worker singleton
-            _MODEL_CACHE[model_name] = model_factory()
-        model = _MODEL_CACHE[model_name]
-
-        def predict(inputs):
-            vecs = model.encode([str(t) for t in inputs], batch_size=batch_size)
-            return np.asarray(vecs, dtype=np.float32)
-
-        return predict
-
-    udf = predict_batch_udf(make_predict_fn,
-                            return_type=T.ArrayType(T.FloatType()),
-                            batch_size=batch_size)
-    return documents.select(id_col, text_col).select(
-        F.col(id_col).alias("doc_id"), udf(F.col(text_col)).alias("embedding"))
-
-
 def mean_pool_embeddings(chunk_emb: DataFrame, id_col: str = "doc_id",
                          vec_col: str = "embedding") -> DataFrame:
     """Mean-pool chunk embeddings back to one vector per parent id — the

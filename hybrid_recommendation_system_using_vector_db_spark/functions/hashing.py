@@ -46,11 +46,6 @@ def minhash(toks: Column, i: int) -> Column:
     return F.array_min(F.transform(toks, lambda t: F.md5(F.concat(F.lit(f"{i}:"), t))))
 
 
-def minhash_signature(toks: Column, n_hashes: int = 4) -> Column:
-    """Concatenated n-hash MinHash signature (one LSH band of width n)."""
-    return F.concat_ws("|", *[minhash(toks, i) for i in range(n_hashes)])
-
-
 def hex_nibble_value(c: Column) -> Column:
     """Value 0-15 of a single lowercase hex char (portable: ascii math)."""
     a = F.ascii(c)

@@ -61,12 +61,6 @@ def l2_norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize; zero vectors stay zero."""
-    n = l2_norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: x / n)).otherwise(a)
-
-
 def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     """Cosine similarity with zero-norm guard (→ 0.0)."""
     denom = l2_norm(a, dim) * l2_norm(b, dim)

@@ -136,19 +136,6 @@ def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
         do, schema="doc_id long, frame_idx int, frame_payload binary")
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real image decode — requires PIL, not available in this container."""
-    try:
-        from PIL import Image  # type: ignore
-        import io
-        return Image.open(io.BytesIO(payload))
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "image decode requires PIL; use extract_media_features' "
-            "deterministic fake path for plumbing tests"
-        ) from e
-
-
 def extract_media_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 

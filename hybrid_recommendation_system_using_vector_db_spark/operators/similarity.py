@@ -777,91 +777,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, n_centroids: int = 1
     return topk_per_query(scored, k).select("qid", "cand", "score", "rank")
 
 
-def hnsw_topk(queries: DataFrame, corpus: DataFrame, k: int,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              m: int = 16, ef_construction: int = 200, ef_search: int = 64,
-              index_factory=None) -> DataFrame:
-    """Approximate cosine top-k via per-partition HNSW graphs (hnswlib).
-
-    The reference's index IS hnswlib-backed ChromaDB
-    (``Hybrid_Recom_vecdb.py:157`` ``{"hnsw:space": "cosine"}``); this is
-    SURVEY §4 option (c): each corpus partition builds an in-memory HNSW
-    graph over its own vectors inside ``mapInPandas`` and answers the
-    broadcast query matrix locally, then the exact global top-k is a
-    small window over ≤ partitions·|Q|·k rows — the same
-    local-top-k/global-merge shape as ``cosine_topk_gemm``, so shuffle
-    volume is independent of corpus size. Per-query work is
-    O(partitions · log n_part) instead of a full scan; at 100 TB the
-    partition graphs would be built once and persisted alongside the
-    parquet (index/serve split), exactly like the LSH/IVF indexes.
-
-    hnswlib is optional (not in this container): gated behind an
-    import-try like PIL/sentence-transformers; ``index_factory`` injects
-    a compatible fake for tests (``(dim) -> obj`` with ``add_items``,
-    ``knn_query``). Scores are 1 − cosine-distance, rounded with the
-    repo-wide fround convention, ties broken by candidate id — NOTE:
-    HNSW is graph-approximate, so unlike the LSH/IVF paths its recall is
-    not engine-reproducible and this operator carries no DuckDB oracle
-    (rows-only check); the recall gate lives with the library-backed
-    deployment.
-    """
-    if index_factory is None:
-        try:
-            import hnswlib  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "hnswlib not installed in this environment; use lsh_topk "
-                "with multiprobe=1 (recall@10 >= 0.9) or cosine_topk_gemm"
-            ) from e
-
-        def index_factory(dim: int):
-            import hnswlib as _h
-            idx = _h.Index(space="cosine", dim=dim)
-            # max_elements is resized per batch by the caller below
-            idx.init_index(max_elements=1, ef_construction=ef_construction, M=m)
-            idx.set_ef(ef_search)
-            return idx
-
-    import numpy as np
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "qid long, cand long, score double, rank int")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float32)
-
-    def local_topk(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float32)
-            idx = index_factory(c_mat.shape[1])
-            if hasattr(idx, "resize_index"):
-                idx.resize_index(len(c_ids))
-            idx.add_items(c_mat, c_ids)
-            # k+1 then drop self: a query vector present in this partition
-            # returns itself as its own nearest neighbor (B4 exclusion)
-            kk = min(k + 1, len(c_ids))
-            labels, dists = idx.knn_query(q_mat, k=kk)
-            scale = 10.0 ** ROUND_SCORE
-            out_q, out_c, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                for lab, dist in zip(labels[j], dists[j]):
-                    if int(lab) == int(qid):
-                        continue
-                    score = np.floor((1.0 - float(dist)) * scale + 0.5) / scale
-                    out_q.append(int(qid)); out_c.append(int(lab)); out_s.append(score)
-            yield pd.DataFrame({"qid": out_q, "cand": out_c, "score": out_s})
-
-    local = corpus.select(id_col, vec_col).mapInPandas(
-        local_topk, schema="qid long, cand long, score double")
-    return topk_per_query(local, k).select("qid", "cand", "score", "rank")
-
-
 def embedding_neardup_pairs(corpus: DataFrame, threshold: float = 0.9,
                             id_col: str = "vec_id", vec_col: str = "embedding",
                             n_bits: int = 4, n_salts: int = 32,

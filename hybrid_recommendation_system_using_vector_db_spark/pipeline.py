@@ -74,26 +74,15 @@ def build_index(spark: SparkSession, meta_path: str, out_dir: str,
         .select("asin", "doc", "title", "group", "embedding")
     )
     index = with_lsh_bucket(index, "embedding", lsh_bits)
-    # A3 sink: partitioned by LSH bucket → ANN probes prune partitions;
-    # clustered by the partition column first so each bucket dir gets
-    # one file per bucket, not one per write task (see _write_lsh_buckets)
-    index.repartition(F.col("bucket")) \
-        .write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/index")
-
-    return {
-        "products": spark.read.parquet(f"{out_dir}/products").count(),
-        "edges": spark.read.parquet(f"{out_dir}/edges").count(),
-        "index": spark.read.parquet(f"{out_dir}/index").count(),
-    }
+    # A3 sink: partitioned by LSH bucket → ANN probes prune partitions
+    _write_table(index, f"{out_dir}/index", ("bucket",))
+    return {name: df.count() for name, df in load_index(spark, out_dir).items()}
 
 
 def load_index(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     """Load the three pipeline tables written by :func:`build_index`."""
-    return {
-        "products": spark.read.parquet(f"{out_dir}/products"),
-        "edges": spark.read.parquet(f"{out_dir}/edges"),
-        "index": spark.read.parquet(f"{out_dir}/index"),
-    }
+    return {name: spark.read.parquet(f"{out_dir}/{name}")
+            for name in ("products", "edges", "index")}
 
 
 def write_ivf_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
@@ -110,12 +99,8 @@ def write_ivf_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
     from .operators.similarity import ivf_build_lists, kmeans_centroids_local
 
     cents = kmeans_centroids_local(embeddings, n_centroids, n_iters)
-    lists = ivf_build_lists(embeddings, cents)
-    # clustered by the partition column: one file per centroid dir, not
-    # one per write task (see _write_lsh_buckets)
-    lists.repartition(F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(f"{out_dir}/ivf_lists")
+    _write_table(ivf_build_lists(embeddings, cents), f"{out_dir}/ivf_lists",
+                 _IVF_FAMILY.by["lists"])
     _write_centroids(spark, cents, f"{out_dir}/ivf_codebook")
     return cents
 
@@ -157,36 +142,41 @@ def _read_codebooks(spark: SparkSession, path: str) -> list:
 
 
 def load_ivf_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, list]:
-    """(inverted lists, codebook) written by :func:`write_ivf_index`."""
+    """(inverted lists, codebook) written by :func:`write_ivf_index`,
+    after rolling a committed append stage forward."""
+    _IVF_FAMILY.finish(spark, out_dir, as_reader=True)
     return (spark.read.parquet(f"{out_dir}/ivf_lists"),
             _read_centroids(spark, f"{out_dir}/ivf_codebook"))
 
 
 def append_ivf_index(spark: SparkSession, new_embeddings: DataFrame,
                      out_dir: str) -> None:
-    """Incremental IVF maintenance: assign ONLY the new batch with the
-    STORED codebook and append its list rows to the partitioned layout.
+    """Incremental IVF maintenance: assign ONLY the vectors not yet in
+    the lists with the STORED codebook, and add their list rows to the
+    ``centroid_id=`` directories they touch.
 
     Replaces the reference's destroy-and-recreate (A4,
-    ``Hybrid_Recom_vecdb.py:28`` ALWAYS_FRESH_RUN) with partition-local
-    appends: dynamic-partition append writes files only under the
-    ``centroid_id=`` directories the batch actually touches, so index
-    growth costs O(batch), never O(corpus). Serving is unchanged —
-    ``load_ivf_index`` reads the union and probes prune at the file
-    level exactly as before. Because assignment is a pure function of
-    the stored codebook, an index built incrementally is ROW-IDENTICAL
-    to one built from the full corpus in one shot (pinned by
-    ``test_ivf_index_incremental_append_equals_bulk``). Re-train the
-    codebook (full rewrite) only when drift degrades recall — the
-    standard IVF maintenance trade.
+    ``Hybrid_Recom_vecdb.py:28`` ALWAYS_FRESH_RUN) with an O(batch)
+    append: the family guard (``_IVF_FAMILY.new_rows``) drops ids the
+    lists already hold, the new rows are staged in the live layout, and
+    ``mark`` publishes them by moving the staged files in. A replayed
+    batch is a no-op, and a crash before ``_COMMIT`` leaves the live
+    lists unchanged. Serving is unchanged — ``load_ivf_index`` reads the
+    union and probes prune at the file level. Because assignment is a
+    pure function of the stored codebook, an index built incrementally
+    is ROW-IDENTICAL to one built from the full corpus in one shot
+    (pinned by ``test_ivf_index_incremental_append_equals_bulk``).
+    Re-train the codebook (full rewrite) only when drift degrades
+    recall — the standard IVF maintenance trade.
     """
     from .operators.similarity import ivf_build_lists
 
+    batch = _IVF_FAMILY.new_rows(spark, out_dir, new_embeddings, "vec_id")
+    if batch is None:
+        return
     _, cents = load_ivf_index(spark, out_dir)
-    ivf_build_lists(new_embeddings, cents) \
-        .repartition(F.col("centroid_id")) \
-        .write.mode("append") \
-        .partitionBy("centroid_id").parquet(f"{out_dir}/ivf_lists")
+    _IVF_FAMILY.commit_tables(spark, out_dir,
+                              {"lists": ivf_build_lists(batch, cents)})
 
 
 def write_lsh_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
@@ -206,9 +196,8 @@ def write_lsh_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
     """
     from .operators.similarity import lsh_build_index
 
-    _write_lsh_buckets(lsh_build_index(embeddings, n_bits=n_bits,
-                                       n_tables=n_tables),
-                       f"{out_dir}/lsh_buckets")
+    _write_table(lsh_build_index(embeddings, n_bits=n_bits, n_tables=n_tables),
+                 f"{out_dir}/lsh_buckets", _LSH_FAMILY.by["buckets"])
     # compact appended-ids ledger: the append replay guard probes THIS
     # (one narrow row per vector) instead of distinct-scanning the whole
     # bucket table (n_tables rows × vector payload each) — ADVICE r9
@@ -219,19 +208,23 @@ def write_lsh_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
         .coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/lsh_params")
 
 
-def _write_lsh_buckets(df: DataFrame, path: str) -> None:
-    """Write bucket rows in the live ``t=/bucket=`` layout — the one
-    writer of the index, its compaction rewrite and an append's stage.
+def _write_table(df: DataFrame, path: str, by: tuple = ()) -> None:
+    """Overwrite ``path`` with ``df`` — the one writer of every staged
+    table and of every directory-partitioned one, bulk or staged. With
+    partition columns ``by`` the table lands in ``col=value/``
+    directories; a flat table keeps the partitioning and sort order of
+    ``df`` as given.
 
-    Clustered by the partition columns before the dynamic-partition
-    write: without it every write task opens a file in every (t,
-    bucket) dir it sees — tasks × dirs tiny files (measured 45 s of
-    filesystem ops for a 16k-row index at sf0.1). Hash-clustered, each
-    (t, bucket) group lands in exactly one task → one file per dir. At
-    very large scale add a salt column to the repartition for
-    intra-bucket parallelism; the layout is unchanged."""
-    df.repartition(F.col("t"), F.col("bucket")) \
-        .write.mode("overwrite").partitionBy("t", "bucket").parquet(path)
+    A partitioned write is clustered by ``by`` first: without it every
+    write task opens a file in every directory it sees — tasks × dirs
+    tiny files (measured 45 s of filesystem ops for a 16k-row LSH index
+    at sf0.1). Hash-clustered, each group lands in exactly one task →
+    one file per dir. At very large scale add a salt column to the
+    repartition for intra-partition parallelism; the layout is
+    unchanged."""
+    if by:
+        df = df.repartition(*by)
+    df.write.mode("overwrite").partitionBy(*by).parquet(path)
 
 
 def load_lsh_index(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -293,16 +286,13 @@ def compact_lsh_index(spark: SparkSession, out_dir: str,
 
     _LSH_FAMILY.finish(spark, out_dir)          # fold pending appends first
     _LSH_COMPACT_FAMILY.finish(spark, out_dir)  # recover a crashed compaction
-    staging = _LSH_COMPACT_FAMILY.staging(out_dir)
     df = _read_lsh_buckets(spark, out_dir)
     files_in = len(df.inputFiles())
     rows = df.count()
-    _write_lsh_buckets(df, f"{staging}/buckets")
     docs = spark.read.parquet(f"{out_dir}/lsh_docs")
     n_files = max(1, math.ceil(docs.count() / max(1, target_rows_per_file)))
-    docs.repartition(n_files).write.mode("overwrite") \
-        .parquet(f"{staging}/docs")
-    _LSH_COMPACT_FAMILY.mark(spark, out_dir)     # the commit point
+    _LSH_COMPACT_FAMILY.commit_tables(spark, out_dir, {
+        "buckets": df, "docs": docs.repartition(n_files)})
     files_out = len(_read_lsh_buckets(spark, out_dir).inputFiles())
     return {"files_in": files_in, "files_out": files_out, "rows": rows}
 
@@ -314,43 +304,35 @@ def append_lsh_index(spark: SparkSession, new_embeddings: DataFrame,
     directories the batch touches, so growth costs O(batch), never
     O(corpus).
 
-    Replay guard (ADVICE r9): the batch anti-joins the compact
+    Replay guard (ADVICE r9): the family guard anti-joins the compact
     ``lsh_docs`` ledger (one narrow row per stored vector), never a
     distinct over the full bucket table — a re-appended vector is a
     no-op at O(|ledger ids|) probe cost, with no vector payloads read.
 
     Crash safety (VERDICT r9 #7): bucket rows and ledger rows move
-    through the SAME staged commit as the dedup/KN/LID/BM25 families.
-    Both are staged in the live layout, ``_COMMIT`` is marked, and the
-    publish moves each staged file to the same relative path in the
-    live table by rename — no Spark job. A crash before the marker
-    discards the stage on the next append; a crash after leaves the
-    unmoved files in the stage, and the next finish moves them. Every
-    row sits in exactly one uniquely named file, so a torn publish can
-    neither double-count nor lose rows.
+    through the SAME staged commit as every other append. Both are
+    staged in the live layout, ``_COMMIT`` is marked, and the publish
+    moves each staged file to the same relative path in the live table
+    by rename — no Spark job. A crash before the marker discards the
+    stage on the next append; a crash after leaves the unmoved files in
+    the stage, and the next finish moves them. Every row sits in exactly
+    one uniquely named file, so a torn publish can neither double-count
+    nor lose rows.
 
     Because bucketing is a pure function of the params, an index grown
     incrementally is ROW-IDENTICAL to a bulk rebuild over the union
     (pinned by ``test_lsh_index_incremental_append_equals_bulk``)."""
     from .operators.similarity import lsh_build_index
 
-    _LSH_FAMILY.finish(spark, out_dir)          # recover any interrupted append
-    _LSH_COMPACT_FAMILY.finish(spark, out_dir)  # …or interrupted compaction
-    p = spark.read.parquet(f"{out_dir}/lsh_params").collect()[0]
-    stored_ids = (spark.read.parquet(f"{out_dir}/lsh_docs")
-                  .select(F.col("doc_id").alias(id_col)))
-    batch = new_embeddings.join(stored_ids, id_col, "left_anti") \
-        .localCheckpoint(eager=True)
-    if batch.isEmpty():
+    _LSH_COMPACT_FAMILY.finish(spark, out_dir)  # recover a crashed compaction
+    batch = _LSH_FAMILY.new_rows(spark, out_dir, new_embeddings, id_col)
+    if batch is None:
         return
-    staging = _LSH_FAMILY.staging(out_dir)
-    _write_lsh_buckets(lsh_build_index(batch, id_col=id_col,
-                                       n_bits=int(p.n_bits),
-                                       n_tables=int(p.n_tables)),
-                       f"{staging}/buckets")
-    batch.select(F.col(id_col).alias("doc_id")).distinct() \
-        .write.mode("overwrite").parquet(f"{staging}/docs")
-    _LSH_FAMILY.mark(spark, out_dir)
+    p = spark.read.parquet(f"{out_dir}/lsh_params").collect()[0]
+    _LSH_FAMILY.commit_tables(spark, out_dir, {
+        "buckets": lsh_build_index(batch, id_col=id_col, n_bits=int(p.n_bits),
+                                   n_tables=int(p.n_tables)),
+        "docs": batch.select(F.col(id_col).alias("doc_id")).distinct()})
 
 
 def write_pq_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
@@ -378,27 +360,33 @@ def write_pq_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
 
 def append_pq_index(spark: SparkSession, new_embeddings: DataFrame,
                     out_dir: str) -> None:
-    """Incremental PQ maintenance: encode ONLY the new batch with the
-    STORED codebooks and append to the codes table — the
-    :func:`append_ivf_index` story for the compressed tier. Encoding is
-    a pure function of the codebooks, so an incrementally-grown codes
+    """Incremental PQ maintenance: encode ONLY the vectors the codes
+    table does not hold yet with the STORED codebooks, stage their codes
+    and publish them by ``mark`` — the :func:`append_ivf_index` guard →
+    stage → ``mark`` path for the compressed tier, so a replayed batch
+    is a no-op and a crash before ``_COMMIT`` changes nothing. Encoding
+    is a pure function of the codebooks, so an incrementally-grown codes
     table is row-identical to a one-shot encode of the full corpus with
     the same books (pinned by
-    ``test_pq_index_incremental_append_equals_bulk``); cost is O(batch),
-    map-only, zero shuffles. Codebooks are NOT retrained — when the new
-    data drifts off the trained distribution the quantization error
-    rises (the SQ clamp note in ``scalar_quantize`` is the same trade);
-    re-train + full rewrite is the drift response, not the append path.
+    ``test_pq_index_incremental_append_equals_bulk``); cost is O(batch).
+    Codebooks are NOT retrained — when the new data drifts off the
+    trained distribution the quantization error rises (the SQ clamp
+    note in ``scalar_quantize`` is the same trade); re-train + full
+    rewrite is the drift response, not the append path.
     """
     from .operators.similarity import pq_encode
 
+    batch = _PQ_FAMILY.new_rows(spark, out_dir, new_embeddings, "vec_id")
+    if batch is None:
+        return
     _, books = load_pq_index(spark, out_dir)
-    pq_encode(new_embeddings, books).write.mode("append") \
-        .parquet(f"{out_dir}/pq_codes")
+    _PQ_FAMILY.commit_tables(spark, out_dir, {"codes": pq_encode(batch, books)})
 
 
 def load_pq_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, list]:
-    """(codes table, codebooks) written by :func:`write_pq_index`."""
+    """(codes table, codebooks) written by :func:`write_pq_index`, after
+    rolling a committed append stage forward."""
+    _PQ_FAMILY.finish(spark, out_dir, as_reader=True)
     return (spark.read.parquet(f"{out_dir}/pq_codes"),
             _read_codebooks(spark, f"{out_dir}/pq_codebook"))
 
@@ -420,12 +408,8 @@ def write_ivfpq_index(spark: SparkSession, embeddings: DataFrame,
 
     cents, books = ivfpq_train(embeddings, n_centroids, m, pq_centroids,
                                n_iters)
-    codes = ivfpq_encode(embeddings, cents, books)
-    # clustered by the partition column: one file per centroid dir, not
-    # one per write task (see _write_lsh_buckets)
-    codes.repartition(F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(f"{out_dir}/ivfpq_codes")
+    _write_table(ivfpq_encode(embeddings, cents, books),
+                 f"{out_dir}/ivfpq_codes", _IVFPQ_FAMILY.by["codes"])
     _write_centroids(spark, cents, f"{out_dir}/ivfpq_coarse")
     _write_codebooks(spark, books, f"{out_dir}/ivfpq_books")
     return cents, books
@@ -433,26 +417,31 @@ def write_ivfpq_index(spark: SparkSession, embeddings: DataFrame,
 
 def append_ivfpq_index(spark: SparkSession, new_embeddings: DataFrame,
                        out_dir: str) -> None:
-    """Incremental IVF-PQ maintenance: encode ONLY the new batch with the
-    STORED coarse centroids + residual codebooks and dynamic-partition-
-    append — files land only under the ``centroid_id=`` directories the
-    batch touches. Encoding is a pure per-row function of both stored
-    artifacts, so incremental == bulk row-identically (pinned by
-    ``test_ivfpq_index_incremental_append_equals_bulk``); the
-    ``append_ivf_index``/``append_pq_index`` contract combined."""
+    """Incremental IVF-PQ maintenance: encode ONLY the vectors the codes
+    table does not hold yet with the STORED coarse centroids + residual
+    codebooks, stage them in the ``centroid_id=`` layout and publish by
+    ``mark`` — files land only under the directories the batch touches.
+    Guard → stage → ``mark`` as in :func:`append_ivf_index`: a replayed
+    batch is a no-op, a crash before ``_COMMIT`` changes nothing.
+    Encoding is a pure per-row function of both stored artifacts, so
+    incremental == bulk row-identically (pinned by
+    ``test_ivfpq_index_incremental_append_equals_bulk``)."""
     from .operators.similarity import ivfpq_encode
 
+    batch = _IVFPQ_FAMILY.new_rows(spark, out_dir, new_embeddings, "vec_id")
+    if batch is None:
+        return
     _, cents, books = load_ivfpq_index(spark, out_dir)
-    ivfpq_encode(new_embeddings, cents, books) \
-        .repartition(F.col("centroid_id")) \
-        .write.mode("append") \
-        .partitionBy("centroid_id").parquet(f"{out_dir}/ivfpq_codes")
+    _IVFPQ_FAMILY.commit_tables(spark, out_dir,
+                                {"codes": ivfpq_encode(batch, cents, books)})
 
 
 def load_ivfpq_index(spark: SparkSession,
                      out_dir: str) -> tuple[DataFrame, list, list]:
     """(codes table, coarse centroids, residual codebooks) written by
-    :func:`write_ivfpq_index`."""
+    :func:`write_ivfpq_index`, after rolling a committed append stage
+    forward."""
+    _IVFPQ_FAMILY.finish(spark, out_dir, as_reader=True)
     return (spark.read.parquet(f"{out_dir}/ivfpq_codes"),
             _read_centroids(spark, f"{out_dir}/ivfpq_coarse"),
             _read_codebooks(spark, f"{out_dir}/ivfpq_books"))
@@ -494,9 +483,9 @@ def append_bm25_index(spark: SparkSession, new_documents: DataFrame,
     """Incremental BM25 maintenance: tokenize ONLY the new batch, append
     its postings, and MERGE the sidecar tables exactly.
 
-    The merge math is only exact over doc-DISJOINT batches, so the batch
-    is anti-joined against the stored index's doc ids (one
-    column-pruned scan of the postings' ``cand`` column) — an
+    The merge math is only exact over doc-DISJOINT batches, so the
+    family guard anti-joins the batch against the stored index's doc
+    ids (one column-pruned scan of the postings' ``cand`` column) — an
     accidental replay of already-indexed docs is silently skipped
     instead of double-counting df and inflating n_docs/avgdl.
 
@@ -519,14 +508,11 @@ def append_bm25_index(spark: SparkSession, new_documents: DataFrame,
     """
     from .operators.retrieval import bm25_build_index
 
-    _BM25_FAMILY.finish(spark, out_dir)   # recover any interrupted append
-    stored_ids = (spark.read.parquet(f"{out_dir}/bm25_postings")
-                  .select(F.col("cand").alias(id_col)).distinct())
-    postings_b, df_b, stats_b = bm25_build_index(
-        new_documents.join(stored_ids, id_col, "left_anti"), id_col, text_col)
-    sn = stats_b.collect()[0]
-    if not sn.n_docs:           # whole batch was a replay (or empty): no-op
+    batch = _BM25_FAMILY.new_rows(spark, out_dir, new_documents, id_col)
+    if batch is None:
         return
+    postings_b, df_b, stats_b = bm25_build_index(batch, id_col, text_col)
+    sn = stats_b.collect()[0]
     so = spark.read.parquet(f"{out_dir}/bm25_stats").collect()[0]
     n = so.n_docs + sn.n_docs
     sumdl = round(so.avgdl * so.n_docs) + round(sn.avgdl * sn.n_docs)
@@ -573,19 +559,20 @@ def write_maxsim_index(spark: SparkSession, documents: DataFrame,
                              overlap=overlap)
     cv = hashing_embedder(chunks, id_col=["doc_id", "chunk_id"],
                           text_col="chunk_text")
-    (maxsim_component_index(cv)
-     .write.mode("overwrite").partitionBy("pos")
-     .parquet(f"{out_dir}/maxsim_components"))
+    _write_table(maxsim_component_index(cv), f"{out_dir}/maxsim_components",
+                 _MAXSIM_FAMILY.by["components"])
 
 
 def append_maxsim_index(spark: SparkSession, new_documents: DataFrame,
                         out_dir: str, chunk_tokens: int = 64,
                         overlap: int = 16) -> None:
     """Incremental MaxSim maintenance: chunk + embed + summarize ONLY the
-    new batch and dynamic-partition-append under the same ``pos=``
-    layout. The per-(doc, pos) extrema depend only on a document's OWN
-    chunks (and the hashing embedder is stateless), so over disjoint doc
-    sets incremental == bulk row-identically (pinned by
+    docs the summary does not hold yet (the family guard checks
+    ``maxsim_components.cand``), stage their rows in the ``pos=`` layout
+    and publish by ``mark``: a replayed batch is a no-op, a crash before
+    ``_COMMIT`` changes nothing. The per-(doc, pos) extrema depend only
+    on a document's OWN chunks (and the hashing embedder is stateless),
+    so incremental == bulk row-identically (pinned by
     ``test_maxsim_index_incremental_append_equals_bulk``). Cost is
     O(batch); chunk/embed params must match the original build — the
     same contract as the IVF codebook."""
@@ -593,18 +580,21 @@ def append_maxsim_index(spark: SparkSession, new_documents: DataFrame,
     from .operators.retrieval import maxsim_component_index
     from .operators.textops import chunk_documents
 
-    chunks = chunk_documents(new_documents, chunk_tokens=chunk_tokens,
-                             overlap=overlap)
+    batch = _MAXSIM_FAMILY.new_rows(spark, out_dir, new_documents, "doc_id")
+    if batch is None:
+        return
+    chunks = chunk_documents(batch, chunk_tokens=chunk_tokens, overlap=overlap)
     cv = hashing_embedder(chunks, id_col=["doc_id", "chunk_id"],
                           text_col="chunk_text")
-    (maxsim_component_index(cv)
-     .write.mode("append").partitionBy("pos")
-     .parquet(f"{out_dir}/maxsim_components"))
+    _MAXSIM_FAMILY.commit_tables(spark, out_dir,
+                                 {"components": maxsim_component_index(cv)})
 
 
 def load_maxsim_index(spark: SparkSession, out_dir: str) -> DataFrame:
     """The component summary written by :func:`write_maxsim_index` —
-    pass as ``maxsim_topk(..., components=...)``."""
+    pass as ``maxsim_topk(..., components=...)``. A committed append
+    stage is rolled forward first."""
+    _MAXSIM_FAMILY.finish(spark, out_dir, as_reader=True)
     return spark.read.parquet(f"{out_dir}/maxsim_components")
 
 
@@ -720,8 +710,8 @@ def append_dedup_clusters(spark: SparkSession, new_documents: DataFrame,
     the whole stored corpus' text).
 
     Algorithm (exactness per bucket-adjacency semantics):
-    1. replay guard — drop batch docs already clustered (mirrors
-       ``append_bm25_index``).
+    1. replay guard — the family guard drops batch docs already
+       clustered (the ledger is ``dedup_clusters.doc_id``).
     2. sign + band ONLY the batch; touched buckets = its (band, key)s.
     3. expand to every bucket of every old doc seen in a touched bucket
        (one hop, no cascade: adjacency only changes in touched buckets,
@@ -747,20 +737,17 @@ def append_dedup_clusters(spark: SparkSession, new_documents: DataFrame,
                                   jaccard_neardup_pairs, minhash_band_keys,
                                   minhash_signatures)
 
-    _DEDUP_FAMILY.finish(spark, out_dir)   # recover any interrupted append
+    batch = _DEDUP_FAMILY.new_rows(spark, out_dir, new_documents, id_col)
+    if batch is None:
+        return
     p = spark.read.parquet(f"{out_dir}/dedup_params").collect()[0]
     stored_clusters = spark.read.parquet(f"{out_dir}/dedup_clusters")
     stored_bands = spark.read.parquet(f"{out_dir}/dedup_bands")
     stored_pairs = spark.read.parquet(f"{out_dir}/dedup_pairs")
 
-    batch = new_documents.join(
-        stored_clusters.select(F.col("doc_id").alias(id_col)),
-        id_col, "left_anti")
     sigs_b = minhash_signatures(batch, p.n_hashes, id_col, text_col)
     bands_b = minhash_band_keys(sigs_b, p.n_hashes, p.n_bands) \
         .localCheckpoint(eager=True)
-    if bands_b.isEmpty():
-        return
 
     touched = bands_b.select("band", "key").distinct()
     affected_old = (stored_bands.join(touched, ["band", "key"], "left_semi")
@@ -871,15 +858,19 @@ def _move_files(fs, P, src: str, dst: str) -> None:
 
 class _StagedFamily:
     """One staged-commit family: the tables of a persisted artifact that
-    must change together (LSH buckets + ledger, its compaction, the
-    dedup cluster/band/pair triple, the KN/LID counts + ledger pairs,
-    BM25 postings + df + stats). Updating them one by one risks
-    double-applying a batch on crash-retry (one half landed, the other
-    didn't) or destroying a live table mid-overwrite (ADVICE r7).
+    change together in one append — the IVF lists, the PQ codes, the
+    IVF-PQ codes, the MaxSim components, LSH buckets + ledger, its
+    compaction, the dedup cluster/band/pair triple, the KN/LID counts +
+    ledger pairs, BM25 postings + df + stats. Updating them one by one
+    risks double-applying a batch on crash-retry (one half landed, the
+    other didn't) or destroying a live table mid-overwrite (ADVICE r7).
 
-    An append writes every updated table under ``<base>__staging/<sub>``
-    in the live table's layout, then :meth:`mark` drops a ``_COMMIT``
-    marker — the single commit point — and :meth:`finish` publishes:
+    Every append runs the same three steps: :meth:`new_rows` (the replay
+    guard) keeps the batch rows whose id is not in the family's
+    ``ledger``; :meth:`commit_tables` writes every updated table under
+    ``<base>__staging/<sub>`` in the live table's layout (partition
+    columns ``by[sub]``); :meth:`mark` drops a ``_COMMIT`` marker — the
+    single commit point — and :meth:`finish` publishes:
 
     - ``swaps``: {stage-subdir: live dir} — the staged dir is renamed
       over the live one.
@@ -902,13 +893,30 @@ class _StagedFamily:
     """
 
     def __init__(self, base: str, swaps: dict | None = None,
-                 appends: dict | None = None):
+                 appends: dict | None = None, ledger: tuple | None = None,
+                 by: dict | None = None):
         self.base = base
         self.swaps = swaps or {}
         self.appends = appends or {}
+        self.ledger = ledger   # (live table, id column) the guard anti-joins
+        self.by = by or {}     # {stage-subdir: partition columns}
 
     def staging(self, out_dir: str) -> str:
         return f"{out_dir}/{self.base}__staging"
+
+    def new_rows(self, spark: SparkSession, out_dir: str, batch: DataFrame,
+                 id_col: str) -> DataFrame | None:
+        """The replay guard of every append: roll an earlier stage
+        forward (or discard an uncommitted one), then keep the ``batch``
+        rows whose ``id_col`` the ledger column does not hold,
+        materialized once. None when nothing is new, so a replayed or
+        empty batch is a no-op."""
+        self.finish(spark, out_dir)
+        table, col = self.ledger
+        stored = spark.read.parquet(f"{out_dir}/{table}") \
+            .select(F.col(col).alias(id_col))
+        new = batch.join(stored, id_col, "left_anti").localCheckpoint(eager=True)
+        return None if new.isEmpty() else new
 
     def finish(self, spark: SparkSession, out_dir: str,
                as_reader: bool = False) -> bool:
@@ -1011,42 +1019,64 @@ class _StagedFamily:
 
     def commit_tables(self, spark: SparkSession, out_dir: str,
                       tables: dict[str, DataFrame]) -> None:
-        """Stage every table as a plain parquet write of the DataFrame
-        as given (its partitioning and sort order become the file
-        layout), then :meth:`mark`. A table whose live layout is
-        partitioned by directory (LSH buckets) is written by its caller,
-        which then calls :meth:`mark` directly."""
+        """Stage every table in its live layout — :func:`_write_table`
+        with the family's partition columns for it, so a flat table
+        keeps the partitioning and sort order of the DataFrame as given
+        — then :meth:`mark`. The last step of every append, after the
+        :meth:`new_rows` guard."""
         staging = self.staging(out_dir)
         for sub, df in tables.items():
-            df.write.mode("overwrite").parquet(f"{staging}/{sub}")
+            _write_table(df, f"{staging}/{sub}", self.by.get(sub, ()))
         self.mark(spark, out_dir)
 
 
+# A ledger is the live table itself where that table holds one row per
+# id; otherwise it is a narrow id table the family appends to.
+_IVF_FAMILY = _StagedFamily(
+    "ivf", appends={"lists": "ivf_lists"}, ledger=("ivf_lists", "vid"),
+    by={"lists": ("centroid_id",)})
+
+_PQ_FAMILY = _StagedFamily(
+    "pq", appends={"codes": "pq_codes"}, ledger=("pq_codes", "vec_id"))
+
+_IVFPQ_FAMILY = _StagedFamily(
+    "ivfpq", appends={"codes": "ivfpq_codes"}, ledger=("ivfpq_codes", "vid"),
+    by={"codes": ("centroid_id",)})
+
+_MAXSIM_FAMILY = _StagedFamily(
+    "maxsim", appends={"components": "maxsim_components"},
+    ledger=("maxsim_components", "cand"), by={"components": ("pos",)})
+
 _LSH_FAMILY = _StagedFamily(
-    "lsh", appends={"buckets": "lsh_buckets", "docs": "lsh_docs"})
+    "lsh", appends={"buckets": "lsh_buckets", "docs": "lsh_docs"},
+    ledger=("lsh_docs", "doc_id"), by={"buckets": ("t", "bucket")})
 
 _LSH_COMPACT_FAMILY = _StagedFamily(
-    "lsh_compact", swaps={"buckets": "lsh_buckets", "docs": "lsh_docs"})
+    "lsh_compact", swaps={"buckets": "lsh_buckets", "docs": "lsh_docs"},
+    by={"buckets": ("t", "bucket")})
 
 _DEDUP_FAMILY = _StagedFamily(
     "dedup",
     swaps={"clusters": "dedup_clusters", "pairs": "dedup_pairs"},
-    appends={"bands": "dedup_bands"})
+    appends={"bands": "dedup_bands"}, ledger=("dedup_clusters", "doc_id"))
 
 _KN_FAMILY = _StagedFamily(
-    "kn_counts", swaps={"counts": "kn_counts"}, appends={"docs": "kn_docs"})
+    "kn_counts", swaps={"counts": "kn_counts"}, appends={"docs": "kn_docs"},
+    ledger=("kn_docs", "doc_id"))
 
 _LID_FAMILY = _StagedFamily(
-    "lid_counts", swaps={"counts": "lid_counts"}, appends={"docs": "lid_docs"})
+    "lid_counts", swaps={"counts": "lid_counts"}, appends={"docs": "lid_docs"},
+    ledger=("lid_docs", "doc_id"))
 
 _BM25_FAMILY = _StagedFamily(
     "bm25", swaps={"df": "bm25_df", "stats": "bm25_stats"},
-    appends={"postings": "bm25_postings"})
+    appends={"postings": "bm25_postings"}, ledger=("bm25_postings", "cand"))
 
 # every family by stage name, used by vacuum_staging's recovery
-_FAMILIES = {f.base: f for f in (_LSH_FAMILY, _LSH_COMPACT_FAMILY,
-                                 _DEDUP_FAMILY, _KN_FAMILY, _LID_FAMILY,
-                                 _BM25_FAMILY)}
+_FAMILIES = {f.base: f for f in (
+    _IVF_FAMILY, _PQ_FAMILY, _IVFPQ_FAMILY, _MAXSIM_FAMILY, _LSH_FAMILY,
+    _LSH_COMPACT_FAMILY, _DEDUP_FAMILY, _KN_FAMILY, _LID_FAMILY,
+    _BM25_FAMILY)}
 
 
 # ---------------------------------------------------------------------------
@@ -1059,7 +1089,27 @@ _FAMILIES = {f.base: f for f in (_LSH_FAMILY, _LSH_COMPACT_FAMILY,
 # bit-identical to a bulk retrain (shared derivation in operators/textops).
 # Counts + ledger move together through one staged commit (counts swap,
 # ledger files moved in): a crash at ANY point either leaves the artifact
-# untouched or the batch fully applied.
+# untouched or the batch fully applied. Both appends are _append_counts.
+
+
+def _append_counts(spark: SparkSession, family: _StagedFamily,
+                   new_documents: DataFrame, out_dir: str, id_col: str,
+                   count) -> None:
+    """The one count-artifact append: guard the batch, count only its
+    new docs with ``count`` (key columns…, count column last), re-sum
+    the union with the stored counts, then commit counts + ledger. The
+    merge reads the live counts into the stage, and the swap runs only
+    at ``mark``, so nothing reads a table it overwrites."""
+    batch = family.new_rows(spark, out_dir, new_documents, id_col)
+    if batch is None:
+        return
+    counts = count(batch)
+    *keys, value = counts.columns
+    stored = spark.read.parquet(f"{out_dir}/{family.swaps['counts']}")
+    family.commit_tables(spark, out_dir, {
+        "counts": (stored.unionByName(counts).groupBy(*keys)
+                   .agg(F.sum(value).alias(value))),
+        "docs": batch.select(F.col(id_col).alias("doc_id"))})
 
 
 def write_kn_lm(spark: SparkSession, documents: DataFrame, out_dir: str,
@@ -1097,20 +1147,8 @@ def append_kn_lm(spark: SparkSession, new_documents: DataFrame,
     """
     from .operators.textops import kn_bigram_counts
 
-    _KN_FAMILY.finish(spark, out_dir)
-    ledger = spark.read.parquet(f"{out_dir}/kn_docs")
-    batch = new_documents.join(
-        ledger.select(F.col("doc_id").alias(id_col)), id_col, "left_anti")
-    if batch.isEmpty():
-        return
-    stored = spark.read.parquet(f"{out_dir}/kn_counts")
-    merged = (stored.unionByName(kn_bigram_counts(batch, text_col))
-              .groupBy("w1", "w2").agg(F.sum("c").alias("c"))
-              .localCheckpoint(eager=True))
-    batch_ids = batch.select(F.col(id_col).alias("doc_id")) \
-        .localCheckpoint(eager=True)
-    _KN_FAMILY.commit_tables(spark, out_dir,
-                             {"docs": batch_ids, "counts": merged})
+    _append_counts(spark, _KN_FAMILY, new_documents, out_dir, id_col,
+                   lambda b: kn_bigram_counts(b, text_col))
 
 
 def write_lid_profiles(spark: SparkSession, documents: DataFrame,
@@ -1148,20 +1186,8 @@ def append_lid_profiles(spark: SparkSession, new_documents: DataFrame,
     merge and staged-commit crash safety as :func:`append_kn_lm`."""
     from .operators.textops import lid_gram_counts
 
-    _LID_FAMILY.finish(spark, out_dir)
-    ledger = spark.read.parquet(f"{out_dir}/lid_docs")
-    batch = new_documents.join(
-        ledger.select(F.col("doc_id").alias(id_col)), id_col, "left_anti")
-    if batch.isEmpty():
-        return
-    stored = spark.read.parquet(f"{out_dir}/lid_counts")
-    merged = (stored.unionByName(lid_gram_counts(batch, lang_col, text_col, n))
-              .groupBy("lang", "gram").agg(F.sum("cnt").alias("cnt"))
-              .localCheckpoint(eager=True))
-    batch_ids = batch.select(F.col(id_col).alias("doc_id")) \
-        .localCheckpoint(eager=True)
-    _LID_FAMILY.commit_tables(spark, out_dir,
-                              {"docs": batch_ids, "counts": merged})
+    _append_counts(spark, _LID_FAMILY, new_documents, out_dir, id_col,
+                   lambda b: lid_gram_counts(b, lang_col, text_col, n))
 
 
 # ---------------------------------------------------------------------------
@@ -1176,10 +1202,10 @@ def compact_parquet(spark: SparkSession, in_dir: str, out_dir: str,
     ~``target_rows_per_file``-row files, optionally range-sorted on
     ``sort_cols`` (pair with ``layout.with_zorder_key`` for 2-D
     skipping). Long-lived incremental sinks accumulate small files —
-    every ``mode("append")`` batch (the bands/postings/ledger appends
-    here, every streaming micro-batch in production) adds at least one
-    file per partition, and at 100 TB scan-planning cost and footer I/O
-    become O(files), not O(bytes). Returns {files_in, files_out, rows}.
+    every appended batch (the staged index appends here, whose files
+    move into the live table; every streaming micro-batch in
+    production) adds at least one file per partition, and at 100 TB
+    scan-planning cost and footer I/O become O(files), not O(bytes). Returns {files_in, files_out, rows}.
 
     Scale shape: one read → one exchange (repartitionByRange when
     sorting — distributed sampled-boundary sort, NOT a global
@@ -1226,8 +1252,10 @@ def vacuum_staging(spark: SparkSession, out_dir: str,
     artifact root.
 
     COMMITTED stages of a RECOGNIZED family name (any ``_FAMILIES``
-    entry: the LSH append and compaction, the dedup triple, the KN/LID
-    counts, BM25) are rolled forward (published by renames) through
+    entry: the IVF, PQ, IVF-PQ, MaxSim and LSH appends, the LSH
+    compaction, the dedup triple, the KN/LID counts, BM25 — every
+    append runs guard → stage → ``mark`` through one of them) are
+    rolled forward (published by renames) through
     that family's :meth:`_StagedFamily.finish`, never deleted —
     they are the committed truth of an interrupted append. The finish
     runs whenever ``_COMMIT`` exists REGARDLESS of which staged subdirs

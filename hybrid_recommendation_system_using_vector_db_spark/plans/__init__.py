@@ -30,11 +30,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def plan_contains(df: DataFrame, *needles: str) -> bool:
-    plan = formatted_plan(df)
-    return all(n in plan for n in needles)
-
-
 def assert_plan(df: DataFrame, contains: tuple[str, ...] = (),
                 not_contains: tuple[str, ...] = ()) -> None:
     """Assert plan features; raises with the full plan on failure."""

@@ -428,84 +428,6 @@ def stateful_user_stats(events: DataFrame):
     )
 
 
-def stateful_user_stats_v2(events: DataFrame):
-    """Per-user running stats on the state-v2 API
-    (``transformWithStateInPandas``, Spark ≥ 4.0) — the successor to
-    ``stateful_user_stats``'s ``applyInPandasWithState``: typed named
-    state objects (value/list/map) with optional per-state TTL and
-    timers, instead of one opaque state tuple per key.
-
-    Semantics are identical to the v1 operator by design (same running
-    (count, sum, last-seen) per user, one emission per key per batch in
-    update mode) — ``test_stateful_v2_matches_v1`` pins the two APIs
-    row-identical over the same stream, and driven to completion over
-    static files the final emission per key equals the batch groupBy,
-    which is the SQL oracle (``streaming_user_stats``).
-
-    Scale: state is one small ValueState row per distinct user in the
-    state store (RocksDB-backed on a cluster); at unbounded key
-    cardinality attach a TTL (``ttlDurationMs``) — the v2 feature the v1
-    API lacks — so dormant keys age out instead of growing the store.
-
-    Environment gate: the v2 state-server protocol speaks protobuf
-    between the JVM and a dedicated Python runner; without
-    ``google.protobuf`` installed the runner crashes at init
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE), so this raises
-    NotImplementedError up front — the hnswlib/sentence-transformers
-    convention. It also requires the RocksDB state store provider
-    (set ``spark.sql.streaming.stateStore.providerClass``).
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package for "
-            "its state-server protocol; not installed in this "
-            "environment — use stateful_user_stats (applyInPandasWithState)"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-        T.StructField("last_seen", T.LongType()),
-    ])
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._agg = handle.getValueState(
-                "agg", "n bigint, v double, last bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, v, last = self._agg.get() if self._agg.exists() else (0, 0.0, 0)
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-                # same unit-agnostic ts handling as the v1 operator
-                last = max(last, int(pd.to_datetime(pdf["ts"]).max().timestamp()))
-            self._agg.update((n, v, last))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                                "total_value": [v], "last_seen": [last]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(UserStats(), out_schema,
-                                    outputMode="Update", timeMode="None")
-    )
-
-
 def _read_state_pointer(state_path: str) -> tuple[str | None, int, str | None]:
     """(snapshot dir, last merged epoch, owning run id) from ``_CURRENT``."""
     cur = os.path.join(state_path, "_CURRENT")

@@ -232,33 +232,6 @@ def test_model_embedder_gated_without_dependency(spark):
         model_embedder(docs)
 
 
-def test_model_embedder_pbu_matches_mapinpandas(spark):
-    """The predict_batch_udf variant (SURVEY §2.9, VERDICT r2 #7) produces
-    the same rows and schema as the mapInPandas embedder for a
-    deterministic injected model."""
-    from hybrid_recommendation_system_using_vector_db_spark.embeddings import (
-        model_embedder, model_embedder_pbu)
-
-    def factory():
-        class DetModel:
-            def encode(self, texts, batch_size=32):
-                import numpy as np
-                return np.array([[float(len(t)), float(len(t)) % 7.0]
-                                 for t in texts], dtype=np.float64)
-        return DetModel()
-
-    docs = spark.range(40).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("doc "), F.col("id")).alias("text"))
-    a = model_embedder(docs, model_name="det-a", model_factory=factory)
-    b = model_embedder_pbu(docs, model_name="det-b", model_factory=factory,
-                           batch_size=16)
-    assert a.schema.simpleString() == b.schema.simpleString()
-    ra = {r.doc_id: list(r.embedding) for r in a.collect()}
-    rb = {r.doc_id: list(r.embedding) for r in b.collect()}
-    assert ra == rb
-
-
 def test_default_factory_branch_with_stub_module(spark, monkeypatch):
     """The default sentence-transformers factory path (import + model
     construction + device kwarg) exercised via a stubbed module in
@@ -453,61 +426,6 @@ def test_scalar_quantize_clamps_out_of_range(spark):
              for r in similarity.scalar_quantize(stale, params).collect()}
     assert codes[2] == [0, 255], codes  # clamped, not extrapolated
     assert all(0 <= c <= 255 for c in codes[3])
-
-
-def test_hnsw_topk_gated_without_dependency(spark, sf_dir):
-    """hnswlib is absent in this container: the operator must gate cleanly."""
-    import pytest as _pytest
-
-    from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
-    from hybrid_recommendation_system_using_vector_db_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with _pytest.raises(NotImplementedError, match="hnswlib"):
-        similarity.hnsw_topk(emb.limit(2), emb, 5)
-
-
-def test_hnsw_topk_plumbing_with_fake_index(spark):
-    """Injected exact fake index proves the mapInPandas plumbing: per-
-    partition build, self-exclusion, local-top-k merge, rounding, ties.
-    With an exact index the result must equal cosine_topk."""
-    import numpy as np
-
-    from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
-    from hybrid_recommendation_system_using_vector_db_spark.operators import similarity
-
-    class FakeHnsw:
-        """Brute-force stand-in with the hnswlib Index surface."""
-
-        def __init__(self, dim):
-            self.vecs, self.ids = None, None
-
-        def add_items(self, mat, ids):
-            self.vecs, self.ids = np.asarray(mat, dtype=np.float64), np.asarray(ids)
-
-        def knn_query(self, q, k):
-            q = np.asarray(q, dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1); qn[qn == 0] = 1.0
-            cn = np.linalg.norm(self.vecs, axis=1); cn[cn == 0] = 1.0
-            sims = (q / qn[:, None]) @ (self.vecs / cn[:, None]).T
-            labels, dists = [], []
-            for row in sims:
-                order = np.lexsort((self.ids, -row))[:k]
-                labels.append(self.ids[order])
-                dists.append(1.0 - row[order])
-            return np.array(labels), np.array(dists)
-
-    sf = "/root/testdata/sf0.01"
-    emb = load_table(spark, sf, "embeddings")
-    qs = emb.filter((emb.vec_id % 50) == 0)
-    for nparts in (1, 4):
-        got = similarity.hnsw_topk(qs, emb.repartition(nparts), 10,
-                                   index_factory=lambda dim: FakeHnsw(dim)) \
-            .orderBy("qid", "rank").collect()
-        want = similarity.cosine_topk(qs, emb, 10).orderBy("qid", "rank").collect()
-        assert [(r.qid, r.cand, r.rank) for r in got] == \
-               [(r.qid, r.cand, r.rank) for r in want]
-        assert all(abs(g.score - w.score) < 1e-9 for g, w in zip(got, want))
 
 
 def test_scrub_text_edge_cases(spark):

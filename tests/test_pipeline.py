@@ -1046,6 +1046,63 @@ def test_staged_append_replay_guard_is_row_level(spark, tmp_path):
     assert not os.path.exists(staging)
 
 
+@pytest.mark.parametrize("family", ["_IVF_FAMILY", "_PQ_FAMILY",
+                                    "_IVFPQ_FAMILY", "_MAXSIM_FAMILY"])
+def test_index_append_is_staged_and_exactly_once(spark, sf_dir, tmp_path,
+                                                 monkeypatch, family):
+    """The IVF, PQ, IVF-PQ and MaxSim appends run guard → stage → mark:
+    a crash at the commit point leaves the live table unchanged with the
+    stage on disk, the next append discards that stage and applies the
+    batch once, and an exact replay or an empty batch changes nothing."""
+    import os
+
+    from hybrid_recommendation_system_using_vector_db_spark import pipeline
+    from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
+
+    fam = getattr(pipeline, family)
+    (sub, live), = fam.appends.items()
+    kind = fam.base
+    table, id_col = (("documents", "doc_id") if kind == "maxsim"
+                     else ("embeddings", "vec_id"))
+    src = load_table(spark, sf_dir, table)
+    a = src.filter(F.col(id_col) % 2 == 0)
+    b = src.filter(F.col(id_col) % 2 == 1)
+    out = str(tmp_path / kind)
+    {"ivf": lambda: pipeline.write_ivf_index(spark, a, out, n_centroids=4,
+                                              n_iters=1),
+     "pq": lambda: pipeline.write_pq_index(spark, a, out, m=8, n_centroids=8,
+                                            n_iters=1),
+     "ivfpq": lambda: pipeline.write_ivfpq_index(
+         spark, a, out, n_centroids=4, m=8, pq_centroids=8, n_iters=1),
+     "maxsim": lambda: pipeline.write_maxsim_index(spark, a, out)}[kind]()
+    append = getattr(pipeline, f"append_{kind}_index")
+    rows = lambda: sorted(map(tuple,  # noqa: E731
+                              spark.read.parquet(f"{out}/{live}").collect()))
+    pre = rows()
+
+    def crash(self, spark, out_dir):
+        raise RuntimeError("simulated crash at the commit point")
+
+    monkeypatch.setattr(pipeline._StagedFamily, "mark", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        append(spark, b, out)
+    monkeypatch.undo()
+    staging = fam.staging(out)
+    assert os.path.exists(staging)
+    assert not os.path.exists(f"{staging}/_COMMIT")
+    assert rows() == pre                      # live table unchanged
+    staged = spark.read.parquet(f"{staging}/{sub}").count()
+    assert staged > 0
+
+    append(spark, b, out)                     # discards the stage, applies once
+    assert not os.path.exists(staging)
+    once = rows()
+    assert len(once) == len(pre) + staged
+    append(spark, b, out)                     # exact replay
+    append(spark, src.limit(0), out)          # empty batch
+    assert rows() == once
+
+
 def test_lsh_index_incremental_append_equals_bulk(spark, tmp_path):
     """write_lsh_index(A) + append_lsh_index(B) == a bulk build over
     A ∪ B (bucketing is a pure map of the stored hyperplane params, so
@@ -1218,7 +1275,7 @@ def test_lsh_append_staged_commit_crash_windows(spark, tmp_path):
     staging2 = os.path.join(out2, "lsh__staging")
     rows_b = sim.lsh_build_index(b, n_bits=5, n_tables=4) \
         .localCheckpoint(eager=True)
-    pipeline._write_lsh_buckets(rows_b, f"{staging2}/buckets")
+    pipeline._write_table(rows_b, f"{staging2}/buckets", ("t", "bucket"))
     b.select(F.col("vec_id").alias("doc_id")).distinct() \
         .write.parquet(f"{staging2}/docs")
     open(os.path.join(staging2, "_COMMIT"), "w").close()

@@ -266,54 +266,6 @@ def test_stream_stream_attribution_matches_batch_range_join(spark, sf_dir):
     assert len(got) > 0
 
 
-def test_stateful_v2_matches_v1_and_batch(spark, sf_dir):
-    """transformWithStateInPandas (state-v2) must produce exactly the v1
-    applyInPandasWithState rows — and both equal the batch groupBy.
-    Environment-gated: the v2 state-server protocol needs protobuf (and
-    RocksDB state store); without it the operator must fail FAST with a
-    clear NotImplementedError instead of crashing the streaming runner."""
-    from hybrid_recommendation_system_using_vector_db_spark.streaming.events import (
-        stateful_user_stats_v2,
-    )
-
-    stream = read_events_stream(spark, sf_dir)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stateful_user_stats_v2(stream)
-        return
-    q = run_stream_to_memory(stateful_user_stats_v2(stream),
-                             "user_state_v2", "update")
-    try:
-        got = {
-            r.user_id: (r.n_events, round(r.total_value, 6), r.last_seen)
-            for r in spark.sql(
-                "SELECT * FROM user_state_v2 ORDER BY n_events ASC").collect()
-        }
-    finally:
-        q.stop()
-    q1 = run_stream_to_memory(stateful_user_stats(read_events_stream(spark, sf_dir)),
-                              "user_state_v1cmp", "update")
-    try:
-        v1 = {
-            r.user_id: (r.n_events, round(r.total_value, 6), r.last_seen)
-            for r in spark.sql(
-                "SELECT * FROM user_state_v1cmp ORDER BY n_events ASC").collect()
-        }
-    finally:
-        q1.stop()
-    assert got == v1
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-        .collect()
-    )
-    want = {r.user_id: (r.n, round(r.v, 6)) for r in batch}
-    assert {u: (n, v) for u, (n, v, _) in got.items()} == want
-
-
 def test_streaming_quality_filter_equals_batch(spark, sf_dir, tmp_path):
     """The streaming quality gate keeps exactly the rows the batch
     scorer keeps (stateless map-only plan → batch equivalence), and the
