@@ -94,7 +94,7 @@ JACCARD_THRESHOLD = 0.005
 # embedder's EMBED_DIM — imported, not duplicated, so a dim change cannot
 # silently desync the unrolled dot products; ADVICE r3). Passing it
 # explicitly to the similarity operators skips their per-lineage
-# dimensionality probe job (VERDICT r2 next #3).
+# dimensionality probe job.
 from hybrid_recommendation_system_using_vector_db_spark.embeddings import EMBED_DIM as VEC_DIM
 
 
@@ -180,13 +180,12 @@ def _served_dedup(spark: SparkSession, sf_dir: str) -> tuple:
     re-signing the corpus.
 
     The minhash→band→verify→CC chain is the most expensive reusable
-    artifact of the pipeline, and four consumers used to rebuild it
-    inline per call (VERDICT r6 What's-wrong #1: ~80% of
-    ``dedup_keep_best``'s 5.56 s duplicated ``dedup_clusters_chained``).
-    Now ``pipeline.write_dedup_clusters`` persists it ONCE per
+    artifact of the pipeline, shared by four consumers.
+    ``pipeline.write_dedup_clusters`` persists it ONCE per
     (session, dataset) into a temp dir the memo registry removes on
-    release, and every consumer serves from the LOADED parquet — the exact artifact lifecycle the ANN
-    indexes got in r6 (write/load/append; incremental maintenance pinned
+    release, and every consumer serves from the LOADED parquet — the
+    artifact lifecycle of the ANN indexes (write/load/append; incremental
+    maintenance pinned
     by ``test_dedup_cluster_incremental_append_equals_bulk``).
     Deterministic: the artifact holds the same chain output the inline
     rebuilds produced, so memoization cannot change results."""
@@ -255,7 +254,7 @@ def hybrid_serve_batch(spark: SparkSession, sf_dir: str,
     latency over a batch (50 hybrid queries in ≈0.168 s ≈ 3.4 ms/q,
     ``Hybrid_Recom_vecdb.py:259-279``); Spark's per-action scheduling floor
     makes the 40-query total incomparable, so the bench divides one warm
-    batched run by |queries| to report the same unit (VERDICT r6 next #6).
+    batched run by |queries| to report the same unit.
     """
     universe = _served_universe(spark, sf_dir)
     queries = universe.filter(F.col("vec_id") % query_mod == 0)
@@ -339,7 +338,7 @@ def q_lsh_topk_mp(spark, sf_dir):
     probes every Hamming-1 bucket per table, lifting recall@10 from
     ~0.53 to ≳0.94 (measured sf0.01/sf0.1; the reference's HNSW space is
     ~0.9+, `Hybrid_Recom_vecdb.py:157`) at ~(1+n_bits)× candidate cost —
-    index size and corpus cost unchanged (VERDICT r2 missing #1)."""
+    index size and corpus cost unchanged."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.lsh_topk(emb.filter(F.col("vec_id") % QUERY_MOD == 0), emb, TOP_K,
                                n_bits=5, n_tables=8, multiprobe=1, dim=VEC_DIM,
@@ -348,19 +347,18 @@ def q_lsh_topk_mp(spark, sf_dir):
 
 def q_index_lifecycle(spark, sf_dir):
     """A3 (vector-index sink) + A4 (incremental maintenance replacing
-    destroy-and-recreate) under the driver hash gate (VERDICT r9 #2):
-    the persisted LSH index lifecycle end-to-end — WRITE the index for
-    half the corpus (`pipeline.write_lsh_index`, the partition-prunable
-    (t, bucket) layout + param sidecar + id ledger), APPEND the other
-    half O(batch) through the staged commit (`append_lsh_index`), LOAD
-    it back from disk with the partition-schema pin
+    destroy-and-recreate) under the driver hash gate: the persisted LSH
+    index lifecycle end-to-end — WRITE the index for half the corpus
+    (`pipeline.write_lsh_index`: the flat (cand, t, bucket) key table +
+    param sidecar + id ledger), APPEND the other half O(batch) through
+    the staged commit (`append_lsh_index`), LOAD it back from disk
     (`load_lsh_index`), and SERVE `lsh_topk(index=...)` through the
-    loaded table. Bucketing is a pure function of the stored hyperplane
-    params, so the served rows are hash-identical to the inline-build
-    "lsh_topk" oracle — the write→append→load→serve chain and the param
-    round-trip all sit inside one gated row, the same way
-    amazon_meta_ingest gated A1/A2 in r9 (mirrors the reference's
-    ChromaDB ingest-then-query split, Hybrid_Recom_vecdb.py:150-165).
+    loaded keys, with the vectors joined from the embeddings. Bucketing
+    is a pure function of the stored hyperplane params, so the served
+    rows are hash-identical to the inline-build "lsh_topk" oracle — the
+    write→append→load→serve chain and the param round-trip all sit
+    inside one gated row (mirrors the reference's ChromaDB
+    ingest-then-query split, Hybrid_Recom_vecdb.py:150-165).
 
     The on-disk artifact is a temp dir: the loaded index is
     localCheckpoint'ed (eager) before cleanup, so the returned plan
@@ -422,7 +420,11 @@ def _ivf_lists(spark, sf_dir):
 
 
 def _lsh_index(spark, sf_dir, universe_only: bool = False):
-    """Build-once persisted multi-table LSH bucket index.
+    """Build-once multi-table LSH key table (cand, t, bucket), locally
+    checkpointed like the loaded index of ``q_index_lifecycle``: served
+    plans read the materialized keys, not the corpus lineage they were
+    built from. ``lsh_topk`` joins the vectors from the corpus it is
+    given.
 
     ``universe_only`` indexes the catalog-restricted universe (what the
     hybrid serving path searches, ref `Hybrid_Recom_vecdb.py:150-165`
@@ -432,7 +434,7 @@ def _lsh_index(spark, sf_dir, universe_only: bool = False):
         corpus = _served_universe(spark, sf_dir) if universe_only \
             else load_table(spark, sf_dir, "embeddings")
         return similarity.lsh_build_index(
-            corpus, n_bits=5, n_tables=8).persist()
+            corpus, n_bits=5, n_tables=8).localCheckpoint(eager=True)
 
     return memo(spark, ("lsh", sf_dir, universe_only), build)
 
@@ -493,9 +495,8 @@ def q_ann_recall(spark, sf_dir):
     """Recall@k gate for the sublinear ANN paths vs the exact ranking.
 
     recall = |ANN top-k ∩ exact top-k| / (|Q| · k) per method — the
-    CORRECTNESS-gated version of the SCALE.md recall numbers (VERDICT r1
-    'What's missing' #2): the metric itself is oracle-checked, so a recall
-    regression in either ANN path fails the round gate, not just a doc."""
+    oracle-checked version of the SCALE.md recall numbers: a recall
+    regression in either ANN path fails the gate, not just a doc."""
     emb = load_table(spark, sf_dir, "embeddings")
     # the query slice feeds all seven method branches — pin it lazily so
     # one scan serves them (plan-sweep r14: 7 of ann_recall's 34 scans
@@ -506,8 +507,8 @@ def q_ann_recall(spark, sf_dir):
     # from the session-memoized all-corpus exact rank table
     # (_knn_rank10, already built for mutual_knn/rnn_clusters) filtered
     # to the eval query set, instead of re-running the brute-force
-    # ranking on every gate call (r14; the band_recall truth-table memo
-    # convention — VERDICT r9 wrong #2's fix). cosine_topk_gemm is
+    # ranking on every gate call (the band_recall truth-table memo
+    # convention). cosine_topk_gemm is
     # bit-equal to the declarative cosine_topk (same rounding and
     # tiebreaks, pinned by content_topk_gemm's own oracle), and the
     # (qid, cand) sets were verified identical at sf0.01/sf0.1 — an
@@ -537,7 +538,7 @@ def q_ann_recall(spark, sf_dir):
         ("ivf_np8", similarity.ivf_topk(qs, emb, TOP_K, n_centroids=16, nprobe=8,
                                         centroids=_ivf_codebook(spark, sf_dir),
                                         lists=_ivf_lists(spark, sf_dir), dim=VEC_DIM)),
-        # compressed-representation honesty rows (VERDICT r5 #4): SQ is
+        # compressed-representation honesty rows: SQ is
         # near-lossless; PQ on uniform vectors is its worst case — the low
         # recall is a property of the data regime, pinned here so a silent
         # regression (or a silent improvement claim) can't slip through
@@ -591,7 +592,7 @@ def q_hybrid_topk(spark, sf_dir):
 
 
 def q_hybrid_topk_ann(spark, sf_dir):
-    """Hybrid fusion riding the sublinear LSH content path (VERDICT r1 #5).
+    """Hybrid fusion riding the sublinear LSH content path.
 
     Same fusion plan as ``hybrid_topk`` but the content candidate pool
     comes from multi-table LSH (bucket-pruned candidate generation, one
@@ -618,10 +619,9 @@ def _eval_rank_tables(spark, sf_dir):
     eligible query set) — consumed by both the Precision@K grid
     (``q_precision_eval``) and the NDCG/MRR grid (``q_ranking_eval``).
 
-    Memoized per (session, dataset) — VERDICT r9 wrong #2: the r8
-    lazy-checkpoint change left every eval call rebuilding the ranked/
-    hybrid/ground-truth tables inside the timed window (~1 s of GEMM +
-    fusion per call, the measured 1.75→2.98 s growth). The reference
+    Memoized per (session, dataset): without it every eval call
+    rebuilds the ranked/hybrid/ground-truth tables inside the timed
+    window (~1 s of GEMM + fusion per call). The reference
     builds its eval pools once and reuses them across the K grid
     (Hybrid_Recom_vecdb.py:254-256); the memo is the same build-once/
     score-many split the serve indexes already use, and it's
@@ -650,10 +650,10 @@ def _eval_rank_tables(spark, sf_dir):
         # differ pre-rounding), so the eval oracle is unchanged.
         # localCheckpoint (NOT persist): `ranked` feeds both models, so it
         # must materialize once — but a per-call persist() accumulates
-        # CacheManager entries across calls (the shingle-leak pattern,
-        # VERDICT r2 #3); checkpoint blocks are GC-owned. The eval rides the
-        # session-memoized query matrix and CF index, so its per-call work is
-        # one GEMM pass + the fusion/metric plan (VERDICT r2 next #3).
+        # CacheManager entries across calls; checkpoint blocks are
+        # GC-owned. The eval rides the session-memoized query matrix and
+        # CF index, so its per-call work is one GEMM pass + the
+        # fusion/metric plan.
         ranked = similarity.cosine_topk_gemm(
             eligible, universe, max_k,
             q_local=_query_matrix(spark, sf_dir, "eligible_qs", eligible),
@@ -882,7 +882,7 @@ def q_dedup_clusters(spark, sf_dir):
     the 100 TB-shaped pipeline and share one oracle — cluster assignment
     (min reachable id) is algorithm-independent. The legacy within-block
     quadratic candidate generator no longer feeds any driver-checked
-    query (VERDICT r4 #3); it survives as the pytest-only
+    query; it survives as the pytest-only
     ``dedup_clusters_star`` parity pair + unit tests. The verified-pair
     table comes from the persisted artifact (``_served_dedup``); only
     the CC algorithm under test runs per call."""
@@ -907,7 +907,7 @@ def q_dedup_clusters_chained(spark, sf_dir):
     banded-MinHash chain links (candidate generation, output linear) →
     exact n-gram-Jaccard verify over exactly those candidates →
     large-star/small-star connected components (O(log n) rounds).
-    This is the 100 TB dedup ground-truth shape (VERDICT r2 next #1);
+    This is the 100 TB dedup ground-truth shape;
     ``dedup_clusters`` runs min-label CC over the same chain, pinning
     both CC algorithms against one oracle. Serves the persisted cluster
     table itself (``_served_dedup`` → ``pipeline.load_dedup_clusters``):
@@ -941,8 +941,8 @@ def _lid_guesses(spark, sf_dir):
 def q_lang_id_trained(spark, sf_dir):
     """Trained (non-heuristic) language ID: per-language char-trigram
     naive-Bayes profiles learned from the labeled lang column, scored
-    map-only against the same corpus (VERDICT r6 missing #4; operator
-    docstrings in textops.py carry the scale shape). Full DuckDB
+    map-only against the same corpus (operator docstrings in
+    textops.py carry the scale shape). Full DuckDB
     oracle — train and score are both pure relational algebra."""
     return _lid_guesses(spark, sf_dir)
 
@@ -983,8 +983,7 @@ def q_dedup_keep_best(spark, sf_dir):
     one ranking window per cluster (ties: quality desc, doc_id asc).
     Output: survivors (cluster_id, doc_id, quality_score, cluster_size).
     The cluster table is the persisted artifact (``_served_dedup``) —
-    canonicalization after clustering no longer pays the chain twice
-    (VERDICT r6 What's-wrong #1)."""
+    canonicalization after clustering does not pay the chain twice."""
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1075,7 +1074,7 @@ def q_leakage_safe_split(spark, sf_dir):
         docs, clusters, {"train": 0.8, "val": 0.1, "test": 0.1}, seed=SEED)
 
 def q_simhash_neardup(spark, sf_dir):
-    # 64-bit two-word fingerprints (VERDICT r6 next #2): a b-bit space
+    # 64-bit two-word fingerprints: a b-bit space
     # saturates once the corpus nears 2^b docs and banded Hamming goes
     # quadratic — 16 bits died at toy scale, 32 bits (~4.3B values) dies
     # at exactly the billions-of-docs corpus this engine targets. md5
@@ -1936,7 +1935,7 @@ def q_bfs_distances(spark, sf_dir):
     The co-purchase aggregate is checkpointed once here: it feeds BOTH
     the traversal's edge table and the seed derivation, and an
     unmaterialized aggregate would re-run the lineitem self-join per
-    branch (the simhash re-execution class, VERDICT r5 #1)."""
+    branch (the simhash re-execution class)."""
     from hybrid_recommendation_system_using_vector_db_spark.operators import graph
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1990,8 +1989,8 @@ def q_band_recall(spark, sf_dir):
     honesty note.
 
     The sampled exact-Jaccard TRUTH table is deterministic per dataset,
-    so it is built once per session (the eval-table memo convention,
-    VERDICT r9 wrong #2's fix applied here too) — each gate call then
+    so it is built once per session (the eval-table memo
+    convention) — each gate call then
     pays the banding candidates + the metric grid, not the quadratic
     truth pass; results identical by construction."""
     docs = load_table(spark, sf_dir, "documents")
@@ -2181,8 +2180,7 @@ def q_kendall_sampled(spark, sf_dir):
 
 
 def q_theil_sen_sampled(spark, sf_dir):
-    """The deterministic sampled-pairs tier of Theil-Sen (VERDICT r11
-    next #3): per-group bottom-⌊√max_pairs⌋ seeded row subsample, then
+    """The deterministic sampled-pairs tier of Theil-Sen: per-group bottom-⌊√max_pairs⌋ seeded row subsample, then
     the exact median-of-slopes over the subsample — pure function of
     the data, full SQL oracle
     (operators/timeseries.py::theil_sen_trend with max_pairs)."""
@@ -2199,7 +2197,7 @@ def q_theil_sen_sampled(spark, sf_dir):
 
 
 def q_ks_drift_sketched(spark, sf_dir):
-    """The bottom-k-sample KS tier (VERDICT r11 next #2): each side
+    """The bottom-k-sample KS tier: each side
     reduced to its k seeded-md5-smallest rows, exact KS over the
     samples — every downstream stage bounded at 2k rows, |D_sketch −
     D_exact| DKW-bounded in pytest, and the approximate statistic
@@ -2404,7 +2402,7 @@ def q_dq_checks(spark, sf_dir):
 
 
 def q_dq_checks_approx(spark, sf_dir):
-    """The HLL approximate-unique DQ tier (VERDICT r11 next #7): all
+    """The HLL approximate-unique DQ tier: all
     unique_approx columns share ONE register-grain pass (checks·256
     shuffle rows, no Expand, no count-distinct state); the portable-md5
     estimate makes the approximate verdicts themselves hash-match the
@@ -4293,8 +4291,8 @@ def _render_meta_blob(spark: SparkSession, sf_dir: str) -> str:
 
     The driver testdata has no meta-format file, so the record-delimited
     parser (`sources/amazon_meta.py`, the one genuinely non-relational
-    reference operator, ref ``Hybrid_Recom_vecdb.py:33-101``) had no
-    CORRECTNESS row (VERDICT r8 missing #2). This blob exercises every
+    reference operator, ref ``Hybrid_Recom_vecdb.py:33-101``) gets its
+    oracle-checked row from this blob, which exercises every
     parser semantic the reference defines: B1 validity drop (records
     missing a title: partkey % 101), non-numeric category count → 0
     paths (% 97), declared-count slice below the rendered path count
@@ -4588,10 +4586,9 @@ def q_streaming_cms(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Driver-checked query surface — EXACTLY 50 entries, the driver's
-    per-round correctness budget (VERDICT r4 What's-wrong #2: at 61
-    entries the first-50 cap silently rotated older entries out of the
-    checked window, and two entries were never checked at all). Redundant-
-    capability entries moved to ``extra_queries()``, which pytest pins
+    correctness budget (it checks only the first 50). Entries whose
+    mechanics a driver entry already exercises live in
+    ``extra_queries()``, which pytest pins
     against the same DuckDB oracles every CI run — nothing is unverified,
     it just doesn't consume a driver slot. A test asserts the ≤50 bound.
     """
@@ -4603,22 +4600,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hybrid_topk": q_hybrid_topk,                 # C2+C3+G8 (EP2)
         "hybrid_topk_ann": q_hybrid_topk_ann,         # EP2 on the LSH path
         "precision_eval": q_precision_eval,           # D3+D4+F3 (EP3)
-        # r14 rotation (VERDICT r13 next #3): ranking_eval (driver-proven
-        # green r6-r13; the rank-window eval mechanics stay driver-checked
-        # inside precision_eval and extras-pinned every CI run),
-        # embedding_neardup + content_topk_gemm (driver-proven r9-r13;
-        # the LSH-bucket and GEMM tiers stay recall-gated inside the
-        # driver-checked ann_recall / lsh_topk_mp chains),
-        # idf_jaccard_neardup (driver-proven r11-r13; the weighted-
-        # Jaccard family stays covered by minhash/containment/set_sim
-        # driver entries), kmv_set_ops (driver-proven r11-r13; the
-        # sketch algebra slot passes to the rotating-in hll_merge), and
-        # cube_revenue (driver-proven r5-r13; grouping-set aggregation
-        # also rides the driver-checked tpch entries) -> extras, freeing
-        # six slots for the r13 wave: chained-stateful-agg streaming PSI,
-        # the publishing manifest + its additive merge, the HLL register
-        # monoid, the examples-proportional mixing schedule, and
-        # contrastive hard-negative mining
         "streaming_psi_drift": q_streaming_psi_drift,  # chained stateful aggs
         "shard_manifest": q_shard_manifest,           # publishing manifest
         "shard_manifest_merge": q_shard_manifest_merge,  # additive algebra
@@ -4628,119 +4609,36 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "part_doc_projection": q_part_doc_projection, # B2+G6+G12
         "query_resolution": q_query_resolution,       # C4+G4/G5
         "seeded_sample": q_seeded_sample,             # F2
-        # r9 rotation: stratified_sample (driver-proven ×3; same seeded-
-        # md5 mechanics as seeded_sample) → extras, freeing the slot for
-        # the amazon-meta ingest round-trip — the one non-relational
-        # reference operator (A1 gzip scan + A2 record parse) finally
-        # under the hash gate (VERDICT r8 missing #2 / next #2)
         "amazon_meta_ingest": q_amazon_meta_ingest,   # A1+A2+B1+H2
         # --- similarity / ANN extensions ---
-        # r7 rotation: lsh_topk (single-probe special case of the multi-
-        # probe path below) → extras, freeing a driver slot for the r6
-        # SCD2 validity-interval builder; r8 rotation: scd2_intervals and
-        # psi_drift (both driver-proven green in CORRECTNESS_r07) → extras,
-        # freeing slots for the r8 association-rule miner and the exact
-        # per-group quantile op
         "lsh_topk_mp": q_lsh_topk_mp,
-        # r10 third rotation: association_rules + grouped_quantiles
-        # (both driver-proven green in CORRECTNESS_r08/r09; the exact
-        # nearest-rank quantile mechanics stay driver-checked inside
-        # sampled_quantiles' DKW-gated chain and the co-occurrence
-        # join shape inside copurchase_edges) → extras, freeing slots
-        # for the r10 second wave: deterministic LPA communities and
-        # the hypertable gap-fill primitive
-        # r13 rotation (VERDICT r12 next #3): label_propagation + gap_fill
-        # + k_core (driver-proven green r10-r12; LPA and k-core share the
-        # driver-checked weighted_sssp's round driver —
-        # operators/_rounds.iterate verbatim — and gap_fill's
-        # LOCF/interp windows ride the extras-pinned seasonal_decompose
-        # chain) and dup_spans (driver-proven r6-r12; its rolling-hash
-        # anchors stay exercised by the extras-pinned doc_fingerprints +
-        # paragraph_dedup oracles) -> extras, freeing slots for the r12
-        # wave's four headline capabilities: the DECIMAL-moment Spearman,
-        # the per-column drift monitor, the end-to-end entity-resolution
-        # composition, and exact rank-sum ROC-AUC
         "spearman": q_spearman,                       # tie-corrected rank corr
         "drift_report": q_drift_report,               # per-column KS monitor
         "entity_resolution": q_entity_resolution,     # match→closure→golden
         "roc_auc": q_roc_auc,                         # exact rank-sum AUC
         "ivf_topk": q_ivf_topk,
         "ann_recall": q_ann_recall,
-        # r9 rotation (VERDICT r8 next #3): driver-proven veterans whose
-        # mechanics other driver entries exercise — cluster_centroids
-        # (k-means chain rides ivf_topk/ann_recall), quantized_topk +
-        # pq_topk (ADC tiers recall-gated inside ann_recall),
-        # hash_embeddings (the embedder feeds every ANN entry),
-        # doc_fingerprints (rolling hash embedded in dup_spans' chain),
-        # multimodal_features / split_assign / pack_sequences /
-        # kmv_distinct / winsorize / ewma_revenue / tpch_q4 / tpch_q18
-        # (each green in CORRECTNESS_r07+r08) — all → extras, freeing
-        # slots for the r8 second wave below, each pytest-proven against
-        # the same oracles in r8
-        # r11 rotation (VERDICT r10 next #5): robust_zscore +
-        # temporal_split (driver-proven green r8-r10; the median/MAD
-        # window and purged-boundary mechanics stay oracle-pinned in
-        # extras every CI run) -> extras, freeing slots for the two r10
-        # third-wave capability classes still pytest-only: the
-        # delta/frontier Bellman-Ford and the KMV theta-sketch algebra
         "weighted_sssp": q_weighted_sssp,             # frontier Bellman-Ford
-        # r12 rotation (VERDICT r11 next #5): bfs_distances + band_recall
-        # (driver-proven green r9-r11; BFS's frontier lifecycle is now
-        # LITERALLY the same round driver (operators/_rounds.iterate) as
-        # the driver-checked weighted_sssp, and the banding S-curve gate's
-        # candidate chain rides the driver-checked minhash_jaccard_neardup +
-        # dedup_clusters_chained) -> extras, freeing slots for the r11
-        # second wave's two headline capabilities: the recall-1 exact
-        # set-similarity join (dedup certification) and per-group exact
-        # KS drift (the monitoring shape)
         "set_sim_join": q_set_sim_join,               # PPJoin prefix filter,
                                                       # recall 1 by construction
         "ks_drift_grouped": q_ks_drift_grouped,       # per-domain exact KS
         "sampled_quantiles": q_sampled_quantiles,     # bottom-k sketch tier
-        # r10 second rotation (VERDICT r9 next #2 named it the candidate):
-        # path_ngrams (driver-proven green r8-r9; its window-lead journey
-        # mechanics also ride the driver-checked session_windows /
-        # asof_attribution entries) → extras, freeing the slot for the
-        # MERGE-semantics CDC apply — the operator that closes the
-        # snapshot-diff → change-batch → next-snapshot loop
         "cdc_apply": q_cdc_apply,                     # MERGE upsert/tombstone
-        # r10 rotation (VERDICT r9 next #2): seasonal_anomalies (driver-
-        # proven green r8-r9; its same-hour-yesterday equi-join shape is
-        # also exercised by the driver-checked streaming_hourly window
-        # aggregates) → extras, freeing the slot for the A3/A4 persisted
-        # index write→append→load→serve lifecycle under the hash gate
         "index_lifecycle": q_index_lifecycle,         # A3+A4 sink lifecycle
         "streaming_enrich": q_streaming_enrich,       # stream-static join
-        # r10 third rotation: tpch_q14 (driver-proven r8-r9; its
-        # conditional-ratio shape also rides the driver-checked
-        # tpch_q19 disjunction and cube_revenue aggregates) → extras,
-        # freeing the slot for the derived-partsupp Q9 — the classic
-        # profit join over the synthesized supply relation
         "tpch_q9": q_tpch_q9,                         # derived-supply profit
         "tpch_q16": q_tpch_q16,                       # distinct-supplier counts
         "tpch_q19": q_tpch_q19,                       # disjunctive band filter
         # --- dedup extensions ---
         "dedup_exact": q_dedup_exact,
-        # r8 rotation: char_entropy (driver-proven in r7; map-only Shannon
-        # entropy) → extras, freeing a slot for the asymmetric
-        # doc-inside-doc containment tier — the near-dup geometry the
-        # Jaccard entries below cannot catch
         "containment_neardup": q_containment_neardup,
         "minhash_jaccard_neardup": q_minhash_jaccard_neardup,
         "simhash_neardup": q_simhash_neardup,
-        # r7 rotation: dedup_clusters (min-label CC over the same banded
-        # chain as dedup_clusters_chained — shared oracle) → extras, so a
-        # driver slot covers the r6 PSI drift monitor instead
         "dedup_clusters_chained": q_dedup_clusters_chained,
         # --- text analysis extensions ---
         "quality_scores": q_quality_scores,
         "language_id": q_language_id,
         "tfidf_top_terms": q_tfidf_top_terms,
-        # r9 correction: hash_embeddings is §2 H1's ONLY direct row (the
-        # Arrow batch-embedding UDF with its full DuckDB oracle) — it
-        # stays under the driver gate; coactivity rotates out instead
-        # (its events co-occurrence is the same D1 self-join+count shape
-        # as the driver-checked copurchase_edges; driver-proven r6-r8)
         "hash_embeddings": q_hash_embeddings,
         # --- lexical + hybrid-search fusion (new in r6) ---
         "bm25_topk": q_bm25_topk,                     # BM25 lexical ranker
@@ -4764,19 +4662,14 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """
     return {
         "minhash_signatures": q_minhash_signatures,   # sigs ride minhash_dup_pairs' chain
-        # r7 rotation out of the driver 50 (for psi_drift / scd2_intervals):
-        # min-label CC shares dedup_clusters_chained's oracle verbatim, and
-        # single-probe LSH is the r=0 special case of the driver-checked
-        # multi-probe path — both stay oracle-pinned here every CI run
+        # min-label CC shares dedup_clusters_chained's oracle verbatim;
+        # single-probe LSH is the multiprobe=0 case of lsh_topk_mp
         "dedup_clusters": q_dedup_clusters,
         "lsh_topk": q_lsh_topk,
-        # r10 rotation out of the driver 50 (for index_lifecycle): the
-        # same-hour-yesterday ratio join, driver-proven green in r8-r9
+        # the same-hour-yesterday ratio join
         "seasonal_anomalies": q_seasonal_anomalies,
-        # r7 second rotation (for kn_perplexity / char_entropy): the batch
-        # hourly agg is streaming_hourly's exact twin (shared oracle
-        # semantics), and the band-link stage is embedded in the chained
-        # minhash verify — both stay oracle-pinned here every CI run
+        # the batch hourly agg is streaming_hourly's exact twin, and the
+        # band-link stage is embedded in the chained minhash verify
         "events_hourly": q_events_hourly,
         "minhash_dup_pairs": q_minhash_dup_pairs,
         "dedup_clusters_star": q_dedup_clusters_star, # star-CC pinned by dedup_clusters_chained;
@@ -4813,9 +4706,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rotated out of the driver 50 in r6 for dup_spans: map-only token
         # stats whose mechanics stay driver-checked inside quality_scores
         "token_stats": q_token_stats,
-        # r14 rotation out of the driver 50 (for the r13 wave): six
-        # driver-proven veterans, each still oracle-pinned here every CI
-        # run — see the queries() rotation note for the coverage argument
+        # ranking mechanics ride precision_eval; the GEMM and LSH-bucket
+        # tiers ride ann_recall / lsh_topk_mp; weighted Jaccard rides the
+        # minhash/containment/set_sim entries; sketch algebra rides
+        # hll_merge; grouping sets ride the tpch entries
         "ranking_eval": q_ranking_eval,
         "embedding_neardup": q_embedding_neardup,
         "content_topk_gemm": q_content_topk_gemm,
@@ -4858,21 +4752,16 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pmi_collocations": q_pmi_collocations,       # PMI word-association mining
         "mutual_knn": q_mutual_knn,                   # reciprocal nearest-neighbor pairs
         "rnn_clusters": q_rnn_clusters,               # CC over the mutual-kNN graph
-        # r11 rotation: both promoted into the driver 50 (VERDICT r10
-        # next #5); the veterans they displaced keep their oracles here
         "robust_zscore": q_robust_zscore,             # median/MAD outliers
         "temporal_split": q_temporal_split,           # purged walk-forward
-        # r12 rotation out of the driver 50 (for set_sim_join /
-        # ks_drift_grouped): both driver-proven green r9-r11; BFS now
-        # shares weighted_sssp's round driver verbatim, and
-        # band_recall's banded chain rides two driver-checked dedup
-        # entries — both stay oracle-pinned here every CI run
+        # BFS shares weighted_sssp's round driver verbatim, and
+        # band_recall's banded chain rides two driver-checked dedup entries
         "bfs_distances": q_bfs_distances,             # multi-source BFS
         "band_recall": q_band_recall,                 # banding S-curve gate
         # r11 second wave
         "k_truss": q_k_truss,                         # edge-support peel
         "dq_checks": q_dq_checks,                     # one-scan DQ gate
-        # r12 (VERDICT r11 next #7): HLL approximate-unique DQ tier
+        # HLL approximate-unique DQ tier
         "dq_checks_approx": q_dq_checks_approx,       # no-Expand unique tier
         "weighted_median": q_weighted_median,         # exact integer-weight
                                                       # lower median
@@ -4892,11 +4781,9 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r12: pre-join cardinality / skew-key profile
         "join_fanout": q_join_fanout,
         "ks_drift": q_ks_drift,                       # exact 2-sample KS D
-        # r12 (VERDICT r11 next #2/#3): the stated 100 TB tiers, now real
+        # the bottom-k sketched tier of ks_drift
         "ks_drift_sketched": q_ks_drift_sketched,     # bottom-k DKW-bounded KS
-        # r13 rotation: spearman / drift_report / entity_resolution /
-        # roc_auc promoted into the driver 50 (VERDICT r12 next #3); the
-        # four veterans they displaced keep their oracles here
+        # LPA and k-core share weighted_sssp's round driver
         "label_propagation": q_label_propagation,     # LPA communities
         "gap_fill": q_gap_fill,                       # gapfill + locf/interp
         "k_core": q_k_core,                           # iterative k-core peel
@@ -4914,9 +4801,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "orc_roundtrip": q_orc_roundtrip,             # ORC source/sink
         "unpivot_measures": q_unpivot_measures,       # melt (pivot inverse)
         "bag_setops": q_bag_setops,                   # exceptAll/intersectAll
-        # r10 third rotation out of the driver 50 (for label_propagation /
-        # gap_fill / tpch_q9): all three driver-proven green in
-        # CORRECTNESS_r08/r09 — stay oracle-pinned here every CI run
         "association_rules": q_association_rules,
         "grouped_quantiles": q_grouped_quantiles,
         "tpch_q14": q_tpch_q14,
@@ -4972,15 +4856,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # mechanics stay pinned by neighbouring driver entries
         "parts_unindexed": q_parts_unindexed,         # broadcast anti-join
         "doc_length_stats": q_doc_length_stats,       # groupBy + ntile stats
-        # r8 rotation out of the driver 50 (all driver-proven green in
-        # CORRECTNESS_r06/r07) to put the seven r8 additions — winsorize,
-        # grouped_quantiles, association_rules, containment_neardup,
-        # ewma_revenue, TPC-H Q4/Q18 — under the hard driver gate instead;
-        # every one stays oracle-pinned here in CI
         "weighted_sample": q_weighted_sample,         # A-ES importance sampling
-        # r9 rotation out of the driver 50 (each green in CORRECTNESS_r07
-        # and r08; the r8 second wave + the amazon-meta ingest round-trip
-        # took their slots) — all stay oracle-pinned here every CI run
         "stratified_sample": q_stratified_sample,     # per-stratum F2 sampling
         "cluster_centroids": q_cluster_centroids,     # k-means codebook table
         "quantized_topk": q_quantized_topk,           # int8 SQ-ADC search
@@ -5014,8 +4890,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q11": q_tpch_q11,                       # scalar-HAVING stock value
         "tpch_q20": q_tpch_q20,                       # nested-semi promotion
         "scd2_intervals": q_scd2_intervals,           # SCD2 validity intervals
-        # r10 second rotation: journey 3-grams driver-proven r8-r9, its
-        # window-lead mechanics ride the driver-checked session/asof rows
+        # journey 3-grams: window-lead mechanics ride the driver-checked
+        # session/asof rows
         "path_ngrams": q_path_ngrams,
         "edit_neardup": q_edit_neardup,               # levenshtein-verified near-dup
         "psi_drift": q_psi_drift,                     # PSI drift monitor
@@ -5677,7 +5553,7 @@ r{t} AS (
 
 def _k_core_sql(k: int = 4, rounds: int = 20) -> str:
     """k-core peel unrolled to a FIXED ``rounds`` CTE rounds over the
-    co-purchase graph (VERDICT r9 #1) — the ``_pagerank_sql`` pattern.
+    co-purchase graph — the ``_pagerank_sql`` pattern.
 
     Exact regardless of data: the Spark side
     (operators/graph.py::k_core) applies the same simultaneous

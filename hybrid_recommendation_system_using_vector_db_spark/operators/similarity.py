@@ -13,9 +13,9 @@ first at each scale:
                        and emits only its local top-k → tiny shuffle. The
                        100 TB fast path when Python is acceptable.
 - ``lsh_topk``         approximate: random-hyperplane bucket blocking; only
-                       same-bucket pairs are scored. Bucket column doubles as
-                       a partitioning/bucketing key at scale (co-located,
-                       shuffle-free candidate generation).
+                       same-bucket pairs are scored. The index is a narrow
+                       (cand, t, bucket) key table; the vectors stay in the
+                       corpus and join the candidate pairs by id.
 - ``ivf_topk``         approximate: IVF coarse quantizer with deterministic
                        centroids; queries probe ``nprobe`` nearest inverted
                        lists.
@@ -356,8 +356,9 @@ def with_lsh_bucket(corpus: DataFrame, vec_col: str = "embedding",
                     offset: int = 0) -> DataFrame:
     """Attach a random-hyperplane LSH bucket id (one hash table).
 
-    At scale, write the corpus partitioned/bucketed by this column so
-    candidate generation is a co-located join (SURVEY §4 physical notes).
+    The bucket is a '0'/'1' bit string. Store it as a file column, not a
+    partition directory: partition-value type inference reads '0101'
+    back as the integer 101.
     """
     return corpus.withColumn(
         out_col, hyperplane_bits(as_double_sql(vec_col), n_bits, offset))
@@ -366,24 +367,24 @@ def with_lsh_bucket(corpus: DataFrame, vec_col: str = "embedding",
 def lsh_build_index(corpus: DataFrame, id_col: str = "vec_id",
                     vec_col: str = "embedding", n_bits: int = 8,
                     n_tables: int = 4) -> DataFrame:
-    """Corpus-side multi-table LSH index: (cand, c_vec, c_nrm, t, bucket).
+    """Corpus-side multi-table LSH index: the (cand, t, bucket) key table.
 
     Index construction, separated from search exactly as the reference
     separates ChromaDB ingest (`Hybrid_Recom_vecdb.py:150-165`) from its
-    timed queries: build once, persist (at 100 TB: write partitioned/
-    bucketed by (t, bucket)), serve many queries against it via
-    ``lsh_topk(..., index=...)``. The L2 norm is part of the index so the
-    serve path's per-pair work is one dot + divide.
+    timed queries: build once, persist (``pipeline.write_lsh_index``),
+    serve many queries against it via ``lsh_topk(..., index=...)``. The
+    index holds keys only — ``n_tables`` narrow rows per vector; the
+    vectors stay in the corpus, stored once, and ``lsh_topk`` joins
+    them to the candidate pairs it keeps. ``bucket`` is the '0'/'1'
+    bit string of ``hyperplane_bits``.
     """
-    c = _spread(corpus.select(F.col(id_col).alias("cand"), F.col(vec_col).alias("c_raw"))
-                .withColumn("c_vec", V.as_double(F.col("c_raw")))
-                .withColumn("c_nrm", F.expr(_vnorm_sql("c_vec"))))
+    c = _spread(corpus.select(F.col(id_col).alias("cand"), F.col(vec_col).alias("c_raw")))
     tables = F.array(*[hyperplane_bits(as_double_sql("c_raw"), n_bits, offset=t * n_bits)
                        for t in range(n_tables)])
     # the index parameters ride as column metadata so a serve call with
     # mismatched n_bits/n_tables fails loudly instead of silently joining
     # near-empty candidate sets (ADVICE r2)
-    return (c.select("cand", "c_vec", "c_nrm", F.posexplode(tables).alias("t", "bucket"))
+    return (c.select("cand", F.posexplode(tables).alias("t", "bucket"))
             .withMetadata("bucket", {"lsh.n_bits": n_bits, "lsh.n_tables": n_tables}))
 
 
@@ -410,17 +411,20 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int,
     A pair is a candidate if ANY of the ``n_tables`` independent b-bit
     tables buckets query and corpus row together (OR-amplification:
     recall = 1 − (1 − p^b)^L for per-plane agreement p). Candidates are
-    deduped on (qid, cand) BEFORE scoring so each pair pays one cosine.
+    scored where they are generated and deduped on (qid, cand) after.
 
     Scale shape: ONE pass computes all L buckets per row, ``posexplode``
     emits (table, bucket) keys, and a single equi-join on that composite
     key generates candidates — candidate volume scales with bucket sizes
-    × L, never |Q|·|corpus|, and the corpus is scanned/hashed once (not
+    × L, never |Q|·|corpus|, and the corpus is hashed in one pass (not
     L times as a per-table join-branch design would).
 
-    ``index``: a prebuilt ``lsh_build_index`` table (same n_bits/n_tables,
-    verified against the column metadata it carries) — the serve path;
-    when omitted the index is built inline.
+    ``index``: a prebuilt ``lsh_build_index`` key table (same
+    n_bits/n_tables, verified against the column metadata it carries) —
+    the serve path; when omitted the key table is built inline. Either
+    way the candidates' vectors and norms come from ``corpus``, which
+    must hold every indexed id: the inline and persisted paths run one
+    plan.
 
     ``multiprobe=1`` additionally probes, per table, every bucket at
     Hamming distance 1 from the query's bucket (the classic multi-probe
@@ -445,6 +449,9 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int,
         c_keyed = index
     else:
         c_keyed = lsh_build_index(corpus, id_col, vec_col, n_bits, n_tables)
+    c_vecs = (corpus.select(F.col(id_col).alias("cand"),
+                            V.as_double(F.col(vec_col)).alias("c_vec"))
+              .withColumn("c_nrm", F.expr(_vnorm_sql("c_vec"))))
 
     q_tables = F.array(*[hyperplane_bits(as_double_sql("q_raw"), n_bits, offset=t * n_bits)
                          for t in range(n_tables)])
@@ -465,34 +472,33 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int,
             ) for j in range(n_bits)])
         q_keyed = q_keyed.withColumn("bucket", F.explode(flips))
 
-    # Score BEFORE the dedup shuffle: the bucket join's output is map-side
-    # partitioned (broadcast preserves the spread index side), so each
-    # candidate pair pays its dot product where the vectors already are,
-    # and only (qid, cand, score) — a few dozen bytes — ever shuffles.
-    # The old shape deduped first, which shuffled two dim-length double
-    # arrays per pair (~1 KB/row, the measured bottleneck). A pair that
+    # The key join yields the candidate pairs; the corpus vectors join
+    # them by id, and each pair is scored BEFORE the dedup shuffle, so
+    # only (qid, cand, score) — a few dozen bytes — shuffles on the way
+    # to the top-k. At serving sizes the vector side is broadcast; past
+    # the broadcast threshold the id join sort-merges, and the pairs
+    # carry the query vector through that one shuffle. A pair that
     # collides in several tables is scored that many times (≤ n_tables,
-    # map-side, embarrassingly parallel) — the classic shuffle-vs-
-    # recompute trade at 100 TB where the shuffle is the scarce resource.
-    # Score is a pure function of the pair, so dropDuplicates stays
-    # value-deterministic. Hoisted norms + dim-unrolled dot = one
-    # codegen'd multiply-add chain per pair, bit-identical to V.cosine
-    # (same fold order; oracle-pinned).
+    # map-side) — the shuffle-vs-recompute trade at 100 TB where the
+    # shuffle is the scarce resource. Score is a pure function of the
+    # pair, so dropDuplicates stays value-deterministic. Hoisted norms +
+    # dim-unrolled dot = one codegen'd multiply-add chain per pair,
+    # bit-identical to V.cosine (same fold order; oracle-pinned).
     pair_dot = V.dot_expr("q_vec", "c_vec", dim) if dim else \
         V.dot(F.col("q_vec"), F.col("c_vec"))
     denom = F.col("q_nrm") * F.col("c_nrm")
     # ONE shuffle end-to-end: the explicit qid repartition feeds BOTH the
     # dedup aggregate (clustering (qid, cand) ⊇ qid → EnsureRequirements
     # elides its exchange; partial agg still combines map-side) and the
-    # top-k window (clustering qid) — the old dedup-then-window shape paid
-    # two back-to-back exchanges on ~the same rows. Explicit-N also opts
-    # out of AQE bytes-based coalescing: post-score rows are tiny in bytes
-    # but the window sort behind them should stay wide.
+    # top-k window (clustering qid). Explicit-N also opts out of AQE
+    # bytes-based coalescing: post-score rows are tiny in bytes but the
+    # window sort behind them should stay wide.
     parallelism = queries.sparkSession.sparkContext.defaultParallelism
     scored = (
         F.broadcast(q_keyed)
         .join(c_keyed, ["t", "bucket"])
         .filter(F.col("cand") != F.col("qid"))
+        .join(c_vecs, "cand")
         .withColumn("score",
                     fround(F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0)),
                            ROUND_SCORE))

@@ -12,15 +12,16 @@ parquet tables (SURVEY §3 EP1) written by one lazy DAG:
                   columns, embedding array<float>, LSH bucket column
 
 "Index build" on Spark is a table layout decision, not a server process:
-the index table is written partitioned by the LSH bucket so an ANN probe
-prunes to matching partitions (SURVEY §4 physical notes). ``overwrite``
+the index table is written flat, each file sorted by the LSH bucket, and
+the bucket stays the '0'/'1' string column the probe compares (as a
+partition directory it would read back as an integer). ``overwrite``
 mode reproduces the reference's destroy-and-recreate semantics (A4,
 ``:150-158``, ALWAYS_FRESH_RUN ``:28``).
 
 At 100 TB: every stage is shuffle-bounded (sample = per-partition top-n
-merge; edges = one hash shuffle; embed = Arrow-batched map; write = one
-shuffle into bucket partitioning) — no driver-side materialization of
-anything but the final row counts.
+merge; edges = one hash shuffle; embed = Arrow-batched map; write = a
+per-partition sort) — no driver-side materialization of anything but the
+final row counts.
 """
 
 from __future__ import annotations
@@ -74,8 +75,7 @@ def build_index(spark: SparkSession, meta_path: str, out_dir: str,
         .select("asin", "doc", "title", "group", "embedding")
     )
     index = with_lsh_bucket(index, "embedding", lsh_bits)
-    # A3 sink: partitioned by LSH bucket → ANN probes prune partitions
-    _write_table(index, f"{out_dir}/index", ("bucket",))
+    _write_table(index.sortWithinPartitions("bucket"), f"{out_dir}/index")
     return {name: df.count() for name, df in load_index(spark, out_dir).items()}
 
 
@@ -181,26 +181,26 @@ def append_ivf_index(spark: SparkSession, new_embeddings: DataFrame,
 
 def write_lsh_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
                     n_bits: int = 5, n_tables: int = 8) -> None:
-    """Write the multi-table hyperplane LSH index as partition-prunable
-    parquet: bucket rows land partitioned by ``(t, bucket)`` so a probe
-    of one bucket per table scans exactly ``n_tables`` directories
-    (multi-probe: ×(1+n_bits)) and skips the rest at the FILE level —
-    the same I/O-dial layout the IVF lists get. The (n_bits, n_tables)
-    params ride in a sidecar so serve calls re-attach the metadata that
-    makes a parameter mismatch fail loudly (``_check_index_params``).
+    """Write the multi-table hyperplane LSH index: the flat
+    ``(cand, t, bucket)`` key table ``lsh_buckets``, each file sorted by
+    ``(t, bucket)``, with ``bucket`` the '0'/'1' string the probe
+    compares. The index holds keys only: ``lsh_topk`` joins the
+    candidates' vectors from the corpus, where each vector is stored
+    once. The (n_bits, n_tables) params ride in a sidecar so serve calls
+    re-attach the metadata that makes a parameter mismatch fail loudly
+    (``_check_index_params``).
 
-    This was the one index family a user had to rebuild from scratch
-    (VERDICT r8 missing #3): the bucket assignment is a pure map of the
-    stored hyperplane parameters, so the append lifecycle below is
-    O(batch) like every other family.
+    The bucket assignment is a pure map of the stored hyperplane
+    parameters, so the append lifecycle below is O(batch) like every
+    other family.
     """
     from .operators.similarity import lsh_build_index
 
-    _write_table(lsh_build_index(embeddings, n_bits=n_bits, n_tables=n_tables),
-                 f"{out_dir}/lsh_buckets", _LSH_FAMILY.by["buckets"])
+    _write_table(lsh_build_index(embeddings, n_bits=n_bits, n_tables=n_tables)
+                 .sortWithinPartitions("t", "bucket"), f"{out_dir}/lsh_buckets")
     # compact appended-ids ledger: the append replay guard probes THIS
     # (one narrow row per vector) instead of distinct-scanning the whole
-    # bucket table (n_tables rows × vector payload each) — ADVICE r9
+    # key table (n_tables rows per vector) — ADVICE r9
     embeddings.select(F.col("vec_id").alias("doc_id")).distinct() \
         .write.mode("overwrite").parquet(f"{out_dir}/lsh_docs")
     spark.createDataFrame([(n_bits, n_tables)],
@@ -217,8 +217,7 @@ def _write_table(df: DataFrame, path: str, by: tuple = ()) -> None:
 
     A partitioned write is clustered by ``by`` first: without it every
     write task opens a file in every directory it sees — tasks × dirs
-    tiny files (measured 45 s of filesystem ops for a 16k-row LSH index
-    at sf0.1). Hash-clustered, each group lands in exactly one task →
+    tiny files. Hash-clustered, each group lands in exactly one task →
     one file per dir. At very large scale add a salt column to the
     repartition for intra-partition parallelism; the layout is
     unchanged."""
@@ -228,46 +227,29 @@ def _write_table(df: DataFrame, path: str, by: tuple = ()) -> None:
 
 
 def load_lsh_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The (cand, c_vec, c_nrm, t, bucket) table written by
-    :func:`write_lsh_index`, with the param metadata re-attached —
-    drop-in for ``lsh_topk(..., index=...)``.
-
-    The read pins an explicit schema for the two PARTITION columns:
-    ``bucket`` is a hyperplane BIT-STRING ('01010'), and partition-value
-    type inference would silently parse it as the integer 1010 — losing
-    the leading zeros that distinguish buckets. File-column types come
-    from the footer of a first (metadata-only) inferred read."""
+    """The (cand, t, bucket) key table written by :func:`write_lsh_index`,
+    with the param metadata re-attached — drop-in for
+    ``lsh_topk(..., index=...)``, which takes the vectors from its
+    ``corpus``. Committed append and compaction stages are rolled
+    forward first."""
     _LSH_FAMILY.finish(spark, out_dir, as_reader=True)
     _LSH_COMPACT_FAMILY.finish(spark, out_dir, as_reader=True)
     p = spark.read.parquet(f"{out_dir}/lsh_params").collect()[0]
-    return (_read_lsh_buckets(spark, out_dir)
+    return (spark.read.parquet(f"{out_dir}/lsh_buckets")
             .withMetadata("bucket", {"lsh.n_bits": int(p.n_bits),
                                      "lsh.n_tables": int(p.n_tables)}))
 
 
-def _read_lsh_buckets(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The live bucket table with the partition-column schema pinned
-    (``bucket`` as STRING — see :func:`load_lsh_index`)."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    base = spark.read.parquet(f"{out_dir}/lsh_buckets")
-    schema = StructType(
-        [f for f in base.schema.fields if f.name not in ("t", "bucket")]
-        + [StructField("t", IntegerType()), StructField("bucket", StringType())])
-    return spark.read.schema(schema).parquet(f"{out_dir}/lsh_buckets")
-
-
 def compact_lsh_index(spark: SparkSession, out_dir: str,
                       target_rows_per_file: int = 4_000_000) -> dict:
-    """OPTIMIZE the persisted LSH artifact in place: rewrite the bucket
-    table to ONE file per (t, bucket) directory and the docs ledger to
-    ~``target_rows_per_file``-row files, then atomically swap. Closes
-    the artifact lifecycle (write → append → load → serve → COMPACT →
-    vacuum): every ``append_lsh_index`` batch adds at least one file to
-    each touched partition dir, so after k appends a probe reads k
-    footers per bucket — at 100 TB scan planning is O(files), and this
-    rewrite resets it to O(dirs) while preserving the partition-pruned
-    layout exactly (``compact_parquet`` would flatten it).
+    """OPTIMIZE the persisted LSH artifact in place: :func:`compact_parquet`
+    rewrites the key table into ~``target_rows_per_file``-row files
+    range-sorted on ``(t, bucket)``, and the docs ledger into files of
+    the same size, then both are atomically swapped. Closes the artifact
+    lifecycle (write → append → load → serve → COMPACT → vacuum): every
+    ``append_lsh_index`` batch adds its own files, so after k appends a
+    probe opens k+1 times the footers of one write — at 100 TB scan
+    planning is O(files), and this rewrite resets it.
 
     Crash safety: the rewritten tables stage under
     ``lsh_compact__staging`` with the ``_COMMIT`` marker protocol; the
@@ -282,32 +264,28 @@ def compact_lsh_index(spark: SparkSession, out_dir: str,
 
     Returns {files_in, files_out, rows} for the bucket table.
     """
-    import math
-
     _LSH_FAMILY.finish(spark, out_dir)          # fold pending appends first
     _LSH_COMPACT_FAMILY.finish(spark, out_dir)  # recover a crashed compaction
-    df = _read_lsh_buckets(spark, out_dir)
-    files_in = len(df.inputFiles())
-    rows = df.count()
-    docs = spark.read.parquet(f"{out_dir}/lsh_docs")
-    n_files = max(1, math.ceil(docs.count() / max(1, target_rows_per_file)))
-    _LSH_COMPACT_FAMILY.commit_tables(spark, out_dir, {
-        "buckets": df, "docs": docs.repartition(n_files)})
-    files_out = len(_read_lsh_buckets(spark, out_dir).inputFiles())
-    return {"files_in": files_in, "files_out": files_out, "rows": rows}
+    staging = _LSH_COMPACT_FAMILY.staging(out_dir)
+    compact_parquet(spark, f"{out_dir}/lsh_docs", f"{staging}/docs",
+                    target_rows_per_file)
+    stats = compact_parquet(spark, f"{out_dir}/lsh_buckets", f"{staging}/buckets",
+                            target_rows_per_file, ["t", "bucket"])
+    _LSH_COMPACT_FAMILY.mark(spark, out_dir)
+    return stats
 
 
 def append_lsh_index(spark: SparkSession, new_embeddings: DataFrame,
                      out_dir: str, id_col: str = "vec_id") -> None:
     """Incremental LSH maintenance: bucket ONLY the new batch with the
-    STORED hyperplane params and add its rows to the ``t=/bucket=``
-    directories the batch touches, so growth costs O(batch), never
+    STORED hyperplane params and add its key files, each sorted by
+    ``(t, bucket)``, to the key table, so growth costs O(batch), never
     O(corpus).
 
     Replay guard (ADVICE r9): the family guard anti-joins the compact
-    ``lsh_docs`` ledger (one narrow row per stored vector), never a
-    distinct over the full bucket table — a re-appended vector is a
-    no-op at O(|ledger ids|) probe cost, with no vector payloads read.
+    ``lsh_docs`` ledger (one row per stored vector, where the key table
+    holds ``n_tables``) — a re-appended vector is a no-op at
+    O(|ledger ids|) probe cost.
 
     Crash safety (VERDICT r9 #7): bucket rows and ledger rows move
     through the SAME staged commit as every other append. Both are
@@ -331,7 +309,8 @@ def append_lsh_index(spark: SparkSession, new_embeddings: DataFrame,
     p = spark.read.parquet(f"{out_dir}/lsh_params").collect()[0]
     _LSH_FAMILY.commit_tables(spark, out_dir, {
         "buckets": lsh_build_index(batch, id_col=id_col, n_bits=int(p.n_bits),
-                                   n_tables=int(p.n_tables)),
+                                   n_tables=int(p.n_tables))
+                   .sortWithinPartitions("t", "bucket"),
         "docs": batch.select(F.col(id_col).alias("doc_id")).distinct()})
 
 
@@ -881,10 +860,9 @@ class _StagedFamily:
       unmoved files in the stage and a re-run moves just those — no row
       is lost and none is doubled.
 
-    Both are renames only: the publish runs no Spark job, and the
-    bit-string LSH bucket values never round-trip through partition
-    type inference. Every step is idempotent, and the marker is deleted
-    LAST: its absence means the live dirs are consistent. Readers rely
+    Both are renames only: the publish runs no Spark job. Every step is
+    idempotent, and the marker is deleted LAST: its absence means the
+    live dirs are consistent. Readers rely
     on: ``_COMMIT`` under ``__staging`` or its ``__publishing`` sibling
     → the staged tables are the committed truth; otherwise the live
     dirs are. Live names are RELATIVE to the artifact root passed at
@@ -1049,11 +1027,10 @@ _MAXSIM_FAMILY = _StagedFamily(
 
 _LSH_FAMILY = _StagedFamily(
     "lsh", appends={"buckets": "lsh_buckets", "docs": "lsh_docs"},
-    ledger=("lsh_docs", "doc_id"), by={"buckets": ("t", "bucket")})
+    ledger=("lsh_docs", "doc_id"))
 
 _LSH_COMPACT_FAMILY = _StagedFamily(
-    "lsh_compact", swaps={"buckets": "lsh_buckets", "docs": "lsh_docs"},
-    by={"buckets": ("t", "bucket")})
+    "lsh_compact", swaps={"buckets": "lsh_buckets", "docs": "lsh_docs"})
 
 _DEDUP_FAMILY = _StagedFamily(
     "dedup",

@@ -56,9 +56,16 @@ def test_index_tables_shape(spark, index_dir):
     # A9 not in sample → edge dropped by the B5 semi-join
     pairs = {(r.src, r.dst) for r in t["edges"].collect()}
     assert pairs == {("A1", "A2"), ("A1", "A3"), ("A2", "A1"), ("A3", "A1")}
-    # index partitioned by LSH bucket on disk
-    import os
-    assert any(d.startswith("bucket=") for d in os.listdir(f"{index_dir}/index"))
+    # the bucket reads back as the written '0'/'1' string, leading zeros
+    # included (a partition directory would read '0101' back as 101)
+    from hybrid_recommendation_system_using_vector_db_spark.operators.similarity import (
+        with_lsh_bucket)
+    from hybrid_recommendation_system_using_vector_db_spark.pipeline import INDEX_LSH_BITS
+    assert t["index"].schema["bucket"].dataType.simpleString() == "string"
+    got = {(r.asin, r.bucket) for r in t["index"].collect()}
+    want = {(r.asin, r.bucket) for r in with_lsh_bucket(
+        t["index"].drop("bucket"), "embedding", INDEX_LSH_BITS).collect()}
+    assert got == want and all(len(b) == INDEX_LSH_BITS for _, b in got)
 
 
 def test_cli_recommend_query(spark, index_dir):
@@ -1106,13 +1113,14 @@ def test_index_append_is_staged_and_exactly_once(spark, sf_dir, tmp_path,
 def test_lsh_index_incremental_append_equals_bulk(spark, tmp_path):
     """write_lsh_index(A) + append_lsh_index(B) == a bulk build over
     A ∪ B (bucketing is a pure map of the stored hyperplane params, so
-    incremental growth cannot drift), the probed layout prunes at the
-    partition level, a replayed batch is a no-op, and serving through
-    the loaded index reproduces the in-memory index exactly."""
+    incremental growth cannot drift), the key table is stored flat, a
+    replayed batch is a no-op, and serving through the loaded index
+    reproduces the in-memory index exactly."""
+    import os
+
     from hybrid_recommendation_system_using_vector_db_spark import pipeline
     from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
     from hybrid_recommendation_system_using_vector_db_spark.operators import similarity as sim
-    from hybrid_recommendation_system_using_vector_db_spark.plans import formatted_plan
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
@@ -1123,22 +1131,18 @@ def test_lsh_index_incremental_append_equals_bulk(spark, tmp_path):
     pipeline.append_lsh_index(spark, b, out)
     loaded = pipeline.load_lsh_index(spark, out)
     bulk = sim.lsh_build_index(emb, n_bits=5, n_tables=4)
-    key = lambda t: (t[0], t[1])
-    got = sorted([(r.cand, r.t, r.bucket, [round(x, 9) for x in r.c_vec],
-                   round(r.c_nrm, 9)) for r in loaded.collect()], key=key)
-    want = sorted([(r.cand, r.t, r.bucket, [round(x, 9) for x in r.c_vec],
-                    round(r.c_nrm, 9)) for r in bulk.collect()], key=key)
+    got = sorted(map(tuple, loaded.collect()))
+    want = sorted(map(tuple, bulk.collect()))
     assert got == want
     # params metadata re-attached: a mismatched serve call fails loudly
     import pytest as _pytest
     qs = emb.filter(F.col("vec_id") % 20 == 0)
     with _pytest.raises(ValueError):
         sim.lsh_topk(qs, emb, 5, n_bits=8, n_tables=4, index=loaded, dim=64)
-    # partition pruning at the file level on the (t, bucket) layout
-    probed = loaded.filter((F.col("t") == 0) & (F.col("bucket") == 1))
-    plan = formatted_plan(probed)
-    assert "PartitionFilters" in plan and "bucket" in plan, plan
-    assert probed.count() < loaded.count()
+    # the (cand, t, bucket) key table is stored flat: no partition dirs
+    assert loaded.columns == ["cand", "t", "bucket"]
+    assert not [d for d in os.listdir(f"{out}/lsh_buckets")
+                if os.path.isdir(os.path.join(out, "lsh_buckets", d))]
     # replayed batch is a no-op
     n0 = loaded.count()
     pipeline.append_lsh_index(spark, b, out)
@@ -1275,7 +1279,7 @@ def test_lsh_append_staged_commit_crash_windows(spark, tmp_path):
     staging2 = os.path.join(out2, "lsh__staging")
     rows_b = sim.lsh_build_index(b, n_bits=5, n_tables=4) \
         .localCheckpoint(eager=True)
-    pipeline._write_table(rows_b, f"{staging2}/buckets", ("t", "bucket"))
+    pipeline._write_table(rows_b, f"{staging2}/buckets")
     b.select(F.col("vec_id").alias("doc_id")).distinct() \
         .write.parquet(f"{staging2}/docs")
     open(os.path.join(staging2, "_COMMIT"), "w").close()
@@ -1317,9 +1321,7 @@ def test_lsh_append_publish_runs_no_spark_job(spark, tmp_path):
     out = str(tmp_path / "lsh")
     pipeline.write_lsh_index(spark, a, out, n_bits=5, n_tables=4)
     staging = os.path.join(out, "lsh__staging")
-    sim.lsh_build_index(b, n_bits=5, n_tables=4) \
-        .repartition("t", "bucket").write.partitionBy("t", "bucket") \
-        .parquet(f"{staging}/buckets")
+    sim.lsh_build_index(b, n_bits=5, n_tables=4).write.parquet(f"{staging}/buckets")
     b.select(F.col("vec_id").alias("doc_id")).write.parquet(f"{staging}/docs")
     open(os.path.join(staging, "_COMMIT"), "w").close()
     sc = spark.sparkContext
@@ -1435,17 +1437,17 @@ def test_vacuum_publishes_stale_commit_with_renamed_away_subdirs(spark, tmp_path
 
 
 def test_compact_lsh_index_preserves_layout_and_rows(spark, tmp_path):
-    """OPTIMIZE lifecycle: after three append batches the bucket dirs
-    hold multiple small files; compaction rewrites to one file per
-    (t, bucket) dir and swaps atomically — row set, served results,
-    partition pruning, and the params sidecar all unchanged; the docs
-    ledger still guards replays."""
+    """OPTIMIZE lifecycle: after three append batches the key table
+    holds multiple small files; compaction rewrites it to
+    ~target_rows_per_file-row files (one here) range-sorted on
+    (t, bucket) and swaps atomically — row set, served results, the
+    flat layout, and the params sidecar all unchanged; the docs ledger
+    still guards replays."""
     import os
 
     from hybrid_recommendation_system_using_vector_db_spark import pipeline
     from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
     from hybrid_recommendation_system_using_vector_db_spark.operators import similarity as sim
-    from hybrid_recommendation_system_using_vector_db_spark.plans import formatted_plan
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
@@ -1467,17 +1469,17 @@ def test_compact_lsh_index_preserves_layout_and_rows(spark, tmp_path):
     stats = pipeline.compact_lsh_index(spark, out)
     assert stats["rows"] == len(pre_rows)
     assert stats["files_out"] < stats["files_in"], stats
-    # one file per (t, bucket) dir after the rewrite
-    n_dirs = pipeline._read_lsh_buckets(spark, out) \
-        .select("t", "bucket").distinct().count()
-    assert stats["files_out"] == n_dirs
-    # row set, serving, and pruning unchanged
+    # compact_parquet's file count: ceil(rows / 4M target) = 1
+    assert stats["files_out"] == 1
+    # row set, serving, and the flat sorted layout unchanged
     post = pipeline.load_lsh_index(spark, out)
     assert sorted(map(key, post.collect())) == pre_rows
     assert serve() == pre_serve
-    plan = formatted_plan(post.filter((F.col("t") == 0)
-                                      & (F.col("bucket") == "0101")))
-    assert "PartitionFilters" in plan and "bucket" in plan, plan
+    assert post.columns == ["cand", "t", "bucket"]
+    assert not [d for d in os.listdir(f"{out}/lsh_buckets")
+                if os.path.isdir(os.path.join(out, "lsh_buckets", d))]
+    keys = [(r.t, r.bucket) for r in post.select("t", "bucket").collect()]
+    assert keys == sorted(keys)
     # replay guard still intact after the ledger rewrite
     pipeline.append_lsh_index(spark, parts[1], out)
     assert sorted(map(key,
@@ -1489,6 +1491,34 @@ def test_compact_lsh_index_preserves_layout_and_rows(spark, tmp_path):
     again = pipeline.compact_lsh_index(spark, out)
     assert again["files_out"] == stats["files_out"]
     assert again["rows"] == stats["rows"]
+
+
+def test_lsh_index_is_flat_key_table(spark, sf_dir, tmp_path):
+    """The persisted LSH index holds keys only: after write + append +
+    compact, ``lsh_buckets`` is a flat (cand, t, bucket) table with no
+    vector column and no ``t=``/``bucket=`` directories, and
+    ``load_lsh_index`` returns ``bucket`` as the '0'/'1' string."""
+    import os
+
+    from hybrid_recommendation_system_using_vector_db_spark import pipeline
+    from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = str(tmp_path / "lsh")
+    pipeline.write_lsh_index(spark, emb.filter(F.col("vec_id") % 2 == 0), out,
+                             n_bits=4, n_tables=3)
+    pipeline.append_lsh_index(spark, emb.filter(F.col("vec_id") % 2 == 1), out)
+    pipeline.compact_lsh_index(spark, out)
+    on_disk = spark.read.parquet(f"{out}/lsh_buckets")
+    assert on_disk.columns == ["cand", "t", "bucket"]
+    names = os.listdir(f"{out}/lsh_buckets")
+    assert any(n.endswith(".parquet") for n in names)
+    assert all(os.path.isfile(os.path.join(out, "lsh_buckets", n)) for n in names)
+    idx = pipeline.load_lsh_index(spark, out)
+    assert idx.schema["bucket"].dataType.simpleString() == "string"
+    buckets = {r.bucket for r in idx.select("bucket").distinct().collect()}
+    assert buckets and all(len(b) == 4 and set(b) <= {"0", "1"} for b in buckets)
+    assert idx.count() == emb.count() * 3
 
 
 def test_compact_lsh_index_crash_windows(spark, tmp_path):
