@@ -3918,9 +3918,10 @@ def q_pq_topk(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     # widened before the checkpoint so serving scores 32-way with no
     # per-call shuffle (see the sq_recon memo note)
+    books = _pq_books(spark, sf_dir, emb)
     recon = memo(spark, ("pq_recon", sf_dir),
-                 lambda: similarity._spread(similarity.pq_reconstruct(
-                     emb, _pq_books(spark, sf_dir, emb)))
+                 lambda: similarity._spread(similarity.pq_decode(
+                     similarity.pq_encode(emb, books), books))
                  .localCheckpoint(eager=True))
     return similarity.cosine_topk(
         emb.filter(F.col("vec_id") % QUERY_MOD == 0), recon, TOP_K,
@@ -5350,9 +5351,9 @@ def _pq_sql_parts(pq_m: int = 8, n_centroids: int = 16,
     """(CTE chain, codeword concat, w-joins) for the PQ reconstruction —
     one prefixed k-means CTE chain per subspace over the sliced
     subvectors, then nearest-codeword (csim desc, centroid_id asc) pick.
-    Mirrors ``similarity.pq_train``/``pq_reconstruct`` exactly; requires a
-    ``u(id, v)`` CTE in scope. Shared by the ``pq_topk`` oracle and the
-    ``ann_recall`` pq row."""
+    Mirrors ``similarity.pq_train`` and ``pq_decode(pq_encode(...))``
+    exactly; requires a ``u(id, v)`` CTE in scope. Shared by the
+    ``pq_topk`` oracle and the ``ann_recall`` pq row."""
     pq_sub = VEC_DIM // pq_m
     pq_chains, pq_picks = [], []
     for s in range(pq_m):
@@ -5873,7 +5874,7 @@ def _oracle_sql_all() -> dict[str, str]:
     )
 
     # PQ reconstruction chain (shared with the ann_recall pq row) —
-    # mirrors similarity.pq_train/pq_reconstruct exactly.
+    # mirrors similarity.pq_train and pq_decode(pq_encode(...)) exactly.
     pq_chain_sql, pq_concat, pq_joins = _pq_sql_parts()
 
     sql = {

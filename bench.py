@@ -24,8 +24,39 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.run import Contention, _psi_some_us  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def stdout_line(headline: dict, timings: dict, driver: set,
+                budget: int = 1940) -> str:
+    """The compact headline line for stdout, at most ``budget`` chars.
+
+    The driver tail-captures the last ~2000 chars of stdout and
+    json-parses the final line; rounds 6-7 recorded parsed=null because
+    the line outgrew that window. So: compact separators, 2-decimal
+    times, and while still too long, drop ``extra_queries()``-only keys
+    (not in ``driver``) fastest first — a ``queries()`` key, which the
+    driver checks, is never dropped. ``queries_omitted`` counts the
+    dropped keys; bench_full.json always has every entry at full
+    precision. 1940 = the 2000-char window less 60 chars of slack (the
+    line ends the stream, so line + newline <= 2000 is the hard bound).
+    """
+    headline = dict(headline)
+    kept = dict(timings)
+    # slowest first, so pop() takes the fastest droppable key
+    droppable = sorted((n for n in timings if n not in driver),
+                       key=lambda n: timings[n], reverse=True)
+    while True:
+        headline["queries"] = {k: round(v, 2) for k, v in kept.items()}
+        if len(kept) < len(timings):
+            headline["queries_omitted"] = len(timings) - len(kept)
+        line = json.dumps(headline, separators=(",", ":"))
+        if len(line) <= budget or not droppable:
+            return line
+        kept.pop(droppable.pop())
 
 
 def main() -> None:
@@ -94,61 +125,33 @@ def main() -> None:
     # loadavg includes this bench's own local[32] work. Two gates:
     # stall fraction > 10% in any canary window (uniform external load),
     # canary max/min > 1.25 across passes (load that comes and goes).
-    def _psi_total():
-        try:
-            with open("/proc/pressure/cpu") as fh:
-                return int(fh.readline().rsplit("total=", 1)[1])
-        except Exception:
-            return None
-
-    # r14 second gate: HYPERVISOR STEAL. PSI only sees runnable-but-
-    # not-running inside this kernel; CPU stolen by the host shows up
-    # in /proc/stat field 8 (steal jiffies) and in nothing PSI reports
-    # — measured here as exactly the failure mode that inflated a sweep
-    # 1.5x while every canary stall read ~0. Sampled around each PASS
-    # (not just the canary window: steal hits the local[32] work).
-    def _steal():
-        try:
-            with open("/proc/stat") as fh:
-                return int(fh.readline().split()[8])
-        except Exception:
-            return None
-
+    # A third gate, HYPERVISOR STEAL, is perfbench's Contention probe
+    # around each pass: PSI only sees runnable-but-not-running inside
+    # this kernel, while CPU stolen by the host shows up only in
+    # /proc/stat's steal jiffies (measured here as exactly the failure
+    # mode that inflated a sweep 1.5x while every canary stall read ~0).
     def _canary():
         import numpy as _np
         a = _np.random.default_rng(0).random(500_000)
-        p0, t0 = _psi_total(), time.perf_counter()
+        p0, t0 = _psi_some_us(), time.perf_counter()
         acc = 0.0
         for _ in range(40):
             acc += float(_np.sort(a)[0] + a.sum())
         dt = time.perf_counter() - t0
-        p1 = _psi_total()
+        p1 = _psi_some_us()
         stall = (None if p0 is None or p1 is None
                  else round((p1 - p0) / 1e6 / dt, 4))
         return round(dt * 1000.0, 1), stall
 
     canary_ms: list[float] = []
     canary_stall: list = []
-    pass_steal_frac: list = []   # stolen fraction of machine capacity/pass
-    # ADVICE r14: under cgroup CPU limits os.cpu_count() overstates usable
-    # capacity (understating the steal fraction), and USER_HZ is a kernel
-    # build choice, not a constant — take both from the OS.
-    try:
-        n_cpu = min(os.cpu_count() or int(CPUS),
-                    len(os.sched_getaffinity(0)))
-    except (AttributeError, OSError):
-        n_cpu = os.cpu_count() or int(CPUS)
-    try:
-        user_hz = float(os.sysconf("SC_CLK_TCK"))
-    except (ValueError, OSError):
-        user_hz = 100.0
-
+    pass_steal_frac: list = []   # steal jiffies / all jiffies per pass
     for _pass in range(iters):
         pass_load_avg.append(_load())
         cms, cstall = _canary()
         canary_ms.append(cms)
         canary_stall.append(cstall)
-        s0, pt0 = _steal(), time.perf_counter()
+        probe = Contention()
         for name in names:
             if name in failed:
                 continue
@@ -162,11 +165,8 @@ def main() -> None:
                 all_iters.pop(name, None)
                 print(f"# {name}: FAILED {type(e).__name__}: {str(e)[:120]}",
                       file=sys.stderr)
-        s1, pdt = _steal(), time.perf_counter() - pt0
-        # capacity = SC_CLK_TCK jiffies/s per usable CPU
-        pass_steal_frac.append(
-            None if s0 is None or s1 is None or pdt <= 0
-            else round((s1 - s0) / (n_cpu * user_hz * pdt), 4))
+        steal = probe.report()["steal_frac"]
+        pass_steal_frac.append(None if steal is None else round(steal, 4))
     timings: dict[str, float] = {}
     total = 0.0
     windowed: list[str] = []
@@ -210,7 +210,7 @@ def main() -> None:
         print(f"# canary contention: ms={canary_ms} "
               f"stall_frac={canary_stall} spread={canary_spread:.2f}x",
               file=sys.stderr)
-    # steal gate (r14): >1% of machine capacity stolen during any pass.
+    # steal gate (r14): >1% of all CPU jiffies stolen during any pass.
     # A clean host measures ~0.1-0.6% at idle; the sweep that drifted
     # 1.5x measured 2.3-2.7% during its passes with every other gate
     # green. Hypervisor steal is invisible to PSI and to loadavg.
@@ -401,31 +401,7 @@ def main() -> None:
         json.dump(full, fh, indent=1)
     print(f"# full payload (iters/builds/load_avg): {full_path}", file=sys.stderr)
     print(json.dumps(full), file=sys.stderr)
-    # stdout: the compact headline line ONLY. The driver tail-captures the
-    # last ~2000 chars of stdout and json-parses the final line; rounds 6-7
-    # recorded parsed=null because the line outgrew that window as the query
-    # surface passed ~90 entries. Keep the line under the window: compact
-    # separators, 2-decimal times, and if still too long drop the FASTEST
-    # queries from the stdout copy (bench_full.json always has every entry
-    # at full precision — "queries_omitted" says how many were trimmed).
-    # r15: 1940 (was 1900) — the driver window is 2000 chars and the line
-    # ends the stream, so line+newline <= 2000 is the hard bound; 60 chars
-    # of slack plus the scalar gate fields buys back the ~11 per-query
-    # keys the r14 arrays cost (VERDICT r14 next #2: >= 80 keys).
-    line_budget = 1940
-    headline["queries"] = {k: round(v, 2) for k, v in timings.items()}
-    line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > line_budget:
-        by_time = sorted(timings.items(), key=lambda kv: kv[1], reverse=True)
-        kept = dict(by_time)
-        while len(line) > line_budget and kept:
-            name, _ = by_time.pop()  # drop current fastest
-            kept.pop(name, None)
-            headline["queries"] = {
-                k: round(v, 2) for k, v in timings.items() if k in kept}
-            headline["queries_omitted"] = len(timings) - len(kept)
-            line = json.dumps(headline, separators=(",", ":"))
-    print(line)
+    print(stdout_line(headline, timings, set(entry_mod.queries())))
     spark.stop()
 
 

@@ -19,6 +19,15 @@ first at each scale:
 - ``ivf_topk``         approximate: IVF coarse quantizer with deterministic
                        centroids; queries probe ``nprobe`` nearest inverted
                        lists.
+- ``pq_topk`` / ``ivfpq_topk``  approximate over product-quantized codes
+                       (plain, or residuals of the IVF coarse quantizer).
+
+One copy of each kernel: every pair scorer takes its score from
+``_pair_cos`` (hoisted norms, one dot + divide); every nearest-codeword
+assignment — IVF lists, k-means and PQ training, PQ and IVF-PQ encoding,
+SemDeDup, outliers — is the ``_pick_sql`` argmax; ``kmeans_centroids_local``
+is the one-subspace case of ``pq_train``'s Lloyd loop; and the PQ and
+IVF-PQ reconstructions are the decode of their encoded codes.
 
 Determinism discipline (SURVEY §7.1): scores are rounded before ranking and
 ties are broken by candidate id ascending, so results are reproducible
@@ -29,7 +38,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.portable import fround
@@ -165,36 +174,51 @@ def _spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target) if n < target else df
 
 
-def _scored_pairs(queries: DataFrame, corpus: DataFrame,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  dim: int | None = None) -> DataFrame:
-    """Broadcast-join queries × corpus with rounded cosine, self excluded (B4).
+def _pair_cos(a_vec: str, a_nrm: str, b_vec: str, b_nrm: str,
+              dim: int | None) -> Column:
+    """Rounded cosine of two named array<double> columns from their hoisted
+    L2 norms — the one per-pair score of every pair scorer here.
 
-    L2 norms are hoisted per-row (HOF fold, cheap to build) so the
-    per-pair expression is one ``dim``-unrolled dot + divide: a full
-    inline cosine is 3 unrolled dots, which both costs ~5s of py4j
-    Column construction on the driver and overflows the 64KB codegen
-    method limit inside the join (silent interpreted fallback). The
-    hoisted form is the same ops in the same order → bitwise-identical.
+    Norms are computed per row by the caller, so the per-pair expression is
+    one ``dim``-unrolled dot + divide: a full inline cosine is 3 unrolled
+    dots, which both costs ~5s of py4j Column construction on the driver
+    and overflows the 64KB codegen method limit inside the join (silent
+    interpreted fallback). Same ops in the same fold order as
+    ``V.cosine`` → bitwise-identical (oracle-pinned).
     """
-    if dim is None:
-        dim = _vec_dim(corpus, vec_col)
+    pair_dot = V.dot_expr(a_vec, b_vec, dim) if dim else \
+        V.dot(F.col(a_vec), F.col(b_vec))
+    denom = F.col(a_nrm) * F.col(b_nrm)
+    return fround(F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0)),
+                  ROUND_SCORE)
+
+
+def _pair_sides(queries: DataFrame, corpus: DataFrame, id_col: str,
+                vec_col: str, *keys) -> tuple[DataFrame, DataFrame]:
+    """(qid, *keys, q_vec, q_nrm) and spread (cand, *keys, c_vec, c_nrm):
+    both sides of an exact pair scorer, cast to double with hoisted norms."""
     q = queries.select(
-        F.col(id_col).alias("qid"),
+        F.col(id_col).alias("qid"), *keys,
         V.as_double(F.col(vec_col)).alias("q_vec"),
     ).withColumn("q_nrm", V.l2_norm(F.col("q_vec")))
     c = _spread(corpus.select(
-        F.col(id_col).alias("cand"),
+        F.col(id_col).alias("cand"), *keys,
         V.as_double(F.col(vec_col)).alias("c_vec"),
     )).withColumn("c_nrm", V.l2_norm(F.col("c_vec")))
-    pair_dot = V.dot_expr("q_vec", "c_vec", dim) if dim else \
-        V.dot(F.col("q_vec"), F.col("c_vec"))
-    denom = F.col("q_nrm") * F.col("c_nrm")
-    cos = F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0))
+    return q, c
+
+
+def _scored_pairs(queries: DataFrame, corpus: DataFrame,
+                  id_col: str = "vec_id", vec_col: str = "embedding",
+                  dim: int | None = None) -> DataFrame:
+    """Broadcast-join queries × corpus with rounded cosine, self excluded (B4)."""
+    if dim is None:
+        dim = _vec_dim(corpus, vec_col)
+    q, c = _pair_sides(queries, corpus, id_col, vec_col)
     return (
         F.broadcast(q).crossJoin(c)
         .filter(F.col("cand") != F.col("qid"))
-        .withColumn("score", fround(cos, ROUND_SCORE))
+        .withColumn("score", _pair_cos("q_vec", "q_nrm", "c_vec", "c_nrm", dim))
     )
 
 
@@ -481,12 +505,7 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int,
     # collides in several tables is scored that many times (≤ n_tables,
     # map-side) — the shuffle-vs-recompute trade at 100 TB where the
     # shuffle is the scarce resource. Score is a pure function of the
-    # pair, so dropDuplicates stays value-deterministic. Hoisted norms +
-    # dim-unrolled dot = one codegen'd multiply-add chain per pair,
-    # bit-identical to V.cosine (same fold order; oracle-pinned).
-    pair_dot = V.dot_expr("q_vec", "c_vec", dim) if dim else \
-        V.dot(F.col("q_vec"), F.col("c_vec"))
-    denom = F.col("q_nrm") * F.col("c_nrm")
+    # pair, so dropDuplicates stays value-deterministic.
     # ONE shuffle end-to-end: the explicit qid repartition feeds BOTH the
     # dedup aggregate (clustering (qid, cand) ⊇ qid → EnsureRequirements
     # elides its exchange; partial agg still combines map-side) and the
@@ -499,57 +518,12 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int,
         .join(c_keyed, ["t", "bucket"])
         .filter(F.col("cand") != F.col("qid"))
         .join(c_vecs, "cand")
-        .withColumn("score",
-                    fround(F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0)),
-                           ROUND_SCORE))
+        .withColumn("score", _pair_cos("q_vec", "q_nrm", "c_vec", "c_nrm", dim))
         .select("qid", "cand", "score")
         .repartition(parallelism, "qid")
         .dropDuplicates(["qid", "cand"])
     )
     return topk_per_query(scored, k).select("qid", "cand", "score", "rank")
-
-
-def _assign_to_centroids(corpus: DataFrame, cent: DataFrame,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
-    """Assign every vector to its nearest centroid (argmax cosine).
-
-    ``cent``: (centroid_id, cent_vec: array<double>) — small, broadcast.
-    Deterministic tiebreak: higher similarity first, then lower centroid id.
-    """
-    v = _spread(corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("raw_vec"),
-        V.as_double(F.col(vec_col)).alias("vec"),
-    ))
-    scored = v.crossJoin(F.broadcast(cent)).withColumn(
-        "csim", fround(V.cosine(F.col("vec"), F.col("cent_vec")), ROUND_SCORE)
-    )
-    # argmax via max_by, not a rank-1 window: the aggregate gets map-side
-    # partial aggregation, so the shuffle carries one row per vector
-    # instead of n_centroids rows per vector. The ordering struct
-    # (csim, -centroid_id) reproduces the window's tiebreak exactly:
-    # highest similarity first, then lowest centroid id.
-    return (
-        scored.groupBy("vid")
-        .agg(F.max_by(
-            F.struct("raw_vec", "centroid_id"),
-            F.struct(F.col("csim"), (-F.col("centroid_id")).alias("neg_cid")),
-        ).alias("best"))
-        .select("vid",
-                F.col("best.raw_vec").alias("raw_vec"),
-                F.col("best.centroid_id").alias("centroid_id"))
-    )
-
-
-def ivf_assign(corpus: DataFrame, centroids: DataFrame,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Assign every vector to its nearest centroid (argmax cosine)."""
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"),
-        V.as_double(F.col(vec_col)).alias("cent_vec"),
-    )
-    return _assign_to_centroids(corpus, c, id_col, vec_col)
 
 
 def _dlit(x: float) -> str:
@@ -605,18 +579,42 @@ def _vnorm_sql(vec_col: str = "vec") -> str:
             f"CAST(0.0 AS DOUBLE), (acc, y) -> acc + y))")
 
 
-def _argmax_centroid_sql(cents: list[tuple[int, list[float]]],
-                         vec_col: str = "vec", norm_col: str = "vnorm") -> str:
-    """Map-side nearest-centroid id: max csim, ties → lower centroid id.
+def _pick_sql(cents: list[tuple[int, list[float]]], vec_col: str = "vec",
+              norm_col: str = "vnorm") -> str:
+    """Map-side nearest codeword: the ``array_max`` struct (s, n, cv) —
+    ``s`` the rounded csim, ``-n`` the centroid id, ``cv`` the codeword.
 
-    ``array_max`` over (csim, -cid) structs is lexicographic, reproducing
-    the (csim DESC, cid ASC) window tiebreak with zero shuffle. fround
-    never emits -0.0, so struct double ordering has no ±0 pitfall.
+    The one nearest-centroid pick of IVF, PQ, IVF-PQ, k-means and the
+    cluster curation operators. ``array_max`` over (csim, -cid, cv)
+    structs is lexicographic and -cid is unique, so it reproduces the
+    (csim DESC, cid ASC) window tiebreak with zero shuffle. fround never
+    emits -0.0, so struct double ordering has no ±0 pitfall.
     """
     lit = _cents_literal_sql(cents)
     cf = _cos_vs_c_sql(vec_col, norm_col)
-    return (f"CAST(-(array_max(transform({lit}, "
-            f"c -> named_struct('s', {cf}, 'n', -c.cid))).n) AS BIGINT)")
+    return (f"array_max(transform({lit}, "
+            f"c -> named_struct('s', {cf}, 'n', -c.cid, 'cv', c.cv)))")
+
+
+def _code(cents: list, vec_col: str, norm_col: str) -> Column:
+    """The nearest centroid id (bigint) of ``vec_col`` — ``-n`` of the pick."""
+    return F.expr(f"-({_pick_sql(cents, vec_col, norm_col)}).n")
+
+
+def _subspace_codes(df: DataFrame, books: list,
+                    vec_col: str) -> tuple[DataFrame, list]:
+    """One nearest-codeword id per book over consecutive equal-width slices
+    of ``vec_col``: the per-subspace encode of PQ training, ``pq_encode``
+    and ``ivfpq_encode``. Returns ``df`` with slice ``s`` as
+    ``{vec_col}{s}`` (and its norm), plus the m code columns."""
+    sub = len(books[0][0][1])
+    codes = []
+    for s, book in enumerate(books):
+        v, n = f"{vec_col}{s}", f"{vec_col}_n{s}"
+        df = (df.withColumn(v, F.slice(F.col(vec_col), s * sub + 1, sub))
+              .withColumn(n, F.expr(_vnorm_sql(v))))
+        codes.append(_code(book, v, n))
+    return df, codes
 
 
 def _probe_centroids_sql(cents: list[tuple[int, list[float]]], nprobe: int,
@@ -634,12 +632,13 @@ def kmeans_centroids_local(corpus: DataFrame, n_centroids: int = 16,
                            vec_col: str = "embedding") -> list[tuple[int, list[float]]]:
     """Deterministic spherical k-means codebook, driver-resident.
 
-    Init = the vectors of the ``n_centroids`` smallest ids (seeded,
-    engine-agnostic); each Lloyd iteration assigns by argmax cosine
-    (ties → lower centroid id) and recomputes every centroid as the
-    per-component mean of its assigned vectors, rounded to 6 decimals so
-    both engines agree despite summation-order differences; empty clusters
-    keep their previous centroid.
+    The one-subspace case of :func:`pq_train`'s Lloyd loop: init = the
+    vectors of the ``n_centroids`` smallest ids (seeded, engine-agnostic);
+    each Lloyd iteration assigns by argmax cosine (ties → lower centroid
+    id) and recomputes every centroid as the per-component mean of its
+    assigned vectors, rounded to 6 decimals so both engines agree despite
+    summation-order differences; empty clusters keep their previous
+    centroid.
 
     Scale shape — the codebook is n_centroids·dim doubles, KB-sized *by
     definition*, so it lives on the driver and each Lloyd round embeds the
@@ -654,33 +653,8 @@ def kmeans_centroids_local(corpus: DataFrame, n_centroids: int = 16,
     sample, persist the codebook as a table, load it into this literal
     form (VERDICT r1 #8).
     """
-    init = (corpus.filter(F.col(id_col) < n_centroids)
-            .select(F.col(id_col).cast("long").alias("cid"),
-                    V.as_double(F.col(vec_col)).alias("cv"))
-            .collect())  # bounded: n_centroids rows
-    cents = sorted((r.cid, list(r.cv)) for r in init)
-    if not cents:
-        return []
-    dim = len(cents[0][1])
-    vecs = corpus.select(V.as_double(F.col(vec_col)).alias("vec"))
-    for _ in range(n_iters):
-        assigned = (
-            vecs.withColumn("vnorm", F.expr(_vnorm_sql("vec")))
-            .withColumn("centroid_id", F.expr(_argmax_centroid_sql(cents)))
-        )
-        rows = (
-            assigned.select("centroid_id", F.posexplode("vec").alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
-            .agg(fround(F.avg("x"), ROUND_SCORE).alias("m"))
-            .collect())  # bounded: n_centroids × dim rows
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cid.setdefault(r.centroid_id, {})[r.pos] = r.m
-        cents = [
-            (cid, [by_cid[cid][p] for p in range(dim)] if cid in by_cid else old)
-            for cid, old in cents
-        ]
-    return cents
+    books = pq_train(corpus, 1, n_centroids, n_iters, id_col, vec_col)
+    return books[0] if books else []
 
 
 def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16,
@@ -710,8 +684,7 @@ def ivf_build_lists(corpus: DataFrame, cents: list[tuple[int, list[float]]],
                               F.col(vec_col).alias("raw_vec")))
         .withColumn("c_vec", V.as_double(F.col("raw_vec")))
         .withColumn("c_nrm", F.expr(_vnorm_sql("c_vec")))
-        .withColumn("centroid_id",
-                    F.expr(_argmax_centroid_sql(cents, "c_vec", "c_nrm")))
+        .withColumn("centroid_id", _code(cents, "c_vec", "c_nrm"))
         .select("vid", "c_vec", "c_nrm", "centroid_id")
     )
 
@@ -762,22 +735,13 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, n_centroids: int = 1
         .select("qid", F.col("vec").alias("q_vec"),
                 F.col("vnorm").alias("q_nrm"), "centroid_id")
     )
-    # Hoisted-norm scoring (the _scored_pairs discipline): both sides
-    # carry their sqrt(v·v) — the index stores it, probes compute it once
-    # per query — so the per-pair expression is one dim-unrolled dot +
-    # divide. Same ops in the same fold order as V.cosine → bit-identical
-    # scores (the oracle pins this), but codegen'd instead of 3 interpreted
-    # HOF folds per candidate pair.
-    pair_dot = V.dot_expr("q_vec", "c_vec", dim) if dim else \
-        V.dot(F.col("q_vec"), F.col("c_vec"))
-    denom = F.col("q_nrm") * F.col("c_nrm")
+    # both sides carry their hoisted norm — the index stores it, probes
+    # compute it once per query
     scored = (
         F.broadcast(probes)
         .join(lists, "centroid_id")
         .filter(F.col("vid") != F.col("qid"))
-        .withColumn("score",
-                    fround(F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0)),
-                           ROUND_SCORE))
+        .withColumn("score", _pair_cos("q_vec", "q_nrm", "c_vec", "c_nrm", dim))
         .withColumnRenamed("vid", "cand")
     )
     return topk_per_query(scored, k).select("qid", "cand", "score", "rank")
@@ -790,55 +754,56 @@ def embedding_neardup_pairs(corpus: DataFrame, threshold: float = 0.9,
     """Embedding-cosine near-duplicate pairs via LSH blocking.
 
     Self-join within LSH buckets (id1 < id2 halves the pair space), keep
-    cosine ≥ threshold. The join is **salted**: the bucket key alone has
-    only 2^n_bits values, so one side is sliced by ``id % n_salts`` and
-    the other replicated across salts — join-key cardinality becomes
-    2^n_bits · n_salts and the per-pair cosine runs at full parallelism
-    straight out of the join, no second shuffle of the pair stream. The
-    replication cost is n_salts copies of (id, vector) on one side —
-    cheap relative to the pair volume it spreads.
+    cosine ≥ threshold. The bucket key alone has only 2^n_bits values, so
+    the join is salted (:func:`_salted_pairs`): join-key cardinality
+    becomes 2^n_bits · n_salts.
     """
     if dim is None:
         dim = _vec_dim(corpus, vec_col)
-    spark = corpus.sparkSession
-    # cast to double AND take the L2 norm BEFORE the pair join: per-row
-    # cost, not per-pair cost. The per-pair expression is then one dot +
-    # divide — 3× less work than a full cosine, and small enough to stay
-    # inside whole-stage codegen (3 unrolled 64-dim dots in the join's
-    # consume path overflows the JVM's 64KB method limit and falls back
-    # to interpreted eval). sqrt(dot(v,v)) * sqrt(dot(w,w)) hoisted
-    # per-row is the same ops in the same order → bitwise-identical to
-    # the inline cosine and to the oracle.
-    b = with_lsh_bucket(corpus.select(id_col, vec_col), vec_col, n_bits) \
-        .withColumn("_vd", V.as_double(F.col(vec_col))) \
-        .withColumn("_nrm", V.l2_norm(F.col("_vd")))
-    left = b.select(F.col(id_col).alias("id1"), F.col("_vd").alias("v1"),
-                    F.col("_nrm").alias("n1"), "bucket",
-                    F.pmod(F.col(id_col), F.lit(n_salts)).alias("salt"))
+    b = (with_lsh_bucket(corpus.select(id_col, vec_col), vec_col, n_bits)
+         .select(F.col(id_col).alias("vid"),
+                 V.as_double(F.col(vec_col)).alias("v"), "bucket")
+         .withColumn("vnorm", V.l2_norm(F.col("v"))))
+    return (_salted_pairs(b, "bucket", threshold, n_salts, dim)
+            .select("id1", "id2", "score"))
+
+
+def _salted_pairs(b: DataFrame, key: str, threshold: float, n_salts: int,
+                  dim: int | None) -> DataFrame:
+    """Pairs (id1 < id2) of ``b`` (vid, v, vnorm, ``key``) rows that share
+    ``key``, scored by rounded cosine and kept at ``score >= threshold`` —
+    the within-key self-join of ``embedding_neardup_pairs`` and
+    ``semdedup``.
+
+    The norms are hoisted per row, so the per-pair work is one dot +
+    divide. The join is **salted**: one side is sliced by ``vid %
+    n_salts`` and the other replicated across salts, so one hot key
+    spreads over ``n_salts`` tasks and the per-pair cosine runs at full
+    parallelism straight out of the join, no second shuffle of the pair
+    stream. The replication cost is n_salts copies of (id, vector) on
+    one side — cheap relative to the pair volume it spreads.
+    """
+    spark = b.sparkSession
+    left = b.select(F.col("vid").alias("id1"), F.col("v").alias("v1"),
+                    F.col("vnorm").alias("n1"), key,
+                    F.pmod(F.col("vid"), F.lit(n_salts)).alias("salt"))
     right = (
-        b.select(F.col(id_col).alias("id2"), F.col("_vd").alias("v2"),
-                 F.col("_nrm").alias("n2"), "bucket")
-        .crossJoin(spark.range(n_salts).select(F.col("id").cast("bigint").alias("salt")))
+        b.select(F.col("vid").alias("id2"), F.col("v").alias("v2"),
+                 F.col("vnorm").alias("n2"), key)
+        .crossJoin(spark.range(n_salts)
+                   .select(F.col("id").cast("bigint").alias("salt")))
     )
     # Explicit-N repartition on the join keys: AQE would coalesce the
     # join's shuffle by BYTES (a few MB of vectors → 1 task) while the
-    # within-bucket pair generation + cosine is the CPU hot spot; the
+    # within-key pair generation + cosine is the CPU hot spot; the
     # explicit repartition keeps the join stage at full parallelism.
     parallelism = spark.sparkContext.defaultParallelism
-    pairs = (
-        left.repartition(parallelism, "bucket", "salt")
-        .join(right.repartition(parallelism, "bucket", "salt"), ["bucket", "salt"])
-        .filter(F.col("id1") < F.col("id2"))
-    )
-    pair_dot = V.dot_expr("v1", "v2", dim) if dim else \
-        V.dot(F.col("v1"), F.col("v2"))
-    denom = F.col("n1") * F.col("n2")
-    cos = F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0))
     return (
-        pairs
-        .withColumn("score", fround(cos, ROUND_SCORE))
+        left.repartition(parallelism, key, "salt")
+        .join(right.repartition(parallelism, key, "salt"), [key, "salt"])
+        .filter(F.col("id1") < F.col("id2"))
+        .withColumn("score", _pair_cos("v1", "n1", "v2", "n2", dim))
         .filter(F.col("score") >= threshold)
-        .select("id1", "id2", "score")
     )
 
 
@@ -986,11 +951,8 @@ def pq_train(corpus: DataFrame, m: int = 8, n_centroids: int = 64,
     = dim per vector, identical to ONE full-dim k-means round — the naive
     per-subspace loop pays m× the corpus scans for the same math
     (equivalence pinned by ``test_pq_train_fused_equals_per_subspace``).
+    ``dim`` defaults to the width of the init vectors (no probe job).
     """
-    if dim is None:
-        dim = _vec_dim(corpus, vec_col)
-    assert dim % m == 0, "dim must divide into m subspaces"
-    sub = dim // m
     init = (corpus.filter(F.col(id_col) < n_centroids)
             .select(F.col(id_col).cast("long").alias("cid"),
                     V.as_double(F.col(vec_col)).alias("cv"))
@@ -998,20 +960,18 @@ def pq_train(corpus: DataFrame, m: int = 8, n_centroids: int = 64,
     full = sorted((r.cid, list(r.cv)) for r in init)
     if not full:
         return []
+    dim = dim or len(full[0][1])
+    assert dim % m == 0, "dim must divide into m subspaces"
+    sub = dim // m
     books = [[(cid, cv[s * sub:(s + 1) * sub]) for cid, cv in full]
              for s in range(m)]
     vecs = corpus.select(V.as_double(F.col(vec_col)).alias("__v"))
     for _ in range(n_iters):
-        df = vecs
-        for s in range(m):
-            df = df.withColumn(f"__v{s}", F.slice(F.col("__v"), s * sub + 1, sub))
-            df = df.withColumn(f"__n{s}", F.expr(_vnorm_sql(f"__v{s}")))
-            df = df.withColumn(f"__c{s}", F.expr(_argmax_centroid_sql(
-                books[s], f"__v{s}", f"__n{s}")))
+        df, codes = _subspace_codes(vecs, books, "__v")
         exploded = df.select(F.explode(F.array(*[
-            F.struct(F.lit(s).alias("s"), F.col(f"__c{s}").alias("cid"),
+            F.struct(F.lit(s).alias("s"), code.alias("cid"),
                      F.col(f"__v{s}").alias("sv"))
-            for s in range(m)])).alias("e")
+            for s, code in enumerate(codes)])).alias("e")
         ).select("e.s", "e.cid", F.posexplode("e.sv").alias("pos", "x"))
         rows = (exploded.groupBy("s", "cid", "pos")
                 .agg(fround(F.avg("x"), ROUND_SCORE).alias("m"))
@@ -1026,40 +986,6 @@ def pq_train(corpus: DataFrame, m: int = 8, n_centroids: int = 64,
             for s in range(m)
         ]
     return books
-
-
-def _argmax_centroid_cv_sql(cents: list, vec_col: str, norm_col: str) -> str:
-    """Map-side nearest-centroid VECTOR (max rounded csim, ties → lower
-    centroid id) — the decode half of PQ fused into the encode argmax."""
-    lit = _cents_literal_sql(cents)
-    cf = _cos_vs_c_sql(vec_col, norm_col)
-    return (f"(array_max(transform({lit}, "
-            f"c -> named_struct('s', {cf}, 'n', -c.cid, 'cv', c.cv)))).cv")
-
-
-def pq_reconstruct(corpus: DataFrame, codebooks: list,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """PQ encode+decode in one map-only projection: each subvector is
-    replaced by its nearest codeword (argmax rounded cosine, ties → lower
-    centroid id), codewords concatenated back to a full vector.
-
-    Zero shuffles; every codebook rides as a constant-folded literal
-    (the Janino-safe pattern of ``_cents_literal_sql``). Storage story:
-    persisting the m code ids instead of the floats is dim·4 / m bytes →
-    32× smaller at dim=64, m=8, k≤256; the reconstruct expression is the
-    serve-time decoder over that layout.
-    """
-    m = len(codebooks)
-    sub = len(codebooks[0][0][1])
-    df = corpus.select(F.col(id_col), V.as_double(F.col(vec_col)).alias("__v"))
-    parts = []
-    for s in range(m):
-        df = df.withColumn(f"__v{s}", F.slice(F.col("__v"), s * sub + 1, sub))
-        df = df.withColumn(f"__n{s}", F.expr(_vnorm_sql(f"__v{s}")))
-        parts.append(F.expr(_argmax_centroid_cv_sql(
-            codebooks[s], f"__v{s}", f"__n{s}")))
-    return df.select(F.col(id_col), F.concat(*parts).alias(vec_col))
 
 
 def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
@@ -1080,14 +1006,16 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
     defaults measure 0.75 with a pinned ≥0.7 floor — the residual loss is
     within-cluster fine ranking, which production PQ recovers with an
     exact re-rank of the ADC shortlist. The gated ``ann_recall`` metric
-    carries the honest uniform-data row."""
-    if dim is None:
-        dim = _vec_dim(corpus, vec_col)
+    carries the honest uniform-data row.
+
+    The corpus is served through its codes: ``pq_encode`` then the
+    ``pq_decode`` of :func:`pq_topk_from_codes`."""
     if codebooks is None:
         codebooks = pq_train(corpus, m, n_centroids, id_col=id_col,
                              vec_col=vec_col, dim=dim)
-    recon = pq_reconstruct(corpus, codebooks, id_col, vec_col)
-    return cosine_topk(queries, recon, k, id_col, vec_col, dim=dim)
+    return pq_topk_from_codes(queries, pq_encode(corpus, codebooks, id_col,
+                                                 vec_col),
+                              codebooks, k, id_col, vec_col)
 
 
 def pq_encode(corpus: DataFrame, codebooks: list, id_col: str = "vec_id",
@@ -1095,24 +1023,18 @@ def pq_encode(corpus: DataFrame, codebooks: list, id_col: str = "vec_id",
     """Encode vectors to their m PQ code ids — the persisted index layout.
 
     (id, pq_codes array<smallint>): one nearest-codeword id per subspace
-    (argmax rounded cosine, ties → lower centroid id — the SAME argmax as
-    ``pq_reconstruct``, so decode(encode(v)) ≡ reconstruct(v) exactly).
-    Map-only, zero shuffles; each codebook rides as a constant-folded
-    literal. This is where PQ's storage win is realized: m small ints
+    (argmax rounded cosine, ties → lower centroid id — the pick PQ
+    training assigns with). Map-only, zero shuffles; each codebook rides
+    as a constant-folded literal. This is where PQ's storage win is realized: m small ints
     per vector instead of dim floats — dim·4 / m bytes ≈ 32× smaller at
     dim=64, m=8 (measured on-disk ratio in SCALE.md), which is the tier
     that lets a 100 TB float corpus serve from ~3 TB of codes.
     """
-    m = len(codebooks)
-    sub = len(codebooks[0][0][1])
-    df = corpus.select(F.col(id_col), V.as_double(F.col(vec_col)).alias("__v"))
-    codes = []
-    for s in range(m):
-        df = df.withColumn(f"__v{s}", F.slice(F.col("__v"), s * sub + 1, sub))
-        df = df.withColumn(f"__n{s}", F.expr(_vnorm_sql(f"__v{s}")))
-        codes.append(F.expr(_argmax_centroid_sql(
-            codebooks[s], f"__v{s}", f"__n{s}")).cast("smallint"))
-    return df.select(F.col(id_col), F.array(*codes).alias("pq_codes"))
+    df, codes = _subspace_codes(
+        corpus.select(F.col(id_col), V.as_double(F.col(vec_col)).alias("__v")),
+        codebooks, "__v")
+    return df.select(F.col(id_col), F.array(*[
+        c.cast("smallint") for c in codes]).alias("pq_codes"))
 
 
 def _codeword_map_sql(cents: list, code_expr: str) -> str:
@@ -1146,9 +1068,9 @@ def pq_topk_from_codes(queries: DataFrame, codes_df: DataFrame,
                        codes_col: str = "pq_codes") -> DataFrame:
     """ADC search over a persisted PQ index (``pipeline.write_pq_index``):
     decode the code table in-plan and rank exactly as ``cosine_topk``.
-    Hash-identical to the inline ``pq_topk`` on the same codebooks (the
-    encode and reconstruct argmaxes share one tiebreak) — pinned by
-    ``test_pq_index_roundtrip_serves_identically``."""
+    The inline ``pq_topk`` serves through this same decode —
+    ``test_pq_index_roundtrip_serves_identically`` pins the persisted
+    round trip."""
     sub = len(codebooks[0][0][1])
     recon = pq_decode(codes_df, codebooks, id_col, codes_col, vec_col)
     return cosine_topk(queries, recon, k, id_col, vec_col,
@@ -1159,30 +1081,21 @@ def pq_topk_from_codes(queries: DataFrame, codes_df: DataFrame,
 # IndexIVFPQ layout, the standard billion-scale ANN index)
 # ---------------------------------------------------------------------------
 
-def _argmax_centroid_pick_sql(cents: list, vec_col: str, norm_col: str) -> str:
-    """Map-side nearest-centroid pick returning BOTH the id and the
-    centroid vector in one constant-folded argmax (max rounded csim,
-    ties → lower centroid id — the shared codebook tiebreak)."""
-    lit = _cents_literal_sql(cents)
-    cf = _cos_vs_c_sql(vec_col, norm_col)
-    return (f"array_max(transform({lit}, "
-            f"c -> named_struct('s', {cf}, 'n', -c.cid, 'cv', c.cv)))")
-
-
-def ivf_residuals(corpus: DataFrame, cents: list,
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
-    """Residual vectors v − nearest-coarse-centroid(v): one map-side pass
-    (literal-codebook argmax, zero shuffles). The residual distribution
-    is what PQ actually quantizes in an IVF-PQ index — residual energy is
-    a fraction of the full vectors', so the same codebook budget buys a
-    much finer quantization (Jégou et al., PAMI 2011)."""
-    df = (corpus.select(F.col(id_col), V.as_double(F.col(vec_col)).alias("__v"))
-          .withColumn("__n", F.expr(_vnorm_sql("__v")))
-          .withColumn("__pick", F.expr(_argmax_centroid_pick_sql(cents, "__v", "__n"))))
-    return df.select(
-        F.col(id_col),
-        F.zip_with(F.col("__v"), F.col("__pick.cv"), lambda x, y: x - y).alias(vec_col))
+def _coarse_residuals(corpus: DataFrame, cents: list, id_col: str,
+                      vec_col: str) -> DataFrame:
+    """(vid, centroid_id, __r): each vector's nearest coarse centroid and
+    its residual v − centroid(v), both from one map-side pick. The
+    residual distribution is what PQ actually quantizes in an IVF-PQ
+    index — residual energy is a fraction of the full vectors', so the
+    same codebook budget buys a much finer quantization (Jégou et al.,
+    PAMI 2011)."""
+    return (corpus.select(F.col(id_col).alias("vid"),
+                          V.as_double(F.col(vec_col)).alias("__v"))
+            .withColumn("__n", F.expr(_vnorm_sql("__v")))
+            .withColumn("__pick", F.expr(_pick_sql(cents, "__v", "__n")))
+            .select("vid", (-F.col("__pick.n")).alias("centroid_id"),
+                    F.zip_with(F.col("__v"), F.col("__pick.cv"),
+                               lambda x, y: x - y).alias("__r")))
 
 
 def ivfpq_train(corpus: DataFrame, n_centroids: int = 16, m: int = 8,
@@ -1194,13 +1107,12 @@ def ivfpq_train(corpus: DataFrame, n_centroids: int = 16, m: int = 8,
     ``ivf_topk``; PQ = ``pq_train`` over the coarse residuals (one extra
     map-side pass per Lloyd round, no new shuffle shapes). Both books are
     driver-resident KBs; at 100 TB train on a sample and persist."""
-    if dim is None:
-        dim = _vec_dim(corpus, vec_col)
     cents = kmeans_centroids_local(corpus, n_centroids, kmeans_iters,
                                    id_col, vec_col)
     if not cents:
         return [], []
-    resid = ivf_residuals(corpus, cents, id_col, vec_col)
+    resid = _coarse_residuals(corpus, cents, id_col, vec_col).select(
+        F.col("vid").alias(id_col), F.col("__r").alias(vec_col))
     books = pq_train(resid, m, pq_centroids, id_col=id_col, vec_col=vec_col,
                      dim=dim)
     return cents, books
@@ -1214,31 +1126,14 @@ def ivfpq_build_lists(corpus: DataFrame, cents: list, books: list,
     decoded-residual — the EXACT table shape ``ivf_topk`` serves from, so
     the probe/score/topk tail is shared verbatim.
 
-    One map-side pass, zero shuffles: coarse argmax pick (id + vector),
-    residual subtract, per-subspace nearest-codeword decode (the
-    ``pq_reconstruct`` argmax), element-wise add, hoisted norm. At 100 TB
-    persist partitioned by ``centroid_id`` (partition pruning = nprobe-
-    list scans) with the codes from ``pq_encode`` over the residuals as
-    the compact storage tier."""
-    m = len(books)
-    sub = len(books[0][0][1])
-    df = (_spread(corpus.select(F.col(id_col).alias("vid"),
-                                V.as_double(F.col(vec_col)).alias("__v")))
-          .withColumn("__n", F.expr(_vnorm_sql("__v")))
-          .withColumn("__pick", F.expr(_argmax_centroid_pick_sql(cents, "__v", "__n")))
-          .withColumn("centroid_id",
-                      (-F.col("__pick.n")).cast("long"))
-          .withColumn("__r", F.zip_with(F.col("__v"), F.col("__pick.cv"),
-                                        lambda x, y: x - y)))
-    parts = []
-    for s in range(m):
-        df = df.withColumn(f"__r{s}", F.slice(F.col("__r"), s * sub + 1, sub))
-        df = df.withColumn(f"__rn{s}", F.expr(_vnorm_sql(f"__r{s}")))
-        parts.append(F.expr(_argmax_centroid_cv_sql(books[s], f"__r{s}", f"__rn{s}")))
-    df = df.withColumn("c_vec", F.zip_with(F.col("__pick.cv"), F.concat(*parts),
-                                           lambda x, y: x + y))
-    return (df.withColumn("c_nrm", F.expr(_vnorm_sql("c_vec")))
-            .select("vid", "c_vec", "c_nrm", "centroid_id"))
+    Built as ``ivfpq_lists_from_codes(ivfpq_encode(corpus))`` — the
+    reconstruction IS the decode of the persisted codes, one map-side
+    pass with zero shuffles. At 100 TB persist the codes partitioned by
+    ``centroid_id`` (partition pruning = nprobe-list scans) as the
+    compact storage tier."""
+    spread = _spread(corpus.select(id_col, vec_col))
+    return ivfpq_lists_from_codes(
+        ivfpq_encode(spread, cents, books, id_col, vec_col), cents, books)
 
 
 def ivfpq_topk(queries: DataFrame, corpus: DataFrame | None, k: int,
@@ -1305,22 +1200,11 @@ def ivfpq_rerank_topk(queries: DataFrame, corpus: DataFrame, k: int,
                       nprobe, cents=cents, books=books, lists=lists,
                       id_col=id_col, vec_col=vec_col, dim=dim) \
         .select("qid", "cand")
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        V.as_double(F.col(vec_col)).alias("q_vec"),
-    ).withColumn("q_nrm", V.l2_norm(F.col("q_vec")))
-    c = _spread(corpus.select(
-        F.col(id_col).alias("cand"),
-        V.as_double(F.col(vec_col)).alias("c_vec"),
-    )).withColumn("c_nrm", V.l2_norm(F.col("c_vec")))
-    pair_dot = V.dot_expr("q_vec", "c_vec", dim) if dim else \
-        V.dot(F.col("q_vec"), F.col("c_vec"))
-    denom = F.col("q_nrm") * F.col("c_nrm")
-    cos = F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0))
+    q, c = _pair_sides(queries, corpus, id_col, vec_col)
     scored = (
         c.join(F.broadcast(pool), "cand")
         .join(F.broadcast(q), "qid")
-        .withColumn("score", fround(cos, ROUND_SCORE))
+        .withColumn("score", _pair_cos("q_vec", "q_nrm", "c_vec", "c_nrm", dim))
     )
     return topk_per_query(scored, k).select("qid", "cand", "score", "rank")
 
@@ -1333,22 +1217,10 @@ def ivfpq_encode(corpus: DataFrame, cents: list, books: list,
     codeword id per subspace. Map-only, zero shuffles (constant-folded
     codebooks); the storage tier is m smallints + one list id per vector,
     the same ~32× ratio as ``pq_encode`` with coarse pruning on top."""
-    m = len(books)
-    sub = len(books[0][0][1])
-    df = (corpus.select(F.col(id_col).alias("vid"),
-                        V.as_double(F.col(vec_col)).alias("__v"))
-          .withColumn("__n", F.expr(_vnorm_sql("__v")))
-          .withColumn("__pick", F.expr(_argmax_centroid_pick_sql(cents, "__v", "__n")))
-          .withColumn("centroid_id", (-F.col("__pick.n")).cast("long"))
-          .withColumn("__r", F.zip_with(F.col("__v"), F.col("__pick.cv"),
-                                        lambda x, y: x - y)))
-    codes = []
-    for s in range(m):
-        df = df.withColumn(f"__r{s}", F.slice(F.col("__r"), s * sub + 1, sub))
-        df = df.withColumn(f"__rn{s}", F.expr(_vnorm_sql(f"__r{s}")))
-        codes.append(F.expr(_argmax_centroid_sql(
-            books[s], f"__r{s}", f"__rn{s}")).cast("smallint"))
-    return df.select("vid", "centroid_id", F.array(*codes).alias("pq_codes"))
+    df, codes = _subspace_codes(
+        _coarse_residuals(corpus, cents, id_col, vec_col), books, "__r")
+    return df.select("vid", "centroid_id", F.array(*[
+        c.cast("smallint") for c in codes]).alias("pq_codes"))
 
 
 def ivfpq_lists_from_codes(codes_df: DataFrame, cents: list, books: list,
@@ -1357,8 +1229,8 @@ def ivfpq_lists_from_codes(codes_df: DataFrame, cents: list, books: list,
     vector (literal-map lookup by list id) + per-subspace residual
     codewords, concatenated and summed back to the reconstruction — the
     (vid, c_vec, c_nrm, centroid_id) table ``ivf_topk`` serves from. The
-    float corpus is never touched. decode(encode(v)) ≡
-    ``ivfpq_build_lists(v)`` exactly (shared argmax tiebreaks) — pinned by
+    float corpus is never touched; ``ivfpq_build_lists`` is this decode
+    of ``ivfpq_encode`` — the persisted round trip is pinned by
     ``test_ivfpq_index_roundtrip_serves_identically``."""
     gcv = F.expr(_codeword_map_sql(cents, "centroid_id"))
     res = F.concat(*[
@@ -1479,24 +1351,12 @@ def label_filtered_topk(queries: DataFrame, corpus: DataFrame, k: int,
     """
     if dim is None:
         dim = _vec_dim(corpus, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(label_col).alias("lbl"),
-        V.as_double(F.col(vec_col)).alias("q_vec"),
-    ).withColumn("q_nrm", V.l2_norm(F.col("q_vec")))
-    c = _spread(corpus.select(
-        F.col(id_col).alias("cand"),
-        F.col(label_col).alias("lbl"),
-        V.as_double(F.col(vec_col)).alias("c_vec"),
-    )).withColumn("c_nrm", V.l2_norm(F.col("c_vec")))
-    pair_dot = V.dot_expr("q_vec", "c_vec", dim) if dim else \
-        V.dot(F.col("q_vec"), F.col("c_vec"))
-    denom = F.col("q_nrm") * F.col("c_nrm")
-    cos = F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0))
+    q, c = _pair_sides(queries, corpus, id_col, vec_col,
+                       F.col(label_col).alias("lbl"))
     scored = (
         F.broadcast(q).join(c, "lbl")
         .filter(F.col("cand") != F.col("qid"))
-        .withColumn("score", fround(cos, ROUND_SCORE))
+        .withColumn("score", _pair_cos("q_vec", "q_nrm", "c_vec", "c_nrm", dim))
     )
     return (topk_per_query(scored, k)
             .select("qid", "cand", F.col("lbl").alias(label_col),
@@ -1559,9 +1419,10 @@ def semdedup(corpus: DataFrame, cents: list, eps: float = 0.95,
 
     Scale shape (100 TB): the quadratic pair space is bounded per cluster
     — the whole point of clustering first — and the within-cluster
-    self-join reuses ``embedding_neardup_pairs``'s layout: assignment is
-    a map-side literal-codebook argmax (ZERO shuffles, same expression as
-    IVF assignment), the assigned table is materialized once
+    self-join is ``embedding_neardup_pairs``'s salted pair generator
+    (:func:`_salted_pairs`) keyed by cluster: assignment is the map-side
+    literal-codebook pick (ZERO shuffles, the ``_pick_sql`` IVF
+    assigns with), the assigned table is materialized once
     (``localCheckpoint`` — both join sides derive from it; without the
     checkpoint the assignment pipeline executes twice, the
     ``simhash_neardup`` double-compute class of VERDICT r5 #1), and the
@@ -1574,38 +1435,13 @@ def semdedup(corpus: DataFrame, cents: list, eps: float = 0.95,
     """
     if dim is None:
         dim = _vec_dim(corpus, vec_col)
-    spark = corpus.sparkSession
     b = (corpus.select(F.col(id_col).alias("vid"),
                        V.as_double(F.col(vec_col)).alias("v"))
          .withColumn("vnorm", F.expr(_vnorm_sql("v")))
-         .withColumn("centroid_id",
-                     F.expr(_argmax_centroid_sql(cents, "v", "vnorm")))
+         .withColumn("centroid_id", _code(cents, "v", "vnorm"))
          .localCheckpoint(eager=True))
-    left = b.select(F.col("vid").alias("id1"), F.col("v").alias("v1"),
-                    F.col("vnorm").alias("n1"), "centroid_id",
-                    F.pmod(F.col("vid"), F.lit(n_salts)).alias("salt"))
-    right = (
-        b.select(F.col("vid").alias("id2"), F.col("v").alias("v2"),
-                 F.col("vnorm").alias("n2"), "centroid_id")
-        .crossJoin(spark.range(n_salts)
-                   .select(F.col("id").cast("bigint").alias("salt")))
-    )
-    parallelism = spark.sparkContext.defaultParallelism
-    pairs = (
-        left.repartition(parallelism, "centroid_id", "salt")
-        .join(right.repartition(parallelism, "centroid_id", "salt"),
-              ["centroid_id", "salt"])
-        .filter(F.col("id1") < F.col("id2"))
-    )
-    pair_dot = V.dot_expr("v1", "v2", dim) if dim else \
-        V.dot(F.col("v1"), F.col("v2"))
-    denom = F.col("n1") * F.col("n2")
-    cos = F.when(denom > 0, pair_dot / denom).otherwise(F.lit(0.0))
-    dominated = (
-        pairs.withColumn("score", fround(cos, ROUND_SCORE))
-        .filter(F.col("score") >= eps)
-        .select(F.col("id2").alias("vid")).distinct()
-    )
+    dominated = (_salted_pairs(b, "centroid_id", eps, n_salts, dim)
+                 .select(F.col("id2").alias("vid")).distinct())
     return (
         b.join(dominated.withColumn("_dom", F.lit(True)), "vid", "left")
         .select(F.col("vid").alias(id_col), "centroid_id",
@@ -1638,10 +1474,8 @@ def centroid_outliers(corpus: DataFrame, cents: list, frac: float = 0.1,
     b = (corpus.select(F.col(id_col).alias("vid"),
                        V.as_double(F.col(vec_col)).alias("__v"))
          .withColumn("__n", F.expr(_vnorm_sql("__v")))
-         .withColumn("__pick",
-                     F.expr(_argmax_centroid_pick_sql(cents, "__v", "__n")))
-         .select("vid",
-                 (-F.col("__pick.n")).cast("long").alias("centroid_id"),
+         .withColumn("__pick", F.expr(_pick_sql(cents, "__v", "__n")))
+         .select("vid", (-F.col("__pick.n")).alias("centroid_id"),
                  F.col("__pick.s").alias("csim")))
     w = Window.partitionBy("centroid_id").orderBy(
         F.col("csim").asc(), F.col("vid").asc())

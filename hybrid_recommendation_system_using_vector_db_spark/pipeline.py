@@ -101,30 +101,14 @@ def write_ivf_index(spark: SparkSession, embeddings: DataFrame, out_dir: str,
     cents = kmeans_centroids_local(embeddings, n_centroids, n_iters)
     _write_table(ivf_build_lists(embeddings, cents), f"{out_dir}/ivf_lists",
                  _IVF_FAMILY.by["lists"])
-    _write_centroids(spark, cents, f"{out_dir}/ivf_codebook")
+    _write_codebooks(spark, [cents], f"{out_dir}/ivf_codebook")
     return cents
-
-
-def _write_centroids(spark: SparkSession, cents: list, path: str) -> None:
-    """The ``(centroid_id, cent_vec)`` sidecar of the IVF and IVF-PQ
-    indexes: one KB-sized file."""
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in cents],
-        "centroid_id int, cent_vec array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def _read_centroids(spark: SparkSession, path: str) -> list:
-    """[(centroid_id, vector)] written by :func:`_write_centroids`, in id
-    order."""
-    return sorted(((r.centroid_id, list(r.cent_vec))
-                   for r in spark.read.parquet(path).collect()),
-                  key=lambda t: t[0])
 
 
 def _write_codebooks(spark: SparkSession, books: list, path: str) -> None:
     """The ``(subspace, cid, codeword)`` sidecar of the PQ and IVF-PQ
-    indexes: one KB-sized file."""
+    indexes: one KB-sized file. The IVF and IVF-PQ coarse centroids are
+    written as a one-subspace codebook."""
     rows = [(s, int(cid), [float(x) for x in cv])
             for s, book in enumerate(books) for cid, cv in book]
     spark.createDataFrame(
@@ -146,7 +130,7 @@ def load_ivf_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, list]:
     after rolling a committed append stage forward."""
     _IVF_FAMILY.finish(spark, out_dir, as_reader=True)
     return (spark.read.parquet(f"{out_dir}/ivf_lists"),
-            _read_centroids(spark, f"{out_dir}/ivf_codebook"))
+            (_read_codebooks(spark, f"{out_dir}/ivf_codebook") or [[]])[0])
 
 
 def append_ivf_index(spark: SparkSession, new_embeddings: DataFrame,
@@ -389,7 +373,7 @@ def write_ivfpq_index(spark: SparkSession, embeddings: DataFrame,
                                n_iters)
     _write_table(ivfpq_encode(embeddings, cents, books),
                  f"{out_dir}/ivfpq_codes", _IVFPQ_FAMILY.by["codes"])
-    _write_centroids(spark, cents, f"{out_dir}/ivfpq_coarse")
+    _write_codebooks(spark, [cents], f"{out_dir}/ivfpq_coarse")
     _write_codebooks(spark, books, f"{out_dir}/ivfpq_books")
     return cents, books
 
@@ -422,7 +406,7 @@ def load_ivfpq_index(spark: SparkSession,
     forward."""
     _IVFPQ_FAMILY.finish(spark, out_dir, as_reader=True)
     return (spark.read.parquet(f"{out_dir}/ivfpq_codes"),
-            _read_centroids(spark, f"{out_dir}/ivfpq_coarse"),
+            (_read_codebooks(spark, f"{out_dir}/ivfpq_coarse") or [[]])[0],
             _read_codebooks(spark, f"{out_dir}/ivfpq_books"))
 
 
@@ -546,15 +530,15 @@ def append_maxsim_index(spark: SparkSession, new_documents: DataFrame,
                         out_dir: str, chunk_tokens: int = 64,
                         overlap: int = 16) -> None:
     """Incremental MaxSim maintenance: chunk + embed + summarize ONLY the
-    docs the summary does not hold yet (the family guard checks
-    ``maxsim_components.cand``), stage their rows in the ``pos=`` layout
-    and publish by ``mark``: a replayed batch is a no-op, a crash before
-    ``_COMMIT`` changes nothing. The per-(doc, pos) extrema depend only
-    on a document's OWN chunks (and the hashing embedder is stateless),
-    so incremental == bulk row-identically (pinned by
-    ``test_maxsim_index_incremental_append_equals_bulk``). Cost is
-    O(batch); chunk/embed params must match the original build — the
-    same contract as the IVF codebook."""
+    docs the summary does not hold yet (the family guard checks ``cand``
+    in the ``pos=0`` partition, one row per doc), stage their rows in the
+    ``pos=`` layout and publish by ``mark``: a replayed batch is a no-op,
+    a crash before ``_COMMIT`` changes nothing. The per-(doc, pos)
+    extrema depend only on a document's OWN chunks (and the hashing
+    embedder is stateless), so incremental == bulk row-identically
+    (pinned by ``test_maxsim_index_incremental_append_equals_bulk``).
+    Cost is O(batch); chunk/embed params must match the original build —
+    the same contract as the IVF codebook."""
     from .embeddings import hashing_embedder
     from .operators.retrieval import maxsim_component_index
     from .operators.textops import chunk_documents
@@ -1021,9 +1005,11 @@ _IVFPQ_FAMILY = _StagedFamily(
     "ivfpq", appends={"codes": "ivfpq_codes"}, ledger=("ivfpq_codes", "vid"),
     by={"codes": ("centroid_id",)})
 
+# the MaxSim summary holds one row per (doc, pos) and every doc has a pos=0
+# row, so its pos=0 partition is the one-row-per-doc ledger
 _MAXSIM_FAMILY = _StagedFamily(
     "maxsim", appends={"components": "maxsim_components"},
-    ledger=("maxsim_components", "cand"), by={"components": ("pos",)})
+    ledger=("maxsim_components/pos=0", "cand"), by={"components": ("pos",)})
 
 _LSH_FAMILY = _StagedFamily(
     "lsh", appends={"buckets": "lsh_buckets", "docs": "lsh_docs"},

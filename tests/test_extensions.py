@@ -837,10 +837,12 @@ def test_ivfpq_recall_floor_and_beats_plain_pq_clustered(spark):
     assert r >= 0.7, f"IVF-PQ recall@10 regressed: {r}"
 
 
-def test_ivfpq_build_lists_is_map_only(spark):
-    """The two-level encode/reconstruct pass must stay shuffle-free: one
-    repartition (the _spread) and NO aggregate/join exchanges — every
-    codebook rides as a constant-folded literal."""
+@pytest.mark.parametrize("path", ["ivfpq_lists", "pq_decode_encode"])
+def test_ivfpq_build_lists_is_map_only(spark, path):
+    """The two reconstructions — IVF-PQ lists and PQ decode(encode) — must
+    stay shuffle-free: at most the _spread repartition and NO
+    aggregate/join exchanges — every codebook rides as a constant-folded
+    literal."""
     from hybrid_recommendation_system_using_vector_db_spark.operators import similarity
     from hybrid_recommendation_system_using_vector_db_spark.plans import formatted_plan
 
@@ -848,13 +850,17 @@ def test_ivfpq_build_lists_is_map_only(spark):
     emb = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
     cents, books = similarity.ivfpq_train(emb, n_centroids=4, m=2,
                                           pq_centroids=4, dim=4)
-    lists = similarity.ivfpq_build_lists(emb, cents, books)
-    plan = formatted_plan(lists)
+    if path == "ivfpq_lists":
+        out, id_col = similarity.ivfpq_build_lists(emb, cents, books), "vid"
+    else:
+        out, id_col = similarity.pq_decode(
+            similarity.pq_encode(emb, books), books), "vec_id"
+    plan = formatted_plan(out)
     assert "BroadcastExchange" not in plan, plan
     # the only exchange is the _spread round-robin repartition
     assert plan.count("Exchange") <= 2, plan
     assert "Join" not in plan, plan
-    got = {r.vid for r in lists.collect()}
+    got = {r[id_col] for r in out.collect()}
     assert got == set(range(64))
 
 

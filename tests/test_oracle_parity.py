@@ -60,6 +60,31 @@ def test_driver_surface_within_budget():
     assert not (set(QUERIES) & set(EXTRA_QUERIES)), "a key must live in exactly one surface"
 
 
+def test_bench_stdout_trim_keeps_every_driver_key():
+    """bench.py's stdout line must fit the driver's 2000-char tail and
+    never drop a driver-checked key: extras-only keys go first, fastest
+    first — even when every driver entry is faster than every extra."""
+    import json
+
+    import bench
+
+    driver = {f"driver_entry_{i:02d}" for i in range(50)}
+    timings = {name: 0.01 * (i + 1) for i, name in enumerate(sorted(driver))}
+    timings.update({f"extra_entry_{i:03d}": 1.0 + 0.1 * i for i in range(173)})
+    headline = {"metric": "headline_total_time", "value": 123.456,
+                "unit": "sec", "queries": timings, "sf": 0.1,
+                "contended": False, "suspects": [], "canary_ms_min": 812.3,
+                "canary_spread": 1.04, "steal_max": 0.002}
+    line = bench.stdout_line(headline, timings, driver)
+    assert len(line) <= 1940
+    got = json.loads(("x" * 5000 + "\n" + line)[-2000:].splitlines()[-1])
+    assert driver <= set(got["queries"])
+    assert got["queries_omitted"] == len(timings) - len(got["queries"]) > 0
+    dropped = set(timings) - set(got["queries"])
+    assert max(timings[n] for n in dropped) <= min(
+        timings[n] for n in set(got["queries"]) - driver)
+
+
 def test_parity_doc_counts_match_live_surface():
     """PARITY.md's SURFACE-COUNTS line must equal the live surface —
     doc drift on the headline coverage numbers fails CI (VERDICT r12

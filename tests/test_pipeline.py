@@ -1110,6 +1110,26 @@ def test_index_append_is_staged_and_exactly_once(spark, sf_dir, tmp_path,
     assert rows() == once
 
 
+def test_maxsim_append_on_empty_index_stages_nothing(spark, sf_dir, tmp_path):
+    """The MaxSim guard reads the pos=0 partition as its one-row-per-doc
+    ledger. An index written from no documents has no partition at all:
+    the append fails at the guard, before anything is staged, as it did
+    when the guard read the whole summary."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    from hybrid_recommendation_system_using_vector_db_spark import pipeline
+    from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    out = str(tmp_path / "maxsim")
+    pipeline.write_maxsim_index(spark, docs.limit(0), out)
+    with pytest.raises(AnalysisException):
+        pipeline.append_maxsim_index(spark, docs, out)
+    assert not os.path.exists(pipeline._MAXSIM_FAMILY.staging(out))
+
+
 def test_lsh_index_incremental_append_equals_bulk(spark, tmp_path):
     """write_lsh_index(A) + append_lsh_index(B) == a bulk build over
     A ∪ B (bucketing is a pure map of the stored hyperplane params, so

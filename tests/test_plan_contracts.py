@@ -90,18 +90,6 @@ def test_lsh_topk_multitable_scans_corpus_once(spark, sf_dir):
     assert "Generate" in plan, plan  # the posexplode of per-table buckets
 
 
-def test_ivf_assign_is_partial_aggregate_not_window(spark, sf_dir):
-    """Nearest-centroid assignment must be a partial+final max_by aggregate
-    (map-side combine → one shuffled row per vector), not a rank-1 window
-    shuffling n_centroids rows per vector."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 16)
-    out = similarity.ivf_assign(emb, cent)
-    plan = formatted_plan(out)
-    assert "partial_max_by" in plan or "HashAggregate" in plan, plan
-    assert "row_number" not in plan, plan
-
-
 def test_topk_limit_is_rank_filter_not_global_sort(spark, sf_dir):
     """E1 per-query top-k must be a windowed rank filter, no global Sort of
     the full pair stream above the window."""
