@@ -28,11 +28,13 @@ from perfbench.run import Contention, _psi_some_us  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the 2000-char stdout window less 60 chars of slack (the line ends the
+# stream, so line + newline <= 2000 is the hard bound)
+_LINE_BUDGET = 1940
 
 
-def stdout_line(headline: dict, timings: dict, driver: set,
-                budget: int = 1940) -> str:
-    """The compact headline line for stdout, at most ``budget`` chars.
+def stdout_line(headline: dict, timings: dict, driver: set) -> str:
+    """The compact headline line for stdout, at most ``_LINE_BUDGET`` chars.
 
     The driver tail-captures the last ~2000 chars of stdout and
     json-parses the final line; rounds 6-7 recorded parsed=null because
@@ -41,8 +43,7 @@ def stdout_line(headline: dict, timings: dict, driver: set,
     (not in ``driver``) fastest first — a ``queries()`` key, which the
     driver checks, is never dropped. ``queries_omitted`` counts the
     dropped keys; bench_full.json always has every entry at full
-    precision. 1940 = the 2000-char window less 60 chars of slack (the
-    line ends the stream, so line + newline <= 2000 is the hard bound).
+    precision.
     """
     headline = dict(headline)
     kept = dict(timings)
@@ -54,7 +55,7 @@ def stdout_line(headline: dict, timings: dict, driver: set,
         if len(kept) < len(timings):
             headline["queries_omitted"] = len(timings) - len(kept)
         line = json.dumps(headline, separators=(",", ":"))
-        if len(line) <= budget or not droppable:
+        if len(line) <= _LINE_BUDGET or not droppable:
             return line
         kept.pop(droppable.pop())
 

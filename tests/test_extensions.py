@@ -715,9 +715,12 @@ def test_text_and_dedup_ops_tolerate_null_and_empty_text(spark):
 
 
 def test_pq_train_fused_equals_per_subspace(spark, sf_dir):
-    """The fused one-pass-per-round PQ training must produce EXACTLY the
-    codebooks of the naive per-subspace kmeans loop (the math is
-    independent per subspace; fusing only changes scan count)."""
+    """Fusing subspaces must not change the result: pq_train with m=8
+    produces EXACTLY the codebooks of eight m=1 runs of the same Lloyd
+    loop (kmeans_centroids_local) on the 8-dim slices — the math is
+    independent per subspace; fusing only changes scan count. The
+    independent reference for the loop itself is the DuckDB k-means
+    chain of the cluster_centroids and pq_topk oracles."""
     from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
     from hybrid_recommendation_system_using_vector_db_spark.functions import vector as V
     from hybrid_recommendation_system_using_vector_db_spark.operators import similarity

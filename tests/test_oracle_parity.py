@@ -76,7 +76,7 @@ def test_bench_stdout_trim_keeps_every_driver_key():
                 "contended": False, "suspects": [], "canary_ms_min": 812.3,
                 "canary_spread": 1.04, "steal_max": 0.002}
     line = bench.stdout_line(headline, timings, driver)
-    assert len(line) <= 1940
+    assert len(line) <= bench._LINE_BUDGET
     got = json.loads(("x" * 5000 + "\n" + line)[-2000:].splitlines()[-1])
     assert driver <= set(got["queries"])
     assert got["queries_omitted"] == len(timings) - len(got["queries"]) > 0

@@ -4,6 +4,7 @@ then an EP2 hybrid query through the CLI path over the written tables."""
 import gzip
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from hybrid_recommendation_system_using_vector_db_spark.pipeline import build_index, load_index
@@ -1110,24 +1111,31 @@ def test_index_append_is_staged_and_exactly_once(spark, sf_dir, tmp_path,
     assert rows() == once
 
 
-def test_maxsim_append_on_empty_index_stages_nothing(spark, sf_dir, tmp_path):
-    """The MaxSim guard reads the pos=0 partition as its one-row-per-doc
-    ledger. An index written from no documents has no partition at all:
-    the append fails at the guard, before anything is staged, as it did
-    when the guard read the whole summary."""
+@pytest.mark.xfail(strict=True, raises=AnalysisException,
+                   reason="an index written from no documents has no pos=0 "
+                          "partition for the replay guard to read "
+                          "(FOUND in CHANGES.md)")
+def test_maxsim_append_grows_an_index_written_empty(spark, sf_dir, tmp_path):
+    """An index written from no documents grows by appends like any other.
+    Today the guard's read of the absent pos=0 partition fails; the check
+    in ``finally`` pins that it fails before anything is staged. Once the
+    read succeeds this test passes and the strict xfail flags it."""
     import os
-
-    from pyspark.errors import AnalysisException
 
     from hybrid_recommendation_system_using_vector_db_spark import pipeline
     from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "maxsim")
+    out, bulk = str(tmp_path / "maxsim"), str(tmp_path / "bulk")
     pipeline.write_maxsim_index(spark, docs.limit(0), out)
-    with pytest.raises(AnalysisException):
+    try:
         pipeline.append_maxsim_index(spark, docs, out)
-    assert not os.path.exists(pipeline._MAXSIM_FAMILY.staging(out))
+    finally:
+        assert not os.path.exists(pipeline._MAXSIM_FAMILY.staging(out))
+    pipeline.write_maxsim_index(spark, docs, bulk)
+    rows = lambda d: sorted(map(tuple, pipeline.load_maxsim_index(  # noqa: E731
+        spark, d).collect()))
+    assert rows(out) == rows(bulk)
 
 
 def test_lsh_index_incremental_append_equals_bulk(spark, tmp_path):
